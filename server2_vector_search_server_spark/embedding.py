@@ -7,9 +7,19 @@ batched on the best available torch device. Two engine realizations:
 1. :func:`hash_embedding_expr` — the canonical deterministic test embedder
    (FIXTURES.md): ``raw[i] = Σ_tokens sin(xxhash64(token) · (i+1))``, then
    L2-normalize. Built entirely from Spark SQL expressions (xxhash64 / sin /
-   aggregate), so it runs inside whole-stage codegen with zero Python cost and
-   is reproducible everywhere. Used by all oracle-adjacent tests because the
+   aggregate), so it evaluates JVM-side with no Python worker and is
+   reproducible everywhere. Used by all oracle-adjacent tests because the
    real model is hardware/version-dependent.
+
+   It is emitted as ONE SQL-text string, which ``F.expr`` parses JVM-side in
+   a single py4j round trip. Built as Column objects, every PySpark
+   higher-order-function lambda costs dozens of round trips at
+   DataFrame-build time: a per-dimension Column build of this embedder cost
+   ~7k round trips (~1.6 s) per query embed and per upload. The text hashes
+   each token once and binds the raw vector and its norm to lambda
+   variables, so each is evaluated once per row, with the same
+   per-dimension fold order as the spec: the vectors are bitwise identical
+   to the per-dimension form (pinned in tests/test_embedding.py).
 
 2. :func:`embed_with_model` — the production path: ``mapInPandas`` with a
    per-worker cached sentence-transformers model, Arrow-batched. The model
@@ -35,28 +45,36 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
-from server2_vector_search_server_spark.functions.vector import l2_normalize
+from server2_vector_search_server_spark.functions.vector import (
+    l2_normalize_sql,
+)
 
 
-def hash_embedding_expr(text: Column, dim: int = config.TEST_EMBEDDING_DIM) -> Column:
-    """Deterministic pseudo-embedding of whitespace-tokenized text as a pure
-    Spark expression; unit-L2-normalized like the reference's real vectors."""
-    tokens = F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-    raw = F.array(*[
-        F.aggregate(
-            F.transform(tokens,
-                        lambda t: F.sin(F.xxhash64(t) * F.lit(float(i + 1)))),
-            F.lit(0.0), lambda acc, x: acc + x)
-        for i in range(dim)
-    ])
-    return l2_normalize(raw)
+def hash_embedding_expr(text_sql: str,
+                        dim: int = config.TEST_EMBEDDING_DIM) -> Column:
+    """Deterministic pseudo-embedding of the whitespace-tokenized string
+    expression ``text_sql`` (SQL text, e.g. a column name); unit-L2-normalized
+    like the reference's real vectors.
+
+    ``transform`` hashes each token once; ``aggregate`` then left-folds the
+    hashes in token order into a ``dim``-array of running sums from 0.0, so
+    dimension ``i`` gets the same ``0.0 + sin(h₁·(i+1)) + sin(h₂·(i+1)) …``
+    sum a per-dimension fold would. Null text gives a ``dim``-array of nulls.
+    """
+    tokens = f"filter(split(trim({text_sql}), '\\\\s+'), t -> t != '')"
+    raw = (f"aggregate(transform({tokens}, t -> xxhash64(t)), "
+           f"array_repeat(0.0D, {int(dim)}), (acc, h) -> transform(acc, "
+           f"(a, i) -> a + sin(h * CAST(i + 1 AS DOUBLE))))")
+    return F.expr(f"CASE WHEN ({text_sql}) IS NULL "
+                  f"THEN array_repeat(CAST(NULL AS DOUBLE), {int(dim)}) "
+                  f"ELSE {l2_normalize_sql(raw)} END")
 
 
 def embed_hash(df: DataFrame, text_col: str = "content",
                out_col: str = "embedding",
                dim: int = config.TEST_EMBEDDING_DIM) -> DataFrame:
     """Attach the deterministic hash embedding — the test-mode J1."""
-    return df.withColumn(out_col, hash_embedding_expr(F.col(text_col), dim))
+    return df.withColumn(out_col, hash_embedding_expr(f"`{text_col}`", dim))
 
 
 def _load_model(model_name: str):

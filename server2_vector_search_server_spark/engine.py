@@ -37,6 +37,7 @@ summary collects (bounded by the number of uploaded files, not rows).
 
 from __future__ import annotations
 
+import logging
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +54,8 @@ from server2_vector_search_server_spark.operators.catalog import (
 )
 from server2_vector_search_server_spark.plans.ingest import ingest_documents
 from server2_vector_search_server_spark.sources.store import ChunkStore
+
+_log = logging.getLogger(__name__)
 
 
 def _join_keywords(keywords: str | Sequence[str]) -> str:
@@ -78,6 +81,9 @@ class DocumentSearchEngine:
         self.store = store_cls(spark, root)
         self.embed_dim = embed_dim
         self.embedder = embedder
+        # calls to search() that hit an engine error and returned the
+        # empty frame instead (the reference swallows them silently)
+        self.search_errors = 0
 
     # -- J2: query-side embedding (driver-side single encode) ---------------
     def embed_query(self, query: str) -> list[float]:
@@ -87,12 +93,15 @@ class DocumentSearchEngine:
         over a one-row DataFrame with the ingest call convention, so an
         engine built with a custom embedder searches with MATCHING vectors
         (a hash-embedded query against model-embedded chunks would silently
-        score garbage). The hash default keeps its pure-expression fast path.
-        The resulting vector is broadcast as a literal into the scoring plan.
+        score garbage). The hash default selects the one-string SQL
+        expression ``embed_hash`` stores with, over a literal: ~50 py4j
+        round trips and one job, and the bitwise-same vector as the stored
+        chunk of the same text. The returned vector is inlined as a literal
+        into the scoring plan.
         """
         if self.embedder is embed_hash:
-            row = (self.spark.range(1)
-                   .select(hash_embedding_expr(F.lit(query), self.embed_dim)
+            row = (self.spark.range(1).select(F.lit(query).alias("q"))
+                   .select(hash_embedding_expr("q", self.embed_dim)
                            .alias("v"))
                    .first())
             return [float(x) for x in row["v"]]
@@ -193,7 +202,9 @@ class DocumentSearchEngine:
     ) -> DataFrame:
         """Unscored top-k. Engine errors degrade to an EMPTY result instead
         of raising — the reference's vector_store swallows exceptions to []
-        (vector_store.py:152-154) so /search never 500s on store errors."""
+        (vector_store.py:152-154) so /search never 500s on store errors.
+        Unlike the reference, each swallowed error is logged once (with its
+        traceback) and counted in ``self.search_errors``."""
         try:
             out = self.search_score(keywords, k=k, filter=filter,
                                     collection_name=collection_name,
@@ -201,6 +212,8 @@ class DocumentSearchEngine:
             out.schema  # force analysis so bad filters surface here
             return out
         except Exception:
+            self.search_errors += 1
+            _log.exception("search degraded to an empty result")
             # derived from the store schema (minus the vector knn_topk
             # drops) so the degraded path can never drift structurally
             # from the success path

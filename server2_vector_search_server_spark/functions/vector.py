@@ -97,10 +97,31 @@ def l2_normalize(a: Column) -> Column:
 
     Guards the zero vector (returns it unchanged) — the reference would have
     produced NaNs; we pick the safer semantic and unit-test it.
+
+    ``a`` and its norm are each bound to a lambda variable of a one-element
+    ``transform``, so both are evaluated once per row. Referencing ``n``
+    inside the per-element lambda directly would re-evaluate the whole norm
+    for every element: O(dim²) per row, and the array expression ``a``
+    itself once per element on top.
     """
-    n = l2_norm(a)
-    return F.when(n == 0.0, F.transform(a, lambda x: _d(x))) \
-            .otherwise(F.transform(a, lambda x: _d(x) / n))
+    def by_norm(r: Column) -> Column:
+        return F.transform(F.array(l2_norm(r)), lambda n: F.when(
+            n == 0.0, F.transform(r, lambda x: _d(x))
+        ).otherwise(F.transform(r, lambda x: _d(x) / n)))[0]
+
+    return F.transform(F.array(a), by_norm)[0]
+
+
+def l2_normalize_sql(a_sql: str) -> str:
+    """SQL-text twin of :func:`l2_normalize`: the same norm-once binding,
+    cast, fold order and zero-vector guard in one ``F.expr`` string (see
+    :func:`squared_l2_sql` for why SQL text; bitwise identity is asserted
+    in tests/test_knn.py)."""
+    return (f"transform(array({a_sql}), r -> transform(array(sqrt("
+            f"aggregate(r, 0.0D, (s, x) -> s + "
+            f"CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), n -> "
+            f"CASE WHEN n = 0.0D THEN transform(r, x -> CAST(x AS DOUBLE)) "
+            f"ELSE transform(r, x -> CAST(x AS DOUBLE) / n) END)[0])[0]")
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:

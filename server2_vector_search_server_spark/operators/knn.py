@@ -35,7 +35,10 @@ from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
 from server2_vector_search_server_spark.functions.filters import apply_where
-from server2_vector_search_server_spark.functions.vector import similarity_score
+from server2_vector_search_server_spark.functions.vector import (
+    similarity_score,
+    squared_l2_sql,
+)
 
 
 def vector_literal(vec: Sequence[float]) -> Column:
@@ -52,8 +55,13 @@ def vector_literal(vec: Sequence[float]) -> Column:
     a Python float is the shortest round-tripping decimal and Spark's
     ``D``-suffixed literal parses it back to the identical double, so the
     constant array is value-identical to the per-lit form."""
-    body = ",".join(f"{float(x)!r}D" for x in vec)
-    return F.expr(f"array({body})")
+    return F.expr(vector_literal_sql(vec))
+
+
+def vector_literal_sql(vec: Sequence[float]) -> str:
+    """SQL text of :func:`vector_literal`, for embedding in larger
+    one-string expressions."""
+    return "array(" + ",".join(f"{float(x)!r}D" for x in vec) + ")"
 
 
 def vectors_literal_sql(vecs: Sequence[Sequence[float]]) -> str:
@@ -61,9 +69,7 @@ def vectors_literal_sql(vecs: Sequence[Sequence[float]]) -> str:
     the nested-array analog of :func:`vector_literal`, emitted as ONE
     string so a K-codeword book costs one ``F.expr`` parse instead of K+1
     py4j round trips (r11; same exact-repr round-trip argument)."""
-    body = ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in v) + ")" for v in vecs)
-    return f"array({body})"
+    return "array(" + ",".join(vector_literal_sql(v) for v in vecs) + ")"
 
 
 def vectors_literal(vecs: Sequence[Sequence[float]]) -> Column:
@@ -107,9 +113,12 @@ def knn_topk(
         scored = _arrow_scored_candidates(filtered, query_vec, k,
                                           vec_col=vec_col)
     elif impl == "jvm":
-        scored = filtered.withColumn(
-            "score",
-            similarity_score(vector_literal(query_vec), F.col(vec_col))
+        # one SQL string: similarity_score's Column form builds three
+        # PySpark lambdas, ~170 py4j round trips per /search_score build;
+        # the text is the same tree, so the score is bitwise the same
+        scored = filtered.withColumn("score", F.expr(
+            "1.0D - " + squared_l2_sql(vector_literal_sql(query_vec),
+                                       f"`{vec_col}`"))
         ).drop(vec_col)
     else:
         raise ValueError(f"unknown impl {impl!r}")

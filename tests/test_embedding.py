@@ -16,6 +16,44 @@ from server2_vector_search_server_spark.embedding import (
 from server2_vector_search_server_spark.functions.vector import l2_norm
 
 
+def _d(c):
+    return c.cast("double")
+
+
+def frozen_hash_embedding(text, dim):
+    """The per-dimension Column form the library shipped before the
+    one-string SQL form: the spec every stored vector and oracle was built
+    against. Kept here, frozen, so the library's form is pinned to it
+    bit-for-bit; do not edit."""
+    tokens = F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+    raw = F.array(*[
+        F.aggregate(
+            F.transform(tokens,
+                        lambda t: F.sin(F.xxhash64(t) * F.lit(float(i + 1)))),
+            F.lit(0.0), lambda acc, x: acc + x)
+        for i in range(dim)
+    ])
+    n = F.sqrt(F.aggregate(F.transform(raw, lambda x: _d(x) * _d(x)),
+                           F.lit(0.0), lambda acc, x: acc + x))
+    return F.when(n == 0.0, F.transform(raw, lambda x: _d(x))) \
+        .otherwise(F.transform(raw, lambda x: _d(x) / n))
+
+
+PIN_TEXTS = [
+    "spark vector search",
+    "Alpha document about spark. It has two sentences.",
+    "",
+    "   ",
+    "\t\n ",
+    "안녕하세요 벡터 검색 엔진",
+    "naïve café — déjà vu",
+    "tab\tseparated\nnew  line\r\nwords",
+    "repeat repeat repeat",
+    " ".join(f"token{i % 37}" for i in range(250)),
+    None,
+]
+
+
 @pytest.fixture(scope="module")
 def texts(spark):
     return spark.createDataFrame(
@@ -41,6 +79,79 @@ def test_hash_embedding_deterministic_and_normalized(texts):
 def test_hash_embedding_empty_text_is_zero_vector(texts):
     row = embed_hash(texts, dim=8).filter(F.col("id") == 4).first()
     assert all(v == 0.0 for v in row["embedding"])   # guarded normalize
+
+
+@pytest.mark.parametrize("dim", [8, 16, 64])
+def test_hash_embedding_bitwise_matches_frozen_spec(spark, dim):
+    """The one-string SQL form must yield bitwise the same doubles as the
+    frozen per-dimension spec: empty, whitespace-only, non-ASCII,
+    tab/newline-separated, >200-token and null texts included."""
+    import struct
+
+    df = spark.createDataFrame(list(enumerate(PIN_TEXTS)),
+                               "id long, content string")
+    rows = embed_hash(df, dim=dim).select(
+        "id",
+        frozen_hash_embedding(F.col("content"), dim).alias("spec"),
+        hash_embedding_expr("content", dim).alias("lib"),
+        F.col("embedding").alias("ingest"),
+    ).collect()
+    assert len(rows) == len(PIN_TEXTS)
+
+    def bits(vec):
+        return [None if x is None else struct.pack("<d", x) for x in vec]
+
+    for r in rows:
+        assert len(r["spec"]) == dim, PIN_TEXTS[r["id"]]
+        assert bits(r["lib"]) == bits(r["spec"]), PIN_TEXTS[r["id"]]
+        assert bits(r["ingest"]) == bits(r["spec"]), PIN_TEXTS[r["id"]]
+
+
+def test_query_embed_and_search_build_py4j_budget(spark, tmp_path):
+    """Plan-build cost guard: embedding one query and building the
+    /search_score plan each stay within a fixed budget of py4j round
+    trips, so per-lambda Column building cannot creep back into the
+    serving path (the per-dimension embedding cost ~7k round trips)."""
+    import threading
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+
+    from server2_vector_search_server_spark.engine import (
+        DocumentSearchEngine,
+    )
+    from server2_vector_search_server_spark.plans.ingest import search_store
+
+    eng = DocumentSearchEngine(spark, str(tmp_path / "chunks"))
+    text = "Budget test text. Two sentences."
+    eng.upload_documents([("a.txt", text)])
+    calls = 0
+    orig = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        # this thread only: py4j's finalizer thread sends the deletes of
+        # garbage-collected JVM references whenever GC happens to run
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return orig(self, command)
+
+    def count(fn):
+        nonlocal calls
+        fn()                       # warm-up: one-time JVM class lookups
+        calls = 0
+        with mock.patch.object(ClientServerConnection, "send_command",
+                               counting):
+            fn()
+        return calls
+
+    qvec = eng.embed_query(text)
+    assert 0 < count(lambda: eng.embed_query(text)) <= 100
+    assert 0 < count(lambda: search_store(eng.store, qvec, k=5)) <= 150
+    # the budgeted build is the real one: the chunk matches itself
+    hits = search_store(eng.store, qvec, k=5).collect()
+    assert [h["content"] for h in hits] == [text]
+    assert hits[0]["score"] == 1.0
 
 
 def test_model_path_plumbing_with_fake_encoder(texts):

@@ -104,6 +104,33 @@ def test_search_filter_and_error_degradation(engine):
         engine.search_score("x", filter={"doc_name": {"$bogus": 1}})
 
 
+def test_search_error_is_logged_once_and_counted(engine, caplog):
+    """A /search error still degrades to the empty frame, but is logged
+    once with its traceback and counted."""
+    import logging
+
+    from server2_vector_search_server_spark.sources.store import (
+        CHUNKS_SCHEMA,
+    )
+
+    logger = "server2_vector_search_server_spark.engine"
+    assert engine.search_errors == 0
+    with caplog.at_level(logging.WARNING, logger=logger):
+        out = engine.search("x", filter={"doc_name": {"$bogus": 1}})
+    assert out.count() == 0
+    assert out.columns == [f.name for f in CHUNKS_SCHEMA.fields
+                           if f.name != "embedding"]
+    records = [r for r in caplog.records if r.name == logger]
+    assert len(records) == 1 and records[0].exc_info is not None
+    assert engine.search_errors == 1
+    # a search that succeeds neither logs nor counts
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=logger):
+        assert engine.search("spark", k=1).count() == 1
+    assert not [r for r in caplog.records if r.name == logger]
+    assert engine.search_errors == 1
+
+
 def test_delete_cascades_globally(engine):
     doc_id = engine.list_documents("collection_a") \
         .filter("doc_name = 'alpha.txt'").first()["doc_id"]
@@ -147,8 +174,6 @@ def test_custom_embedder_searches_with_matching_vectors(spark, tmp_path):
     through that same embedder. Regression: embed_query hardcoded the hash
     expression, so custom-embedded chunks were scored against hash-embedded
     queries — an exact-text query silently missed its own document."""
-    from pyspark.sql import functions as F
-
     from server2_vector_search_server_spark.embedding import (
         hash_embedding_expr,
     )
@@ -158,7 +183,7 @@ def test_custom_embedder_searches_with_matching_vectors(spark, tmp_path):
         # deterministic but DIFFERENT from embed_hash: embeds the reversed
         # text, so a hash-embedded query cannot match by accident
         return df.withColumn(
-            out_col, hash_embedding_expr(F.reverse(F.col(text_col)), dim))
+            out_col, hash_embedding_expr(f"reverse(`{text_col}`)", dim))
 
     eng = DocumentSearchEngine(spark, str(tmp_path / "chunks"),
                                embedder=reversed_hash_embedder)

@@ -274,3 +274,46 @@ def test_squared_l2_sql_and_py_twins_bitwise(spark):
     got = df.select(vectors_literal([a, b]).alias("v")).first()["v"]
     assert [bits(x) for x in got[0]] == [bits(x) for x in a]
     assert [bits(x) for x in got[1]] == [bits(x) for x in b]
+
+
+def test_l2_normalize_norm_once_forms_bitwise(spark):
+    """l2_normalize binds its input and norm to lambda variables so each is
+    evaluated once per row; it and its SQL-text twin must stay bitwise
+    identical to the per-element-norm form they replaced, zero-vector
+    guard, float input and null elements included."""
+    import struct
+
+    from server2_vector_search_server_spark.functions.vector import (
+        l2_norm, l2_normalize, l2_normalize_sql,
+    )
+
+    def old_form(a):
+        n = l2_norm(a)
+        return F.when(n == 0.0, F.transform(a, lambda x: x.cast("double"))) \
+            .otherwise(F.transform(a, lambda x: x.cast("double") / n))
+
+    vecs = [[0.1, -1.5e-7, 1.0 / 3.0, -0.0, 5e-324, 2.0, -1e-200, 3.0],
+            [0.0, 0.0, -0.0], [3.0, 4.0], [1e300, 1e300], [1.0, None],
+            [], None]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "id int, a array<double>")
+    df = df.withColumn("f", F.col("a").cast("array<float>"))
+    rows = df.select(
+        "id",
+        *[e.alias(f"{name}_{c}")
+          for c in ("a", "f")
+          for name, e in (("old", old_form(F.col(c))),
+                          ("col", l2_normalize(F.col(c))),
+                          ("sql", F.expr(l2_normalize_sql(c))))],
+    ).collect()
+
+    def bits(v):
+        return None if v is None else [
+            None if x is None else struct.pack("<d", x) for x in v]
+
+    for r in rows:
+        for c in ("a", "f"):
+            assert bits(r[f"col_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
+            assert bits(r[f"sql_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
+    zero = next(r for r in rows if r["id"] == 1)
+    assert zero["col_a"] == [0.0, 0.0, -0.0]        # guarded, not NaN

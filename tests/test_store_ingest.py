@@ -153,8 +153,8 @@ def test_search_over_ingested_chunks(spark, store):
     some = store.read(None).select("content").first()[0]
     from server2_vector_search_server_spark.embedding import hash_embedding_expr
 
-    qvec = spark.range(1).select(
-        hash_embedding_expr(F.lit(some))).first()[0]
+    qvec = spark.range(1).select(F.lit(some).alias("q")).select(
+        hash_embedding_expr("q")).first()[0]
     hits = search_store(store, qvec, k=3).collect()
     assert hits, "self-match must survive the 0.1 threshold"
     assert hits[0]["content"] == some
