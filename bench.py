@@ -199,6 +199,46 @@ def _load_baseline() -> tuple[str, dict[str, float]] | None:
     return None
 
 
+def time_pillars(spark, registry, names: list[str], sf_dir: str,
+                 repeats: int) -> dict[str, float]:
+    """Median wall per pillar, each run built and written to the noop sink.
+
+    Repeats are INTERLEAVED across pillars (VERDICT r06 item 1): the old
+    per-pillar consecutive repeats meant one loaded minute of ambient
+    co-tenant CPU landed entirely on whichever pillar was running and
+    inflated all three of its samples — search_score_topk's 2.693× artifact
+    flag in BENCH_r06.json was exactly that (its quiet value was 0.509 s).
+    Running the WHOLE pillar list ``repeats`` times and taking the
+    per-pillar median ACROSS passes spreads any loaded minute over many
+    pillars' single samples, where the cross-pass median absorbs it. Each
+    pass also rotates its starting pillar so fixed per-position costs
+    (e.g. post-warmup first-query residue) never pin to one pillar. Names
+    missing from ``registry`` are skipped.
+    """
+    pillars = [(name, registry.get(name)) for name in names]
+    pillars = [(n, rq) for n, rq in pillars if rq is not None]
+    samples: dict[str, list[float]] = {n: [] for n, _ in pillars}
+    for p in range(repeats):
+        rot = (p * len(pillars)) // max(repeats, 1)
+        order = pillars[rot:] + pillars[:rot]
+        for name, rq in order:
+            t0 = time.perf_counter()
+            df = rq.fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            samples[name].append(time.perf_counter() - t0)
+            # queries that persist() intermediates (minhash, cosine) would
+            # pile up cache entries across repeats — each repeat builds fresh
+            # DataFrames, so dropping the cache never removes reused data
+            spark.catalog.clearCache()
+    timings: dict[str, float] = {}
+    for name, _ in pillars:
+        runs = samples[name]
+        timings[name] = round(sorted(runs)[len(runs) // 2], 3)
+        print(f"  {name}: {timings[name]}s (passes: "
+              f"{[round(r, 2) for r in runs]})", file=sys.stderr)
+    return timings
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -227,38 +267,8 @@ def main() -> None:
     )
     shipment_silver(spark, SF_DIR)
 
-    # Median of 3 repeats per query, INTERLEAVED across pillars (VERDICT r06
-    # item 1): the old per-pillar consecutive repeats meant one loaded minute
-    # of ambient co-tenant CPU landed entirely on whichever pillar was running
-    # and inflated all three of its samples — search_score_topk's 2.693×
-    # artifact flag in BENCH_r06.json was exactly that (its quiet value was
-    # 0.509 s). Running the WHOLE pillar list `repeats` times and taking the
-    # per-pillar median ACROSS passes spreads any loaded minute over many
-    # pillars' single samples, where the cross-pass median absorbs it. Each
-    # pass also rotates its starting pillar so fixed per-position costs
-    # (e.g. post-warmup first-query residue) never pin to one pillar.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    pillars = [(name, registry.get(name)) for name in HEADLINE]
-    pillars = [(n, rq) for n, rq in pillars if rq is not None]
-    samples: dict[str, list[float]] = {n: [] for n, _ in pillars}
-    for p in range(repeats):
-        rot = (p * len(pillars)) // max(repeats, 1)
-        order = pillars[rot:] + pillars[:rot]
-        for name, rq in order:
-            t0 = time.perf_counter()
-            df = rq.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-            # queries that persist() intermediates (minhash, cosine) would
-            # pile up cache entries across repeats — each repeat builds fresh
-            # DataFrames, so dropping the cache never removes reused data
-            spark.catalog.clearCache()
-    timings: dict[str, float] = {}
-    for name, _ in pillars:
-        runs = samples[name]
-        timings[name] = round(sorted(runs)[len(runs) // 2], 3)
-        print(f"  {name}: {timings[name]}s (passes: "
-              f"{[round(r, 2) for r in runs]})", file=sys.stderr)
+    timings = time_pillars(spark, registry, HEADLINE, SF_DIR, repeats)
 
     sf = float(os.path.basename(SF_DIR.rstrip("/")).removeprefix("sf") or 0)
     out = {

@@ -9,15 +9,16 @@ each run amplifies $SPARK_GRAFT_SF_DIR ``K``× into a fresh temp dir (key
 columns shifted by ``i*OFFSET`` per copy, consistently across tables so
 join semantics hold; dims copied verbatim), then times the 15 heaviest
 UNBOUNDED pillars — the scan/shuffle-bound ones whose work actually grows
-with input — with bench.py's exact methodology (noop sink, interleaved
-passes, rotation, median, clearCache, calibration fields).
+with input — with bench.py's own pass loop (``bench.time_pillars``: noop
+sink, interleaved passes, rotation, median, clearCache) and calibration
+(``bench._cpu_reference_sec``).
 
 The amplified data is rebuilt from the parquet inputs on EVERY invocation
 (inside this run's temp dir, outside the timed region) — nothing persists
 across runs, no result caching. Output: one JSON line + BENCH_XL_FULL.json.
 
-Usage: PYTHONPATH=/root/repo python scripts/bench_xl.py
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
+Usage: PYTHONPATH=. python scripts/bench_xl.py
+Env: SPARK_GRAFT_SF_DIR (default as in bench.py), SPARK_GRAFT_CPUS,
      SPARK_GRAFT_BENCH_REPEATS (default 3), SPARK_GRAFT_XL_K (default 8).
 """
 
@@ -29,7 +30,8 @@ import sys
 import tempfile
 import time
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import SF_DIR, _cpu_reference_sec, time_pillars
+
 K = int(os.environ.get("SPARK_GRAFT_XL_K", "8"))
 OFFSET = 10 ** 12
 
@@ -90,21 +92,6 @@ def _amplify(spark, out_dir: str) -> None:
             os.path.join(out_dir, f"{name}.parquet"))
 
 
-def _cpu_reference_sec() -> float:
-    import hashlib
-
-    blob = b"\x5a" * (1 << 20)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        h = hashlib.sha256()
-        for _ in range(64):
-            h.update(blob)
-        h.digest()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
 def main() -> None:
     from server2_vector_search_server_spark.plans import load_registry
     from server2_vector_search_server_spark.session import get_spark
@@ -126,25 +113,7 @@ def main() -> None:
     shipment_silver(spark, xl_dir)
 
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    pillars = [(n, registry.get(n)) for n in XL_PILLARS]
-    pillars = [(n, rq) for n, rq in pillars if rq is not None]
-    samples: dict[str, list[float]] = {n: [] for n, _ in pillars}
-    for p in range(repeats):
-        rot = (p * len(pillars)) // max(repeats, 1)
-        order = pillars[rot:] + pillars[:rot]
-        for name, rq in order:
-            spark.sparkContext.setJobDescription(f"xl {name} p{p}")
-            t0 = time.perf_counter()
-            df = rq.fn(spark, xl_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-    timings = {}
-    for name, _ in pillars:
-        runs = samples[name]
-        timings[name] = round(sorted(runs)[len(runs) // 2], 3)
-        print(f"  {name}: {timings[name]}s "
-              f"(passes: {[round(r, 2) for r in runs]})", file=sys.stderr)
+    timings = time_pillars(spark, registry, XL_PILLARS, xl_dir, repeats)
     out = {
         "metric": "xl_tier_total_wall",
         "value": round(sum(timings.values()), 3),

@@ -1,6 +1,6 @@
 """Dump exact query results as JSON for cross-checkout identity checks.
 
-Usage: PYTHONPATH=/root/repo python scripts/r11_dump_rows.py OUT.json name...
+Usage: PYTHONPATH=. python scripts/dump_rows.py OUT.json name...
 Rows are collected, converted with repr-exact floats, sorted, and written
 to OUT.json — run once on the old checkout and once on the new, then diff.
 """
@@ -11,7 +11,12 @@ import json
 import os
 import sys
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+from bench import SF_DIR as BENCH_SF_DIR
+
+# identity dumps default to the correctness scale, the sf0.01 tables that
+# sit next to the bench's sf0.1 ones
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(
+    os.path.dirname(BENCH_SF_DIR.rstrip("/")), "sf0.01"))
 
 
 def _conv(v):
@@ -30,7 +35,7 @@ def main() -> None:
     from server2_vector_search_server_spark.plans import load_registry
     from server2_vector_search_server_spark.session import get_spark
 
-    spark = get_spark("r11_identity")
+    spark = get_spark("dump_rows")
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_registry()
     out = {}

@@ -44,10 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
-from server2_vector_search_server_spark.embedding import (
-    embed_hash,
-    hash_embedding_expr,
-)
+from server2_vector_search_server_spark.embedding import embed_hash
 from server2_vector_search_server_spark.operators.catalog import (
     group_documents,
     list_documents as _list_documents,
@@ -93,19 +90,13 @@ class DocumentSearchEngine:
         over a one-row DataFrame with the ingest call convention, so an
         engine built with a custom embedder searches with MATCHING vectors
         (a hash-embedded query against model-embedded chunks would silently
-        score garbage). The hash default selects the one-string SQL
-        expression ``embed_hash`` stores with, over a literal: ~50 py4j
-        round trips and one job, and the bitwise-same vector as the stored
-        chunk of the same text. The returned vector is inlined as a literal
-        into the scoring plan.
+        score garbage). The query is one literal over ``spark.range(1)``, so
+        the hash default stays the one-string SQL expression ``embed_hash``
+        stores with: ~45 py4j round trips and one job, and the bitwise-same
+        vector as the stored chunk of the same text. The returned vector is
+        inlined as a literal into the scoring plan.
         """
-        if self.embedder is embed_hash:
-            row = (self.spark.range(1).select(F.lit(query).alias("q"))
-                   .select(hash_embedding_expr("q", self.embed_dim)
-                           .alias("v"))
-                   .first())
-            return [float(x) for x in row["v"]]
-        one = self.spark.createDataFrame([(query,)], "content string")
+        one = self.spark.range(1).select(F.lit(query).alias("content"))
         row = (self.embedder(one, text_col="content", out_col="embedding",
                              dim=self.embed_dim)
                .select("embedding").first())

@@ -212,29 +212,19 @@ def knn_join(
                                      query_id_col=query_id_col,
                                      query_vec_col=query_vec_col,
                                      corpus_vec_col=corpus_vec_col)
-    elif impl != "jvm":
-        raise ValueError(f"unknown impl {impl!r}")
+    elif impl == "jvm":
+        q = F.broadcast(queries.select(
+            F.col(query_id_col).alias("__qid"),
+            F.col(query_vec_col).alias("__qvec")))
+        scored = (corpus.crossJoin(q)
+                  .withColumn("score", similarity_score(
+                      F.col("__qvec"), F.col(corpus_vec_col)))
+                  .drop(corpus_vec_col, "__qvec"))
     else:
-        scored = None
-    if scored is not None:
-        if score_decimals is not None:
-            scored = scored.withColumn(
-                "score", F.round(F.col("score"), score_decimals))
-        if threshold is not None:
-            scored = scored.filter(F.col("score") >= F.lit(float(threshold)))
-        w = Window.partitionBy("__qid").orderBy(
-            F.col("score").desc(), F.col(corpus_id_col).asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumnRenamed("__qid", query_id_col)
-        )
-    q = F.broadcast(queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")))
-    scored = corpus.crossJoin(q).withColumn(
-        "score", similarity_score(F.col("__qvec"), F.col(corpus_vec_col)))
+        raise ValueError(f"unknown impl {impl!r}")
     if score_decimals is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), score_decimals))
+        scored = scored.withColumn(
+            "score", F.round(F.col("score"), score_decimals))
     if threshold is not None:
         scored = scored.filter(F.col("score") >= F.lit(float(threshold)))
     w = Window.partitionBy("__qid").orderBy(
@@ -242,7 +232,6 @@ def knn_join(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .drop(corpus_vec_col, "__qvec")
         .withColumnRenamed("__qid", query_id_col)
     )
 

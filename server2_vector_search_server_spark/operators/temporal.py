@@ -110,9 +110,10 @@ def ewma_by_key(events: DataFrame, *, key_col: str = "user_id",
     ``aggregate`` fold over the per-key ordered value array.
 
     Until round 10 this ran as a grouped-map ``applyInPandas`` fold; the
-    guide-§4 A/B (scripts/r10_ab1.py) measured the Python boundary at 84%
-    of the pillar wall (2.89 s → 0.46 s at sf0.1, identical results), so
-    the fold now stays in the JVM: ``collect_list(struct(ts, order, val))``
+    round-10 A/B (OPTIMIZATION_r10.md, "Inherited state" and "Results")
+    measured the Python boundary at 84% of the pillar wall (2.89 s →
+    0.46 s at sf0.1, identical results), so the fold now stays in the
+    JVM: ``collect_list(struct(ts, order, val))``
     under the same single entity-key shuffle, ``array_sort`` for the total
     (ts, order_col) order, and ``F.aggregate`` seeded with the first value
     — the IDENTICAL float operation sequence (α·x then (1−α)·acc then add,

@@ -234,10 +234,6 @@ def _driver_record() -> tuple[set[str], set[str], int]:
     return seen, red, n_artifacts
 
 
-def _driver_sampled_so_far() -> set[str]:
-    return _driver_record()[0]
-
-
 def _driver_head(base_order: list[str], seen: set[str],
                  red: set[str] = frozenset(), phase: int = 0) -> list[str]:
     known = set(base_order)

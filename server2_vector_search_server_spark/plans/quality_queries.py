@@ -499,7 +499,8 @@ def dedup_shingle_containment(spark: SparkSession,
     knob, not a correctness approximation, and the oracle replicates it
     verbatim. At 100 TB the same two stages hold: band the rare-shingle
     join, keep the verify join pair-bounded."""
-    # NOT spread: A/B'd r10 (scripts/r10_ab5.py) — the candidate/verify
+    # NOT spread: A/B'd r10 (OPTIMIZATION_r10.md, text_contamination_overlap,
+    # "Deliberately NOT spread") — the candidate/verify
     # joins below the checkpoint dominate this pillar, not the shingling
     # map; spreading the 200-doc slice was +16%
     d = (tbl(spark, sf_dir, "documents")

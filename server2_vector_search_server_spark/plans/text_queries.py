@@ -606,7 +606,8 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     word length, symbol/bullet/ellipsis fractions, alphabetic-word fraction,
     stopword gate, and the conjunctive keep verdict — in ONE narrow
     projection (operators/text_analysis.gopher_rule_columns)."""
-    # NOT spread: A/B'd r10 (scripts/r10_ab5.py) — the 200-doc rule family
+    # NOT spread: A/B'd r10 (OPTIMIZATION_r10.md, text_contamination_overlap,
+    # "Deliberately NOT spread") — the 200-doc rule family
     # costs ~0.6 s on one core; the spread exchange + extra stage was +30%
     docs = tbl(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return (docs.select("doc_id", *ta.gopher_rule_columns(F.col("text")))

@@ -41,9 +41,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from server2_vector_search_server_spark.sources.store import CHUNKS_SCHEMA
-
-_COLS = [f.name for f in CHUNKS_SCHEMA.fields]
+from server2_vector_search_server_spark.sources.store import (
+    CHUNKS_COLS as _COLS,
+    CHUNKS_SCHEMA,
+)
 
 
 class SnapshotChunkStore:

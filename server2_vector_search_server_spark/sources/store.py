@@ -41,6 +41,7 @@ CHUNKS_SCHEMA = T.StructType([
     T.StructField("embedding", T.ArrayType(T.FloatType()), True),
     T.StructField("collection", T.StringType(), False),   # partition column
 ])
+CHUNKS_COLS = [f.name for f in CHUNKS_SCHEMA.fields]
 
 
 class ChunkStore:
@@ -49,6 +50,15 @@ class ChunkStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+
+    def _overwrite_dynamic(self, rows: DataFrame) -> None:
+        """Replace only the ``collection`` partitions ``rows`` writes into
+        (dynamic partition overwrite, set on this write alone so the
+        session's own mode is never touched)."""
+        (rows.select(*CHUNKS_COLS)
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("collection").parquet(self.root))
 
     def _overwrite_partitions(self, out: DataFrame,
                               affected: list[str]) -> None:
@@ -61,20 +71,9 @@ class ChunkStore:
         it after the overwrite would see the mutated table."""
         import shutil
 
-        cols = [f.name for f in CHUNKS_SCHEMA.fields]
         still_present = {r["collection"] for r in
                          out.select("collection").distinct().collect()}
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                            "dynamic")
-        try:
-            (out.select(*cols)
-             .write.mode("overwrite").partitionBy("collection")
-             .parquet(self.root))
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                                prev)
+        self._overwrite_dynamic(out)
         for part in set(affected) - still_present:
             # local-path fallback for "drop empty partition" — on Delta/
             # Iceberg this is the metadata delete the commit already did
@@ -85,8 +84,7 @@ class ChunkStore:
     def append(self, chunks: DataFrame) -> None:
         """Append chunk rows. ``collection`` must be present; the master
         union needs no second write (single-table design)."""
-        cols = [f.name for f in CHUNKS_SCHEMA.fields]
-        (chunks.select(*cols)
+        (chunks.select(*CHUNKS_COLS)
          .write.mode("append").partitionBy("collection").parquet(self.root))
 
     def upsert(self, chunks: DataFrame) -> None:
@@ -104,11 +102,10 @@ class ChunkStore:
         rewritten, so cost tracks the batch's partition footprint, not the
         table.
         """
-        cols = [f.name for f in CHUNKS_SCHEMA.fields]
         # eager checkpoint: the overwrite below re-executes this plan; if its
         # lineage reads self.root (or anything the write invalidates), the
         # recacheByPath trap re-runs it against the mutated store.
-        incoming = chunks.select(*cols).localCheckpoint(eager=True)
+        incoming = chunks.select(*CHUNKS_COLS).localCheckpoint(eager=True)
         if self.is_empty():
             (incoming.write.mode("append").partitionBy("collection")
              .parquet(self.root))
@@ -123,8 +120,8 @@ class ChunkStore:
         parts = sorted(hit_parts)
         survivors = (table.filter(F.col("collection").isin(parts))
                      .join(F.broadcast(ids), "doc_id", "left_anti"))
-        out = (survivors.select(*cols)
-               .unionByName(incoming.select(*cols)))
+        out = (survivors.select(*CHUNKS_COLS)
+               .unionByName(incoming.select(*CHUNKS_COLS)))
         self._overwrite_partitions(out, parts)
 
     # -- A7: scans ----------------------------------------------------------
@@ -185,21 +182,9 @@ class ChunkStore:
         table = self.read(None)
         n = table.count()
         n_files = max(1, n // rows_per_file)
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                   "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                            "dynamic")
-        try:
-            cols = [f.name for f in CHUNKS_SCHEMA.fields]
-            # round-robin repartition: each task writes at most one file per
-            # collection it holds, so total files ≤ n_files × n_collections
-            (table.select(*cols)
-             .repartition(n_files)
-             .write.mode("overwrite").partitionBy("collection")
-             .parquet(self.root))
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                                prev)
+        # round-robin repartition: each task writes at most one file per
+        # collection it holds, so total files ≤ n_files × n_collections
+        self._overwrite_dynamic(table.repartition(n_files))
 
     # -- D1: catalog ---------------------------------------------------------
     def list_documents(self, collection: str | None = None) -> DataFrame:

@@ -37,7 +37,6 @@ that *file* (never the job), truncated payloads are surfaced with
 
 from __future__ import annotations
 
-import hashlib
 import io
 import zlib
 from collections.abc import Iterator
@@ -362,7 +361,3 @@ def http_response_bytes(status: int, ctype: str, body: bytes, *,
         head.append(b"Content-Length: " + str(len(body)).encode())
         body_wire = body
     return b"\r\n".join(head) + b"\r\n\r\n" + body_wire
-
-
-def payload_digest(body: bytes) -> str:
-    return hashlib.md5(body).hexdigest()

@@ -1,0 +1,56 @@
+"""Script health: every ``scripts/*.py`` compiles, the generic tools import
+without side effects, and ``bench_xl`` reuses ``bench.py``'s loop instead of
+keeping a copy. No Spark session is started."""
+
+from __future__ import annotations
+
+import glob
+import importlib.util
+import os
+import py_compile
+import sys
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRIPTS = os.path.join(ROOT, "scripts")
+
+
+def _load(name: str):
+    spec = importlib.util.spec_from_file_location(
+        f"scripts_{name}", os.path.join(SCRIPTS, f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize(
+    "path", sorted(glob.glob(os.path.join(SCRIPTS, "*.py"))),
+    ids=os.path.basename)
+def test_script_byte_compiles(path, tmp_path):
+    py_compile.compile(path, cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+@pytest.mark.parametrize("name",
+                         ["explain", "dump_rows", "pillar_layers", "bench_xl"])
+def test_generic_tool_imports_without_side_effects(name, monkeypatch):
+    from pyspark import SparkContext
+
+    monkeypatch.syspath_prepend(ROOT)          # the tools import bench.py
+    monkeypatch.setattr(sys, "dont_write_bytecode", True)
+    context = SparkContext._active_spark_context
+    before = set(os.listdir(ROOT))
+    mod = _load(name)
+    assert callable(mod.main)
+    assert SparkContext._active_spark_context is context
+    assert set(os.listdir(ROOT)) == before
+
+
+def test_bench_xl_reuses_bench_loop_and_cpu_reference(monkeypatch):
+    monkeypatch.syspath_prepend(ROOT)
+    import bench
+
+    xl = _load("bench_xl")
+    assert xl._cpu_reference_sec is bench._cpu_reference_sec
+    assert xl.time_pillars is bench.time_pillars
+    assert xl.SF_DIR == bench.SF_DIR
