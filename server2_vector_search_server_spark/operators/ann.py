@@ -24,6 +24,13 @@ Three tiers, all DataFrame-in/DataFrame-out:
 3. **MLlib BucketedRandomProjectionLSH** — Spark's built-in ANN for
    approxNearestNeighbors / approxSimilarityJoin, seeded for determinism
    (rows-only checks: its hash family isn't reproducible in DuckDB).
+
+Ranking contract: every tier here scores and ranks through
+``operators/knn.py`` — its exact score (``exact_score``/``score_sql``,
+also over the PQ lookup distances), its ``(score DESC, id ASC) LIMIT k``
+tail (``top_k``, also for the candidate stages' approximate scores) and
+its per-query window (``top_k_per_query``). The exact stages are
+``knn_topk`` over the pruned rows.
 """
 
 from __future__ import annotations
@@ -34,10 +41,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark.functions.vector import (
-    dot, dot_sql, squared_l2, squared_l2_py, squared_l2_sql,
+    dot_sql, squared_l2_py, squared_l2_sql,
 )
 from server2_vector_search_server_spark.operators.knn import (
-    vector_literal, vectors_literal, vectors_literal_sql,
+    exact_score, knn_topk, score_sql, top_k, top_k_per_query,
+    vector_literal_sql, vectors_literal, vectors_literal_sql,
 )
 
 
@@ -97,19 +105,22 @@ def hyperplane_knn(
         probes.append(qbits ^ (1 << i))
     bucketed = corpus.withColumn(
         "bucket", hyperplane_bucket(vec_col, hyperplanes))
-    scored = (
-        bucketed.filter(F.col("bucket").isin(probes))
-        .withColumn("score", F.round(
-            F.lit(1.0) - squared_l2(vector_literal(query_vec), F.col(vec_col)),
-            score_decimals))
-    )
-    return (scored.drop(vec_col)
-            .orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k))
+    return knn_topk(bucketed.filter(F.col("bucket").isin(probes)), query_vec,
+                    k, vec_col=vec_col, id_col=id_col,
+                    score_decimals=score_decimals)
 
 
 # --- tier 2b: IVF coarse quantization --------------------------------------
 
 CODEBOOK_LIT_MAX_ELEMENTS = 1024
+
+
+def _nearest_cells(cent_rows, vec, n, centroid_id_col, centroid_vec_col):
+    """The ``n`` centroid rows nearest ``vec``, lowest id on equal
+    distance: the driver-side twin of :func:`ivf_assign`'s argmin, on the
+    same left-folded doubles (``squared_l2_py``)."""
+    return sorted(cent_rows, key=lambda r: (
+        squared_l2_py(vec, r[centroid_vec_col]), r[centroid_id_col]))[:n]
 
 
 def codebook_transport(vectors: DataFrame, cent_rows, *,
@@ -228,24 +239,15 @@ def ivf_knn(
 ) -> DataFrame:
     """IVF-Flat search: probe the nprobe nearest centroids' cells, exact
     top-k within. ``centroids`` must be small (broadcast)."""
-    cent_rows = centroids.collect()
-    ranked = sorted(
-        cent_rows,
-        key=lambda r: (sum((float(a) - float(b)) ** 2
-                           for a, b in zip(query_vec, r[centroid_vec_col])),
-                       r[centroid_id_col]))
-    probe_ids = [r[centroid_id_col] for r in ranked[:nprobe]]
+    probe_ids = [r[centroid_id_col] for r in _nearest_cells(
+        centroids.collect(), query_vec, nprobe, centroid_id_col,
+        centroid_vec_col)]
     assigned = ivf_assign(vectors, centroids, vec_col=vec_col, id_col=id_col,
                           centroid_id_col=centroid_id_col,
                           centroid_vec_col=centroid_vec_col)
-    scored = (
-        assigned.filter(F.col(centroid_id_col).isin(probe_ids))
-        .withColumn("score", F.round(
-            F.lit(1.0) - squared_l2(vector_literal(query_vec), F.col(vec_col)),
-            score_decimals))
-    )
-    return (scored.drop(vec_col)
-            .orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k))
+    return knn_topk(assigned.filter(F.col(centroid_id_col).isin(probe_ids)),
+                    query_vec, k, vec_col=vec_col, id_col=id_col,
+                    score_decimals=score_decimals)
 
 
 def ivf_train_kmeans(corpus: DataFrame, n_centroids: int = 16, *,
@@ -308,22 +310,13 @@ def ivf_knn_indexed(
     """Search a materialized IVF index: rank centroids driver-side, filter
     the partitioned table on the probe cells (partition pruning — no data
     files outside the probed cells are opened), exact-rescore within."""
-    cent_rows = centroids.collect()
-    ranked = sorted(
-        cent_rows,
-        key=lambda r: (sum((float(a) - float(b)) ** 2
-                           for a, b in zip(query_vec, r[centroid_vec_col])),
-                       r[centroid_id_col]))
-    probe_ids = [r[centroid_id_col] for r in ranked[:nprobe]]
-    scored = (
-        spark.read.parquet(index_path)
-        .filter(F.col(centroid_id_col).isin(probe_ids))
-        .withColumn("score", F.round(
-            F.lit(1.0) - squared_l2(vector_literal(query_vec), F.col(vec_col)),
-            score_decimals))
-    )
-    return (scored.drop(vec_col)
-            .orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k))
+    probe_ids = [r[centroid_id_col] for r in _nearest_cells(
+        centroids.collect(), query_vec, nprobe, centroid_id_col,
+        centroid_vec_col)]
+    cells = (spark.read.parquet(index_path)
+             .filter(F.col(centroid_id_col).isin(probe_ids)))
+    return knn_topk(cells, query_vec, k, vec_col=vec_col, id_col=id_col,
+                    score_decimals=score_decimals)
 
 
 # --- tier 2c: int8 scalar quantization (SQ8) --------------------------------
@@ -375,18 +368,13 @@ def sq8_knn(
     the ranking scan reads ONLY the 4×-smaller ``(qvec, scale)`` columns.
     Output: ``score_sq8`` (quantized 1 − d² ranking score) and ``score``
     (exact), both rounded; rank order is (score_sq8 DESC, id ASC)."""
-    q = vector_literal(query_vec)
-    quant = sq8_quantize(corpus, vec_col=vec_col)
-    dequant = F.transform(F.col("qvec"),
-                          lambda x: x.cast("double") / F.col("sq8_scale"))
-    cand = (
-        quant.withColumn("score_sq8", F.round(
-            F.lit(1.0) - squared_l2(q, dequant), score_decimals))
-        .orderBy(F.col("score_sq8").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(q, F.col(vec_col)), score_decimals))
+    q = vector_literal_sql(query_vec)
+    dequant = "transform(qvec, x -> CAST(x AS DOUBLE) / sq8_scale)"
+    quant = sq8_quantize(corpus, vec_col=vec_col).withColumn(
+        "score_sq8", exact_score(q, dequant, score_decimals))
+    cand = top_k(quant, k, id_col=id_col, score_col="score_sq8")
+    return (cand.withColumn("score", exact_score(q, f"`{vec_col}`",
+                                                 score_decimals))
             .drop(vec_col, "qvec", "sq8_scale"))
 
 
@@ -423,20 +411,13 @@ def matryoshka_knn(
     ``score`` (exact, full-dim), both rounded; final order is
     (score DESC, id ASC).
     """
-    q_prefix = vector_literal(list(query_vec)[:prefix_dim])
-    prefix = F.slice(F.col(vec_col), 1, prefix_dim)
-    cand = (
-        corpus.withColumn("score_prefix", F.round(
-            F.lit(1.0) - squared_l2(q_prefix, prefix), score_decimals))
-        .orderBy(F.col("score_prefix").desc(), F.col(id_col).asc())
-        .limit(candidates)
-    )
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k)
-            .drop(vec_col))
+    prefix = exact_score(vector_literal_sql(list(query_vec)[:prefix_dim]),
+                         f"slice(`{vec_col}`, 1, {prefix_dim})",
+                         score_decimals)
+    cand = top_k(corpus.withColumn("score_prefix", prefix), candidates,
+                 id_col=id_col, score_col="score_prefix")
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col,
+                    score_decimals=score_decimals)
 
 
 BQ_WORD_BITS = 32   # 32 bits per BIGINT word: bit 63 would overflow
@@ -523,11 +504,8 @@ def binary_knn(
     cand = (packed.withColumn("hamming", ham.cast("int"))
             .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
             .limit(candidates))
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k)
+    return (knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col,
+                     score_decimals=score_decimals)
             .select(id_col, *extra_cols, "hamming", "score"))
 
 
@@ -609,6 +587,24 @@ def pq_encode(vectors: DataFrame,
     return out
 
 
+def _pq_score(query_vec: Sequence[float],
+              codebooks: list[list[list[float]]],
+              score_decimals: int) -> Column:
+    """``score_pq``: the reference score over the asymmetric distance
+    ``Σ_m table_m[pq_code_m]``, as one SQL string. Each query→codeword
+    table is a PLAN CONSTANT (both operands are driver-side values),
+    folded in Python by ``squared_l2_py`` in the JVM's IEEE op order, so
+    the literal doubles are bitwise what the JVM expression would
+    compute."""
+    sub = len(codebooks[0][0])
+    q = list(query_vec)
+    d2 = "0.0D"
+    for m, cbook in enumerate(codebooks):
+        table = [squared_l2_py(c, q[m * sub:(m + 1) * sub]) for c in cbook]
+        d2 += f" + element_at({vector_literal_sql(table)}, pq_code_{m + 1})"
+    return F.expr(score_sql(d2, score_decimals))
+
+
 def pq_knn(
     corpus: DataFrame,
     query_vec: Sequence[float],
@@ -626,31 +622,14 @@ def pq_knn(
     per-subspace query→codeword distance table is a literal array expression
     (JVM-evaluated, constant-folded by codegen), so the whole ranking scan
     is lookups + adds over the M byte-sized code columns."""
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    encoded = pq_encode(corpus, codebooks, vec_col=vec_col)
-    approx_d2 = F.lit(0.0)
-    for m, cbook in enumerate(codebooks):
-        q_sub = list(query_vec)[m * sub:(m + 1) * sub]
-        # r11: the query->codeword distance table is a PLAN CONSTANT
-        # (both operands are driver-side values) - fold it in Python.
-        # squared_l2_py applies the identical IEEE op order, so the
-        # literal doubles are bitwise what the JVM expression computed;
-        # this removes K vector_literal parses + 2 HOF lambdas per
-        # subspace from every plan build.
-        qdists = vector_literal([squared_l2_py(c, q_sub) for c in cbook])
-        approx_d2 = approx_d2 + F.element_at(qdists,
-                                             F.col(f"pq_code_{m + 1}"))
-    cand = (
-        encoded.withColumn("score_pq",
-                           F.round(F.lit(1.0) - approx_d2, score_decimals))
-        .orderBy(F.col("score_pq").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
-            .drop(vec_col, *[f"pq_code_{m + 1}" for m in range(n_sub)]))
+    encoded = pq_encode(corpus, codebooks, vec_col=vec_col).withColumn(
+        "score_pq", _pq_score(query_vec, codebooks, score_decimals))
+    cand = top_k(encoded, k, id_col=id_col, score_col="score_pq")
+    return (cand.withColumn("score", exact_score(
+                vector_literal_sql(query_vec), f"`{vec_col}`",
+                score_decimals))
+            .drop(vec_col, *[f"pq_code_{m + 1}"
+                             for m in range(len(codebooks))]))
 
 
 def ivf_pq_knn(
@@ -676,43 +655,17 @@ def ivf_pq_knn(
     index is materialized, cf. write_ivf_index) and the ranking scan inside
     touches M bytes per row instead of 4·dim. Candidate ranking uses
     ``score_pq`` (rounded) with id tie-break; output carries both
-    ``score_pq`` and the exact ``score``."""
-    cent_rows = centroids.collect()
-    ranked = sorted(
-        cent_rows,
-        key=lambda r: (sum((float(a) - float(b)) ** 2
-                           for a, b in zip(query_vec, r[centroid_vec_col])),
-                       r[centroid_id_col]))
-    probe_ids = [r[centroid_id_col] for r in ranked[:nprobe]]
+    ``score_pq`` and the exact ``score``: :func:`pq_knn` over the probed
+    cells."""
+    probe_ids = [r[centroid_id_col] for r in _nearest_cells(
+        centroids.collect(), query_vec, nprobe, centroid_id_col,
+        centroid_vec_col)]
     assigned = ivf_assign(vectors, centroids, vec_col=vec_col, id_col=id_col,
                           centroid_id_col=centroid_id_col,
                           centroid_vec_col=centroid_vec_col)
-    cell = assigned.filter(F.col(centroid_id_col).isin(probe_ids))
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    encoded = pq_encode(cell, codebooks, vec_col=vec_col)
-    approx_d2 = F.lit(0.0)
-    for m, cbook in enumerate(codebooks):
-        q_sub = list(query_vec)[m * sub:(m + 1) * sub]
-        # r11: the query->codeword distance table is a PLAN CONSTANT
-        # (both operands are driver-side values) - fold it in Python.
-        # squared_l2_py applies the identical IEEE op order, so the
-        # literal doubles are bitwise what the JVM expression computed;
-        # this removes K vector_literal parses + 2 HOF lambdas per
-        # subspace from every plan build.
-        qdists = vector_literal([squared_l2_py(c, q_sub) for c in cbook])
-        approx_d2 = approx_d2 + F.element_at(qdists,
-                                             F.col(f"pq_code_{m + 1}"))
-    cand = (
-        encoded.withColumn("score_pq",
-                           F.round(F.lit(1.0) - approx_d2, score_decimals))
-        .orderBy(F.col("score_pq").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
-            .drop(vec_col, *[f"pq_code_{m + 1}" for m in range(n_sub)]))
+    return pq_knn(assigned.filter(F.col(centroid_id_col).isin(probe_ids)),
+                  query_vec, codebooks, k, vec_col=vec_col, id_col=id_col,
+                  score_decimals=score_decimals)
 
 
 def write_ivf_pq_index(vectors: DataFrame, centroids: DataFrame,
@@ -758,49 +711,26 @@ def ivf_pq_knn_indexed(
     1000-executor scale a broadcast of k ids). Same output contract and
     oracle as :func:`ivf_pq_knn` — the index is a layout change, not a
     semantic one."""
-    cent_rows = centroids.collect()
-    ranked = sorted(
-        cent_rows,
-        key=lambda r: (sum((float(a) - float(b)) ** 2
-                           for a, b in zip(query_vec, r[centroid_vec_col])),
-                       r[centroid_id_col]))
-    probe_ids = [r[centroid_id_col] for r in ranked[:nprobe]]
+    probe_ids = [r[centroid_id_col] for r in _nearest_cells(
+        centroids.collect(), query_vec, nprobe, centroid_id_col,
+        centroid_vec_col)]
     stored = spark.read.parquet(index_path)
     cell = stored.filter(F.col(centroid_id_col).isin(probe_ids))
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    approx_d2 = F.lit(0.0)
-    for m, cbook in enumerate(codebooks):
-        q_sub = list(query_vec)[m * sub:(m + 1) * sub]
-        # r11: the query->codeword distance table is a PLAN CONSTANT
-        # (both operands are driver-side values) - fold it in Python.
-        # squared_l2_py applies the identical IEEE op order, so the
-        # literal doubles are bitwise what the JVM expression computed;
-        # this removes K vector_literal parses + 2 HOF lambdas per
-        # subspace from every plan build.
-        qdists = vector_literal([squared_l2_py(c, q_sub) for c in cbook])
-        approx_d2 = approx_d2 + F.element_at(qdists,
-                                             F.col(f"pq_code_{m + 1}"))
-    code_cols = [f"pq_code_{m + 1}" for m in range(n_sub)]
+    code_cols = [f"pq_code_{m + 1}" for m in range(len(codebooks))]
     # Schema-generic candidate projection: carry every stored payload column
     # (whatever the indexed corpus has) except the full-precision vector and
     # index-internal columns — naming a specific payload column here would
     # break any corpus without it.
     payload_cols = [c for c in stored.columns
                     if c not in (vec_col, "ingest_batch", *code_cols)]
-    cand = (
-        cell.select(*payload_cols, *code_cols)
-        .withColumn("score_pq",
-                    F.round(F.lit(1.0) - approx_d2, score_decimals))
-        .orderBy(F.col("score_pq").desc(), F.col(id_col).asc())
-        .limit(k)
-        .drop(*code_cols)
-    )
+    ranked = cell.select(*payload_cols, *code_cols).withColumn(
+        "score_pq", _pq_score(query_vec, codebooks, score_decimals))
+    cand = top_k(ranked, k, id_col=id_col, score_col="score_pq")
     rescore_src = cell.select(id_col, vec_col)
-    return (cand.join(rescore_src, id_col)
-            .withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
+    return (cand.drop(*code_cols).join(rescore_src, id_col)
+            .withColumn("score", exact_score(
+                vector_literal_sql(query_vec), f"`{vec_col}`",
+                score_decimals))
             .drop(vec_col))
 
 
@@ -944,6 +874,40 @@ def kmeans_lloyd(vectors: DataFrame, init_centroids: DataFrame,
     return assigned.drop(vec_col)
 
 
+def _ivf_batch_topk(cells: DataFrame, centroids: DataFrame,
+                    queries: DataFrame, k: int, nprobe: int, *,
+                    vec_col: str, id_col: str, query_id_col: str,
+                    query_vec_col: str, centroid_id_col: str,
+                    centroid_vec_col: str, score_decimals: int) -> DataFrame:
+    """The shared body of the batch IVF searches: each query's nprobe
+    nearest cells (rounded distance, lowest id on ties) as one expression
+    over the query rows, broadcast-joined to the cell-keyed ``cells`` so
+    each row is scored only against the queries probing its cell, then
+    each query's top-k."""
+    cent_rows = sorted(centroids.collect(),
+                       key=lambda r: r[centroid_id_col])
+    q_paired, cb_vecs_sql, cb_ids_sql = codebook_transport_sql(
+        queries, cent_rows, centroid_id_col=centroid_id_col,
+        centroid_vec_col=centroid_vec_col)
+    ranked = F.expr(
+        f"array_sort(zip_with(transform({cb_vecs_sql}, "
+        f"c -> round({squared_l2_sql('c', f'`{query_vec_col}`')}, "
+        f"{score_decimals})), {cb_ids_sql}, "
+        f"(d, cid) -> named_struct('d', d, 'cid', cid)))")
+    probes = (
+        q_paired.select(
+            query_id_col, query_vec_col,
+            F.explode(F.slice(ranked, 1, nprobe)).alias("_p"))
+        .select(query_id_col, query_vec_col,
+                F.col("_p.cid").alias(centroid_id_col)))
+    cand = (cells.join(F.broadcast(probes), centroid_id_col)
+            .withColumn("score", exact_score(
+                f"`{query_vec_col}`", f"`{vec_col}`", score_decimals)))
+    return (top_k_per_query(cand, k, query_id_col=query_id_col,
+                            id_col=id_col, rank_col="_rn")
+            .drop("_rn", vec_col, query_vec_col))
+
+
 def ivf_knn_batch(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -974,39 +938,14 @@ def ivf_knn_batch(
     window over (query, score) — exactly the multi-query contract of
     ``knn_join``, recall bounded by nprobe as in ``ivf_knn``.
     """
-    from pyspark.sql import Window
-
-    cent_rows = sorted(centroids.collect(),
-                       key=lambda r: r[centroid_id_col])
-    q_paired, cb_vecs_sql, cb_ids_sql = codebook_transport_sql(
-        queries, cent_rows, centroid_id_col=centroid_id_col,
-        centroid_vec_col=centroid_vec_col)
-    # r11: one expr parse for the per-query cell ranking (same tree as
-    # the Column form; round/array_sort semantics unchanged)
-    ranked = F.expr(
-        f"array_sort(zip_with(transform({cb_vecs_sql}, "
-        f"c -> round({squared_l2_sql('c', f'`{query_vec_col}`')}, "
-        f"{score_decimals})), {cb_ids_sql}, "
-        f"(d, cid) -> named_struct('d', d, 'cid', cid)))")
-    probes = (
-        q_paired.select(
-            query_id_col, query_vec_col,
-            F.explode(F.slice(ranked, 1, nprobe)).alias("_p"))
-        .select(query_id_col, query_vec_col,
-                F.col("_p.cid").alias(centroid_id_col)))
     assigned = ivf_assign(vectors, centroids, vec_col=vec_col, id_col=id_col,
                           centroid_id_col=centroid_id_col,
                           centroid_vec_col=centroid_vec_col)
-    cand = (assigned.join(F.broadcast(probes), centroid_id_col)
-            .withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(F.col(query_vec_col),
-                                        F.col(vec_col)),
-                score_decimals)))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("score").desc(), F.col(id_col).asc()))
-    return (cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn", vec_col, query_vec_col))
+    return _ivf_batch_topk(
+        assigned, centroids, queries, k, nprobe, vec_col=vec_col,
+        id_col=id_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col, centroid_id_col=centroid_id_col,
+        centroid_vec_col=centroid_vec_col, score_decimals=score_decimals)
 
 
 def ivf_knn_batch_indexed(
@@ -1035,39 +974,14 @@ def ivf_knn_batch_indexed(
     full-table scan (DPP), one scan for N queries (the batch form's
     economics, SCALE.md §21). Exact scoring within probed cells — same
     output contract as :func:`ivf_knn_batch`."""
-    from pyspark.sql import Window
-
-    cent_rows = sorted(centroids.collect(),
-                       key=lambda r: r[centroid_id_col])
-    q_paired, cb_vecs_sql, cb_ids_sql = codebook_transport_sql(
-        queries, cent_rows, centroid_id_col=centroid_id_col,
-        centroid_vec_col=centroid_vec_col)
-    # r11: one expr parse for the per-query cell ranking (same tree as
-    # the Column form; round/array_sort semantics unchanged)
-    ranked = F.expr(
-        f"array_sort(zip_with(transform({cb_vecs_sql}, "
-        f"c -> round({squared_l2_sql('c', f'`{query_vec_col}`')}, "
-        f"{score_decimals})), {cb_ids_sql}, "
-        f"(d, cid) -> named_struct('d', d, 'cid', cid)))")
-    probes = (
-        q_paired.select(
-            query_id_col, query_vec_col,
-            F.explode(F.slice(ranked, 1, nprobe)).alias("_p"))
-        .select(query_id_col, query_vec_col,
-                F.col("_p.cid").alias(centroid_id_col)))
     stored = spark.read.parquet(index_path)
-    cand = (stored.join(F.broadcast(probes), centroid_id_col)
-            .withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(F.col(query_vec_col),
-                                        F.col(vec_col)),
-                score_decimals)))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("score").desc(), F.col(id_col).asc()))
-    drop_cols = ["_rn", vec_col, query_vec_col, "ingest_batch"] + \
-        [c for c in stored.columns if c.startswith("pq_code_")]
-    return (cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop(*drop_cols))
+    return _ivf_batch_topk(
+        stored, centroids, queries, k, nprobe, vec_col=vec_col,
+        id_col=id_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col, centroid_id_col=centroid_id_col,
+        centroid_vec_col=centroid_vec_col, score_decimals=score_decimals,
+    ).drop("ingest_batch",
+           *[c for c in stored.columns if c.startswith("pq_code_")])
 
 
 def adaptive_filtered_knn(
@@ -1098,20 +1012,16 @@ def adaptive_filtered_knn(
     """
     n = filtered.count()
     if n <= cutoff:
-        score = F.round(
-            F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                    F.col(vec_col)), score_decimals)
-        picked = (filtered.select(F.col(id_col), score.alias("score"))
-                  .orderBy(F.col("score").desc(), F.col(id_col).asc())
-                  .limit(k))
+        picked = knn_topk(filtered, query_vec, k, vec_col=vec_col,
+                          id_col=id_col, score_decimals=score_decimals)
         strategy = "exact"
     else:
-        picked = (ivf_knn(filtered, centroids, query_vec, k=k,
-                          nprobe=nprobe, vec_col=vec_col, id_col=id_col,
-                          score_decimals=score_decimals)
-                  .select(F.col(id_col), F.col("score")))
+        picked = ivf_knn(filtered, centroids, query_vec, k=k,
+                         nprobe=nprobe, vec_col=vec_col, id_col=id_col,
+                         score_decimals=score_decimals)
         strategy = "ivf"
-    return picked.withColumn("strategy", F.lit(strategy))
+    return (picked.select(F.col(id_col), F.col("score"))
+            .withColumn("strategy", F.lit(strategy)))
 
 
 def residual_pq_codebooks(vectors: DataFrame, centroids: DataFrame,
@@ -1131,8 +1041,7 @@ def residual_pq_codebooks(vectors: DataFrame, centroids: DataFrame,
     rows), so encodings stay SQL-reproducible. Assignment is replicated
     driver-side with the engine's argmin convention (min distance, lowest
     centroid id on ties; identical IEEE doubles)."""
-    cent_rows = sorted(centroids.collect(),
-                       key=lambda r: r[centroid_id_col])
+    cent_rows = centroids.collect()
     first = (vectors.filter(F.col(id_col) < n_codewords).orderBy(id_col)
              .select(id_col, vec_col).collect())
     dim = len(first[0][vec_col])
@@ -1140,15 +1049,8 @@ def residual_pq_codebooks(vectors: DataFrame, centroids: DataFrame,
     books: list[list[list[float]]] = [[] for _ in range(n_subspaces)]
     for r in first:
         v = [float(x) for x in r[vec_col]]
-
-        def _d2(c):
-            acc = 0.0
-            for a, b in zip(v, c[centroid_vec_col]):
-                d = float(a) - float(b)
-                acc += d * d
-            return acc
-
-        best = min(cent_rows, key=lambda c: (_d2(c), c[centroid_id_col]))
+        best = _nearest_cells(cent_rows, v, 1, centroid_id_col,
+                              centroid_vec_col)[0]
         resid = [a - float(b) for a, b in zip(v, best[centroid_vec_col])]
         for m in range(n_subspaces):
             books[m].append(resid[m * sub:(m + 1) * sub])
@@ -1178,18 +1080,8 @@ def ivf_pq_residual_knn(
     deterministic and SQL-reproducible — `ann_ivf_pq_residual_knn` hash-
     checks it, and the recall query quantifies the lift over the
     non-residual composition at the same (M, K, nprobe) budget."""
-    cent_rows = sorted(centroids.collect(),
-                       key=lambda r: r[centroid_id_col])
-
-    def _d2(c):
-        acc = 0.0
-        for a, b in zip(query_vec, c[centroid_vec_col]):
-            d = float(a) - float(b)
-            acc += d * d
-        return acc
-
-    ranked = sorted(cent_rows, key=lambda c: (_d2(c), c[centroid_id_col]))
-    probes = ranked[:nprobe]
+    probes = _nearest_cells(centroids.collect(), query_vec, nprobe,
+                            centroid_id_col, centroid_vec_col)
     probe_ids = [r[centroid_id_col] for r in probes]
 
     assigned = ivf_assign(vectors, centroids, vec_col=vec_col,
@@ -1206,30 +1098,25 @@ def ivf_pq_residual_knn(
 
     n_sub = len(codebooks)
     sub = len(codebooks[0][0])
-    approx_d2 = F.lit(0.0)
+    d2 = "0.0D"
     for m, cbook in enumerate(codebooks):
-        lookup = None
+        lookup = ""
         for c in probes:
             qr = [float(a) - float(b)
                   for a, b in zip(query_vec, c[centroid_vec_col])]
             q_sub = qr[m * sub:(m + 1) * sub]
-            # r11: per-probe constant distance table folded in Python
-            # (same bitwise argument as the pq_knn sites)
-            qdists = vector_literal(
-                [squared_l2_py(cw, q_sub) for cw in cbook])
-            hit = F.element_at(qdists, F.col(f"pq_code_{m + 1}"))
-            cond = F.col(centroid_id_col) == c[centroid_id_col]
-            lookup = (F.when(cond, hit) if lookup is None
-                      else lookup.when(cond, hit))
-        approx_d2 = approx_d2 + lookup
-    cand = (encoded.withColumn(
-                "score_pq",
-                F.round(F.lit(1.0) - approx_d2, score_decimals))
-            .orderBy(F.col("score_pq").desc(), F.col(id_col).asc())
-            .limit(k))
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
+            # same bitwise argument as _pq_score
+            table = [squared_l2_py(cw, q_sub) for cw in cbook]
+            lookup += (f" WHEN `{centroid_id_col}` = {c[centroid_id_col]}"
+                       f" THEN element_at({vector_literal_sql(table)},"
+                       f" pq_code_{m + 1})")
+        d2 += f" + CASE{lookup} END"
+    encoded = encoded.withColumn("score_pq",
+                                 F.expr(score_sql(d2, score_decimals)))
+    cand = top_k(encoded, k, id_col=id_col, score_col="score_pq")
+    return (cand.withColumn("score", exact_score(
+                vector_literal_sql(query_vec), f"`{vec_col}`",
+                score_decimals))
             .drop(vec_col, "_resid", "_cvec",
                   *[f"pq_code_{m + 1}" for m in range(n_sub)]))
 
@@ -1315,20 +1202,13 @@ def pca_knn(
 
     pc = np.asarray(components, dtype=np.float64)
     q_red = (np.asarray(list(query_vec), dtype=np.float64) @ pc).tolist()
-    cand = (
-        pca_project(corpus, components, vec_col=vec_col, out_col="_red")
-        .withColumn("score_pca", F.round(
-            F.lit(1.0) - squared_l2(vector_literal(q_red), F.col("_red")),
-            score_decimals))
-        .orderBy(F.col("score_pca").desc(), F.col(id_col).asc())
-        .limit(candidates)
-    )
-    return (cand.withColumn("score", F.round(
-                F.lit(1.0) - squared_l2(vector_literal(query_vec),
-                                        F.col(vec_col)), score_decimals))
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k)
-            .drop(vec_col, "_red"))
+    reduced = pca_project(corpus, components, vec_col=vec_col,
+                          out_col="_red").withColumn(
+        "score_pca", exact_score(vector_literal_sql(q_red), "`_red`",
+                                 score_decimals))
+    cand = top_k(reduced, candidates, id_col=id_col, score_col="score_pca")
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col,
+                    score_decimals=score_decimals).drop("_red")
 
 
 # --- submodular data-subset selection (facility location) -------------------
@@ -1400,8 +1280,7 @@ def facility_location_select(universe: DataFrame, pool: DataFrame, k: int, *,
         else:
             gains = (sims.groupBy("_c")
                      .agg(F.sum("_s").cast("long").alias("_gain")))
-        top = (gains.orderBy(F.col("_gain").desc(), F.col("_c").asc())
-               .limit(1).collect())
+        top = top_k(gains, 1, id_col="_c", score_col="_gain").collect()
         if not top:
             break
         picked.append(top[0]["_c"])

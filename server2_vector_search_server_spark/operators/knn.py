@@ -23,6 +23,12 @@ Spark plan shape (and why it scales):
 
 Determinism: ties broken by ``(score DESC, id ASC)`` (FIXTURES.md rule 4) so
 top-k sets are stable across partitionings and match the DuckDB oracle.
+
+This module is the one place that spells the ranking contract: the exact
+score (:func:`exact_score`, over :func:`score_sql`), the ``(score DESC, id
+ASC) LIMIT k`` tail (:func:`top_k`) and its per-query window form
+(:func:`top_k_per_query`). Every operator here and every ANN tier in
+``operators/ann.py`` ranks through these three pieces.
 """
 
 from __future__ import annotations
@@ -35,10 +41,7 @@ from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
 from server2_vector_search_server_spark.functions.filters import apply_where
-from server2_vector_search_server_spark.functions.vector import (
-    similarity_score,
-    squared_l2_sql,
-)
+from server2_vector_search_server_spark.functions.vector import squared_l2_sql
 
 
 def vector_literal(vec: Sequence[float]) -> Column:
@@ -82,6 +85,52 @@ def _resolve_k(k: int) -> int:
     return config.SEARCH_K if k == -1 else k
 
 
+def score_sql(d2_sql: str,
+              score_decimals: int | None = config.SCORE_DECIMALS) -> str:
+    """SQL text of the reference score over a squared-distance expression:
+    ``round(1 − d², score_decimals)`` (``app.py:418``; unrounded when
+    ``score_decimals`` is None). The PQ tiers pass their table-lookup
+    distance here; everything else goes through :func:`exact_score`."""
+    sql = f"1.0D - ({d2_sql})"
+    if score_decimals is None:
+        return sql
+    return f"round({sql}, {int(score_decimals)})"
+
+
+def exact_score(query_sql: str, vec_sql: str,
+                score_decimals: int | None = config.SCORE_DECIMALS) -> Column:
+    """The exact score ``round(1 − ‖q − v‖², score_decimals)`` as ONE
+    ``F.expr``. Both sides are SQL text: a literal from
+    :func:`vector_literal_sql` or a (backquoted) column or array
+    expression, so single-query and batch operators share it. The text is
+    the expression tree the Column form
+    ``F.round(F.lit(1.0) - squared_l2(q, v), n)`` builds, so scores are
+    bitwise the same (tests/test_knn.py), at 3 py4j round trips to build
+    instead of 177 for the Column form's three PySpark lambdas (16 dims)."""
+    return F.expr(score_sql(squared_l2_sql(query_sql, vec_sql),
+                            score_decimals))
+
+
+def top_k(df: DataFrame, k: int, *, id_col: str,
+          score_col: str = "score") -> DataFrame:
+    """The ranking tail: ``ORDER BY score DESC, id ASC LIMIT k``. Catalyst
+    plans ``TakeOrderedAndProject`` (per-partition partial top-k, no
+    global sort). ``score_col`` lets candidate stages rank on their
+    approximate score with the same tie-break."""
+    return df.orderBy(F.col(score_col).desc(), F.col(id_col).asc()).limit(k)
+
+
+def top_k_per_query(df: DataFrame, k: int, *, query_id_col: str,
+                    id_col: str, rank_col: str = "rank") -> DataFrame:
+    """The batch ranking tail: ``row_number() OVER (PARTITION BY query
+    ORDER BY score DESC, id ASC) <= k`` on the ``score`` column, kept in
+    ``rank_col``."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("score").desc(), F.col(id_col).asc())
+    return (df.withColumn(rank_col, F.row_number().over(w))
+            .filter(F.col(rank_col) <= k))
+
+
 def knn_topk(
     corpus: DataFrame,
     query_vec: Sequence[float],
@@ -92,91 +141,22 @@ def knn_topk(
     where: Mapping[str, Any] | None = None,
     threshold: float | None = None,
     score_decimals: int | None = config.SCORE_DECIMALS,
-    impl: str = "jvm",
 ) -> DataFrame:
     """Exact scored top-k under the reference contract.
 
     Returns the corpus columns (minus the vector) plus ``score``; rows with
     ``score >= threshold`` (when given), ordered ``score DESC, id ASC``,
     limited to k. With ``threshold=config.SIMILARITY_THRESHOLD`` this is the
-    full ``/search_score`` pipeline (``app.py:414-432``).
-
-    ``impl``: ``"jvm"`` (default) scores with the codegen'd array expression —
-    the right choice to ~hundreds of dims and for the oracle gate. ``"arrow"``
-    scores in numpy via ``mapInPandas`` with a per-batch pruned candidate set —
-    measured ~1.7× faster at 1024 dims × 100 k vectors (SCALE.md §7), same
-    results (the pruning margin provably preserves the rounded-score top-k).
+    full ``/search_score`` pipeline (``app.py:414-432``). The ANN tiers
+    call it for their exact stages.
     """
     k = _resolve_k(k)
-    filtered = apply_where(corpus, where)
-    if impl == "arrow":
-        scored = _arrow_scored_candidates(filtered, query_vec, k,
-                                          vec_col=vec_col)
-    elif impl == "jvm":
-        # one SQL string: similarity_score's Column form builds three
-        # PySpark lambdas, ~170 py4j round trips per /search_score build;
-        # the text is the same tree, so the score is bitwise the same
-        scored = filtered.withColumn("score", F.expr(
-            "1.0D - " + squared_l2_sql(vector_literal_sql(query_vec),
-                                       f"`{vec_col}`"))
-        ).drop(vec_col)
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), score_decimals))
+    scored = apply_where(corpus, where).withColumn("score", exact_score(
+        vector_literal_sql(query_vec), f"`{vec_col}`", score_decimals)
+    ).drop(vec_col)
     if threshold is not None:
         scored = scored.filter(F.col("score") >= F.lit(float(threshold)))
-    return (
-        scored
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def _arrow_scored_candidates(corpus: DataFrame, query_vec: Sequence[float],
-                             k: int, *, vec_col: str) -> DataFrame:
-    """Arrow-batched numpy scoring with per-batch candidate pruning.
-
-    Each batch keeps rows whose RAW score is within 2×10^-SCORE_DECIMALS of
-    its k-th best raw score: any dropped row then rounds strictly below the
-    k-th rounded score, so it cannot enter the global top-k under any
-    tie-break — the final JVM round/sort/limit sees every possible winner.
-    The driver-side merge handles k·P candidate rows, same as
-    TakeOrderedAndProject.
-
-    Caveat: numpy's pairwise summation is not bit-identical to the JVM's
-    sequential fold; raw scores can differ in the last ulps, so equality with
-    the JVM path holds at rounded-score level (SCORE_DECIMALS), not raw —
-    which is why registered oracle queries keep ``impl="jvm"``.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    margin = 2.0 * 10.0 ** (-config.SCORE_DECIMALS)
-    out_fields = [f for f in corpus.schema.fields if f.name != vec_col]
-    out_schema = T.StructType(out_fields + [T.StructField("score",
-                                                          T.DoubleType())])
-    keep_cols = [f.name for f in out_fields]
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].values).astype(np.float64)
-            # same op order as functions/vector.squared_l2: (q_i - v_i)^2 sum
-            s = 1.0 - ((q - m) ** 2).sum(axis=1)
-            if len(s) > k:
-                kth = np.partition(-s, k - 1)[k - 1] * -1.0
-                mask = s >= kth - margin
-            else:
-                mask = np.ones(len(s), dtype=bool)
-            out = pdf.loc[mask, keep_cols].copy()
-            out["score"] = s[mask]
-            yield out
-
-    return corpus.mapInPandas(run, schema=out_schema)
+    return top_k(scored, k, id_col=id_col)
 
 
 def knn_join(
@@ -190,105 +170,26 @@ def knn_join(
     corpus_vec_col: str = "embedding",
     threshold: float | None = None,
     score_decimals: int | None = config.SCORE_DECIMALS,
-    impl: str = "jvm",
 ) -> DataFrame:
     """Batch k-NN: top-k corpus rows per query row (many-query form of C1/C2).
 
     ``queries`` must be small enough to broadcast (it is the reference's
     one-query-at-a-time loop, batched). The corpus side is scanned once; the
     only shuffle is the per-query window over surviving candidates.
-
-    ``impl="arrow"``: score every (query, corpus-batch) pair with one BLAS
-    matmul (``d² = |q|² + |v|² − 2·q·v``) and keep only each query's local
-    top-k (+rounding margin) per batch, so the window shuffle moves ~k·P·Q
-    rows instead of Q×corpus — measured 38× faster at 100 queries × 100 k
-    × 1024 dims (SCALE.md §8). Rounded-score-identical to the JVM path (the
-    matmul identity and pairwise sums differ in last ulps; the public
-    contract rounds to SCORE_DECIMALS).
     """
     k = _resolve_k(k)
-    if impl == "arrow":
-        scored = _arrow_multi_scored(queries, corpus, k,
-                                     query_id_col=query_id_col,
-                                     query_vec_col=query_vec_col,
-                                     corpus_vec_col=corpus_vec_col)
-    elif impl == "jvm":
-        q = F.broadcast(queries.select(
-            F.col(query_id_col).alias("__qid"),
-            F.col(query_vec_col).alias("__qvec")))
-        scored = (corpus.crossJoin(q)
-                  .withColumn("score", similarity_score(
-                      F.col("__qvec"), F.col(corpus_vec_col)))
-                  .drop(corpus_vec_col, "__qvec"))
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
-    if score_decimals is not None:
-        scored = scored.withColumn(
-            "score", F.round(F.col("score"), score_decimals))
+    q = F.broadcast(queries.select(
+        F.col(query_id_col).alias("__qid"),
+        F.col(query_vec_col).alias("__qvec")))
+    scored = (corpus.crossJoin(q)
+              .withColumn("score", exact_score(
+                  "__qvec", f"`{corpus_vec_col}`", score_decimals))
+              .drop(corpus_vec_col, "__qvec"))
     if threshold is not None:
         scored = scored.filter(F.col("score") >= F.lit(float(threshold)))
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(corpus_id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumnRenamed("__qid", query_id_col)
-    )
-
-
-def _arrow_multi_scored(queries: DataFrame, corpus: DataFrame, k: int, *,
-                        query_id_col: str, query_vec_col: str,
-                        corpus_vec_col: str) -> DataFrame:
-    """(query, candidate, raw score) rows via one matmul per Arrow batch.
-
-    The query set is collected (it must be broadcast-small by contract) and
-    shipped in the UDF closure; each corpus batch computes the full
-    batch×queries score matrix with BLAS and emits, per query, the rows
-    within 2×10^-SCORE_DECIMALS of that query's local k-th best raw score —
-    the same provably-lossless pruning as the single-query Arrow path.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    q_ids = [r[query_id_col] for r in q_rows]
-    qm = np.stack([np.asarray([float(x) for x in r[query_vec_col]])
-                   for r in q_rows])                       # Q × d
-    q_sq = (qm ** 2).sum(axis=1)                           # |q|²
-    margin = 2.0 * 10.0 ** (-config.SCORE_DECIMALS)
-    qid_type = queries.schema[query_id_col].dataType
-
-    out_fields = [f for f in corpus.schema.fields
-                  if f.name != corpus_vec_col]
-    keep_cols = [f.name for f in out_fields]
-    out_schema = T.StructType(
-        out_fields + [T.StructField("__qid", qid_type),
-                      T.StructField("score", T.DoubleType())])
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[corpus_vec_col].values).astype(np.float64)
-            v_sq = (m ** 2).sum(axis=1)
-            # scores: S[i, j] = 1 − (|v_i|² + |q_j|² − 2·v_i·q_j)
-            s = 1.0 - (v_sq[:, None] + q_sq[None, :] - 2.0 * (m @ qm.T))
-            parts = []
-            for j, qid in enumerate(q_ids):
-                col = s[:, j]
-                if len(col) > k:
-                    kth = np.partition(-col, k - 1)[k - 1] * -1.0
-                    mask = col >= kth - margin
-                else:
-                    mask = np.ones(len(col), dtype=bool)
-                part = pdf.loc[mask, keep_cols].copy()
-                part["__qid"] = qid
-                part["score"] = col[mask]
-                parts.append(part)
-            yield pd.concat(parts, ignore_index=True)
-
-    return corpus.mapInPandas(run, schema=out_schema)
+    return (top_k_per_query(scored, k, query_id_col="__qid",
+                            id_col=corpus_id_col)
+            .withColumnRenamed("__qid", query_id_col))
 
 
 def overfetch_rerank(
@@ -321,23 +222,14 @@ def overfetch_rerank(
     Output: corpus columns minus the vector, plus ``coarse_score`` and
     exact ``score``; ordered score DESC, id ASC, limit k.
     """
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-
     k = _resolve_k(k)
-    q_pref = vector_literal(list(query_vec)[:coarse_dim])
-    coarse = F.round(
-        F.lit(1.0) - squared_l2(q_pref, F.slice(F.col(vec_col), 1,
-                                                coarse_dim)),
-        score_decimals)
-    cand = (corpus.withColumn("coarse_score", coarse)
-            .orderBy(F.col("coarse_score").desc(), F.col(id_col).asc())
-            .limit(k * overfetch))
-    exact = F.round(similarity_score(vector_literal(query_vec),
-                                     F.col(vec_col)), score_decimals)
-    return (cand.withColumn("score", exact)
-            .drop(vec_col)
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k))
+    coarse = exact_score(vector_literal_sql(list(query_vec)[:coarse_dim]),
+                         f"slice(`{vec_col}`, 1, {coarse_dim})",
+                         score_decimals)
+    cand = top_k(corpus.withColumn("coarse_score", coarse), k * overfetch,
+                 id_col=id_col, score_col="coarse_score")
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col,
+                    score_decimals=score_decimals)
 
 
 def mmr_rerank(
@@ -372,8 +264,6 @@ def mmr_rerank(
 
     Output: one row per pick — (rank 1..k, id, mmr_score).
     """
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-
     spark = candidates.sparkSession
     cand = candidates.select(id_col, rel_col, vec_col) \
         .localCheckpoint(eager=True)
@@ -384,9 +274,7 @@ def mmr_rerank(
         if picked:
             pvecs = (cand.filter(F.col(id_col).isin(picked))
                      .select(F.col(vec_col).alias("_pvec")))
-            sim = F.round(F.lit(1.0) - squared_l2(F.col(vec_col),
-                                                  F.col("_pvec")),
-                          score_decimals)
+            sim = exact_score(f"`{vec_col}`", "_pvec", score_decimals)
             scored = (cur.crossJoin(F.broadcast(pvecs))
                       .groupBy(id_col, rel_col)
                       .agg(F.max(sim).alias("_maxsim"))
@@ -397,8 +285,7 @@ def mmr_rerank(
         else:
             scored = cur.withColumn("_mmr", F.round(
                 F.lit(lam) * F.col(rel_col), score_decimals))
-        top_rows = (scored.orderBy(F.col("_mmr").desc(), F.col(id_col).asc())
-                    .limit(1).collect())
+        top_rows = top_k(scored, 1, id_col=id_col, score_col="_mmr").collect()
         if not top_rows:        # k exceeded the candidate count
             break
         top = top_rows[0]

@@ -11,10 +11,10 @@ expand) → parse → sentence-split+merge → enrich metadata → embed → sto
                └─ embed                   (J1 — codegen'd hash or mapInPandas model)
                   └─ store.append         (A5 — partitioned write, master=union)
 
-Determinism: ``deterministic_ids=True`` derives chunk/doc ids from
-``md5(doc_name || chunk_index)`` (FIXTURES.md rule 2) so test outputs are
-hash-stable; production mode uses ``uuid()`` exactly like the reference
-(``app.py:219,298``).
+Determinism: chunk/doc ids are ``md5(doc_name)`` and
+``md5(doc_name || '#' || chunk_index)`` (FIXTURES.md rule 2), so outputs
+are hash-stable and a re-ingested document keeps its ids. The reference
+draws ``uuid()`` ids instead (``app.py:219,298``).
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ def ingest_documents(
     chunk_overlap: int = config.CHUNK_OVERLAP,
     split_mode: str = "punct",
     embed_dim: int = config.TEST_EMBEDDING_DIM,
-    deterministic_ids: bool = True,
     embedder=embed_hash,
     on_conflict: str = "skip",
 ) -> DataFrame:
@@ -71,19 +70,12 @@ def ingest_documents(
         existing = store.read(None)   # global gate: all collections
         incoming = dedup_new_documents(incoming, existing, on="doc_name")
 
-    if deterministic_ids:
-        doc_id = F.md5(F.col("doc_name"))
-        chunk_id = F.md5(F.concat_ws("#", F.col("doc_name"),
-                                     F.col("chunk_index").cast("string")))
-    else:
-        doc_id = F.expr("uuid()")
-        chunk_id = F.expr("uuid()")
-
     chunks = (
         chunk_documents(incoming, text_col="text", chunk_size=chunk_size,
                         chunk_overlap=chunk_overlap, mode=split_mode)
-        .withColumn("doc_id", doc_id)
-        .withColumn("chunk_id", chunk_id)
+        .withColumn("doc_id", F.md5(F.col("doc_name")))
+        .withColumn("chunk_id", F.md5(F.concat_ws(
+            "#", F.col("doc_name"), F.col("chunk_index").cast("string"))))
         .withColumn("original_collection", F.lit(collection))
         .withColumn("collection", F.lit(collection))
         .withColumn("metadata", F.create_map(

@@ -34,3 +34,37 @@ def duck():
             f"CREATE VIEW {name} AS SELECT * FROM "
             f"'{SF_SMOKE}/{name}.parquet'")
     return con
+
+
+@pytest.fixture
+def py4j_calls():
+    """``count(fn)``: the py4j round trips ``fn()`` makes from this thread.
+
+    ``fn`` runs once unmeasured first (one-time JVM class lookups), then
+    once under a counter on ``ClientServerConnection.send_command``. Only
+    this thread is counted: py4j's finalizer thread sends the deletes of
+    garbage-collected JVM references whenever GC happens to run."""
+    import threading
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+
+    orig = ClientServerConnection.send_command
+    me = threading.get_ident()
+    calls = 0
+
+    def counting(self, command):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return orig(self, command)
+
+    def count(fn):
+        nonlocal calls
+        fn()
+        calls = 0
+        with mock.patch.object(ClientServerConnection, "send_command",
+                               counting):
+            fn()
+        return calls
+
+    return count

@@ -111,20 +111,6 @@ def test_search_score_contract_on_real_vectors(spark, golden):
         assert len(got) == 5
 
 
-def test_jvm_and_arrow_agree_on_real_vectors(spark, golden):
-    from server2_vector_search_server_spark.operators.knn import knn_topk
-
-    corpus = spark.read.parquet(FIXTURE)
-    q = [float(x) for x in golden["embedding"][5]]
-    jvm = [(r["chunk_id"], r["score"]) for r in
-           knn_topk(corpus, q, k=10, threshold=None, id_col="chunk_id",
-                    impl="jvm").select("chunk_id", "score").collect()]
-    arrow = [(r["chunk_id"], r["score"]) for r in
-             knn_topk(corpus, q, k=10, threshold=None, id_col="chunk_id",
-                      impl="arrow").select("chunk_id", "score").collect()]
-    assert jvm == arrow
-
-
 def test_neighbor_structure_is_semantic(spark, golden):
     """Real embeddings must rank same-document chunks above cross-corpus
     ones: for a physics-exam chunk, the top non-self neighbors should come

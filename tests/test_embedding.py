@@ -107,16 +107,12 @@ def test_hash_embedding_bitwise_matches_frozen_spec(spark, dim):
         assert bits(r["ingest"]) == bits(r["spec"]), PIN_TEXTS[r["id"]]
 
 
-def test_query_embed_and_search_build_py4j_budget(spark, tmp_path):
+def test_query_embed_and_search_build_py4j_budget(spark, tmp_path,
+                                                  py4j_calls):
     """Plan-build cost guard: embedding one query and building the
     /search_score plan each stay within a fixed budget of py4j round
     trips, so per-lambda Column building cannot creep back into the
     serving path (the per-dimension embedding cost ~7k round trips)."""
-    import threading
-    from unittest import mock
-
-    from py4j.clientserver import ClientServerConnection
-
     from server2_vector_search_server_spark.engine import (
         DocumentSearchEngine,
     )
@@ -125,29 +121,9 @@ def test_query_embed_and_search_build_py4j_budget(spark, tmp_path):
     eng = DocumentSearchEngine(spark, str(tmp_path / "chunks"))
     text = "Budget test text. Two sentences."
     eng.upload_documents([("a.txt", text)])
-    calls = 0
-    orig = ClientServerConnection.send_command
-    me = threading.get_ident()
-
-    def counting(self, command):
-        # this thread only: py4j's finalizer thread sends the deletes of
-        # garbage-collected JVM references whenever GC happens to run
-        nonlocal calls
-        calls += threading.get_ident() == me
-        return orig(self, command)
-
-    def count(fn):
-        nonlocal calls
-        fn()                       # warm-up: one-time JVM class lookups
-        calls = 0
-        with mock.patch.object(ClientServerConnection, "send_command",
-                               counting):
-            fn()
-        return calls
-
     qvec = eng.embed_query(text)
-    assert 0 < count(lambda: eng.embed_query(text)) <= 100
-    assert 0 < count(lambda: search_store(eng.store, qvec, k=5)) <= 150
+    assert 0 < py4j_calls(lambda: eng.embed_query(text)) <= 100
+    assert 0 < py4j_calls(lambda: search_store(eng.store, qvec, k=5)) <= 150
     # the budgeted build is the real one: the chunk matches itself
     hits = search_store(eng.store, qvec, k=5).collect()
     assert [h["content"] for h in hits] == [text]

@@ -75,44 +75,6 @@ def test_knn_join_matches_per_query_topk(tables):
         assert sum(1 for g in got if g[0] == qid) == 4
 
 
-def test_arrow_impl_matches_jvm(spark, tables):
-    """impl='arrow' (numpy mapInPandas + pruned candidates) returns the same
-    rounded top-k as the codegen'd JVM path, with and without prefilter."""
-    from server2_vector_search_server_spark.operators.knn import knn_topk
-
-    emb = tables["embeddings"]
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 3)
-         .first()["embedding"]]
-    for where in (None, {"label": {"$in": [1, 2, 3]}}):
-        jvm = [(r["vec_id"], r["score"]) for r in
-               knn_topk(emb, q, k=10, where=where, threshold=None).collect()]
-        arrow = [(r["vec_id"], r["score"]) for r in
-                 knn_topk(emb, q, k=10, where=where, threshold=None,
-                          impl="arrow").collect()]
-        assert jvm == arrow
-    thr = [(r["vec_id"], r["score"]) for r in
-           knn_topk(emb, q, k=10, threshold=0.1, impl="arrow").collect()]
-    assert thr == [(3, 1.0)]    # self-match only (synthetic vectors)
-
-
-def test_knn_join_arrow_matches_jvm(spark, tables):
-    """Multi-query impl='arrow' (BLAS matmul + local pruning) returns the
-    same rounded (query, rank) assignments as the JVM window path."""
-    from server2_vector_search_server_spark.operators.knn import knn_join
-
-    emb = tables["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"))
-    def rows(df):
-        return sorted((r["query_id"], r["rank"], r["vec_id"], r["score"])
-                      for r in df.select("query_id", "rank", "vec_id",
-                                         "score").collect())
-    jvm = rows(knn_join(queries, emb, k=5))
-    arrow = rows(knn_join(queries, emb, k=5, impl="arrow"))
-    assert jvm == arrow
-
-
 def test_sq8_quantize_error_bound(tables):
     """SQ8 element error <= max|x|/254 per vector (half a quantization step)."""
     from server2_vector_search_server_spark.operators.ann import sq8_quantize
@@ -251,16 +213,29 @@ def test_squared_l2_sql_and_py_twins_bitwise(spark):
         squared_l2, squared_l2_py, squared_l2_sql,
     )
     from server2_vector_search_server_spark.operators.knn import (
-        vectors_literal,
+        exact_score, vector_literal_sql, vectors_literal,
     )
 
     a = [0.1, -1.5e-7, 3.4e38, 1.0 / 3.0, -0.0, 5e-324, 2.0, -1e-200]
     b = [0.3, 7.7e-8, -3.4e38, 2.0 / 3.0, 0.0, -5e-324, 1.999999, 1e-200]
     df = spark.createDataFrame(
         [(a, b)], "a array<double>, b array<double>")
+    # the shared exact score against its frozen Column spec on the same
+    # values, whole and sliced past the 3.4e38 pair so rounding bites;
+    # score_decimals=None is the unrounded score
+    pairs = [(a, "b"), (a, "a"), (a[3:], "slice(b, 4, 5)"),
+             (a[:2], "slice(b, 1, 2)")]
+    spec = [F.lit(1.0) - squared_l2(vector_literal(q), F.expr(v))
+            for q, v in pairs]
     row = df.select(
         squared_l2(F.col("a"), F.col("b")).alias("col_form"),
         F.expr(squared_l2_sql("a", "b")).alias("sql_form"),
+        *[F.round(e, 6).alias(f"spec_{i}") for i, e in enumerate(spec)],
+        *[e.alias(f"spec_raw_{i}") for i, e in enumerate(spec)],
+        *[exact_score(vector_literal_sql(q), v).alias(f"shared_{i}")
+          for i, (q, v) in enumerate(pairs)],
+        *[exact_score(vector_literal_sql(q), v, None)
+          .alias(f"shared_raw_{i}") for i, (q, v) in enumerate(pairs)],
     ).first()
     py = squared_l2_py(a, b)
 
@@ -269,6 +244,9 @@ def test_squared_l2_sql_and_py_twins_bitwise(spark):
 
     assert bits(row["col_form"]) == bits(row["sql_form"])
     assert bits(row["col_form"]) == bits(py)
+    for i in range(len(pairs)):
+        assert bits(row[f"shared_{i}"]) == bits(row[f"spec_{i}"]), i
+        assert bits(row[f"shared_raw_{i}"]) == bits(row[f"spec_raw_{i}"]), i
 
     # the nested literal builder round-trips every element exactly
     got = df.select(vectors_literal([a, b]).alias("v")).first()["v"]
@@ -317,3 +295,45 @@ def test_l2_normalize_norm_once_forms_bitwise(spark):
             assert bits(r[f"sql_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
     zero = next(r for r in rows if r["id"] == 1)
     assert zero["col_a"] == [0.0, 0.0, -0.0]        # guarded, not NaN
+
+
+def test_knn_operator_build_py4j_budget(spark, py4j_calls):
+    """Plan-build cost guard: the k-NN operators score through the shared
+    SQL-text exact score, so building each stays within a fixed budget of
+    py4j round trips (measured 126, 126, 219 and 177 calls; a Column-form
+    score costs 177 alone, and these builds took 375-619 calls with it)."""
+    from server2_vector_search_server_spark.operators.ann import (
+        matryoshka_knn,
+        sq8_knn,
+    )
+    from server2_vector_search_server_spark.operators.knn import (
+        overfetch_rerank,
+    )
+
+    dim = 16
+    rows = [(i, [float((i * 7 + j) % 23) / 10 for j in range(dim)])
+            for i in range(20)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"))
+    q = rows[3][1]
+    builds = {
+        "overfetch_rerank": (
+            lambda: overfetch_rerank(emb, q, k=3, coarse_dim=8), 150),
+        "matryoshka_knn": (
+            lambda: matryoshka_knn(emb, q, k=3, prefix_dim=8, candidates=6),
+            150),
+        "sq8_knn": (lambda: sq8_knn(emb, q, k=3), 250),
+        "knn_join": (lambda: knn_join(queries, emb, k=3), 200),
+    }
+    calls = {name: py4j_calls(build) for name, (build, _) in builds.items()}
+    assert all(0 < calls[name] <= budget
+               for name, (_, budget) in builds.items()), calls
+    # the budgeted builds are the real ones: the query is its own top hit
+    for name in ("overfetch_rerank", "matryoshka_knn", "sq8_knn"):
+        top = builds[name][0]().first()
+        assert (top["vec_id"], top["score"]) == (3, 1.0), name
+    hits = builds["knn_join"][0]().filter(F.col("rank") == 1).collect()
+    assert sorted((h["query_id"], h["vec_id"]) for h in hits) == \
+        [(0, 0), (1, 1), (2, 2)]
