@@ -44,8 +44,10 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
+    from server2_vector_search_server_spark.operators.knn import (
+        exact_score,
+        vector_literal_sql,
+    )
 
     spark = (SparkSession.builder.master("local[32]")
              .appName("scale26")
@@ -80,30 +82,26 @@ def main() -> None:
     table = spark.read.parquet(path)
     n = table.count()
 
-    q_full = vector_literal(qv)
-    q_pref = vector_literal(list(qv)[:PREFIX])
+    q_full = vector_literal_sql(qv)
+    q_pref = vector_literal_sql(list(qv)[:PREFIX])
 
     def run_full() -> float:
         t0 = time.time()
-        (table.select("vec_id", F.round(
-            F.lit(1.0) - squared_l2(q_full, F.col("embedding")), 6)
-            .alias("score"))
+        (table.select("vec_id",
+                      exact_score(q_full, "embedding").alias("score"))
          .orderBy(F.col("score").desc(), F.col("vec_id").asc())
          .limit(K).collect())
         return round(time.time() - t0, 2)
 
     def run_prefix() -> float:
         t0 = time.time()
-        cand = (table.select("vec_id", F.round(
-            F.lit(1.0) - squared_l2(q_pref, F.col("prefix")), 6)
-            .alias("score_prefix"))
+        cand = (table.select("vec_id", exact_score(q_pref, "prefix")
+                             .alias("score_prefix"))
             .orderBy(F.col("score_prefix").desc(), F.col("vec_id").asc())
             .limit(CAND).collect())
         ids = [r["vec_id"] for r in cand]
         (table.filter(F.col("vec_id").isin(ids))
-         .select("vec_id", F.round(
-             F.lit(1.0) - squared_l2(q_full, F.col("embedding")), 6)
-             .alias("score"))
+         .select("vec_id", exact_score(q_full, "embedding").alias("score"))
          .orderBy(F.col("score").desc(), F.col("vec_id").asc())
          .limit(K).collect())
         return round(time.time() - t0, 2)

@@ -28,11 +28,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
     from server2_vector_search_server_spark.operators.ann import (
         sign_pack_words,
     )
-    from server2_vector_search_server_spark.operators.knn import vector_literal
+    from server2_vector_search_server_spark.operators.knn import (
+        exact_score,
+        vector_literal_sql,
+    )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = (SparkSession.builder.master("local[32]")
@@ -73,9 +75,8 @@ def main() -> None:
 
     def run_float() -> float:
         t0 = time.time()
-        (table.select("vec_id", F.round(
-            F.lit(1.0) - squared_l2(vector_literal(qv),
-                                    F.col("embedding")), 6).alias("s"))
+        (table.select("vec_id", exact_score(vector_literal_sql(qv),
+                                            "embedding").alias("s"))
          .orderBy(F.col("s").desc(), F.col("vec_id").asc())
          .limit(25).collect())
         return round(time.time() - t0, 2)

@@ -30,9 +30,11 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
     from server2_vector_search_server_spark.operators import ann
-    from server2_vector_search_server_spark.operators.knn import vector_literal
+    from server2_vector_search_server_spark.operators.knn import (
+        exact_score,
+        vector_literal_sql,
+    )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = (SparkSession.builder.master("local[32]")
@@ -76,9 +78,7 @@ def main() -> None:
         filt = corpus.filter(F.col("sel_key") < thresh)
         n_f = filt.count()
         probe_s = timed(lambda: filt.count())
-        score = F.round(
-            F.lit(1.0) - squared_l2(vector_literal(qv),
-                                    F.col("embedding")), 6)
+        score = exact_score(vector_literal_sql(qv), "embedding")
         exact_s = timed(lambda: (
             filt.select("vec_id", score.alias("s"))
             .orderBy(F.col("s").desc(), "vec_id").limit(5).collect()))

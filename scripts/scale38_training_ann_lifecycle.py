@@ -43,8 +43,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from server2_vector_search_server_spark.functions.vector import (
-        dot,
-        l2_normalize,
+        dot_sql,
+        l2_normalize_sql,
     )
     from server2_vector_search_server_spark.operators import ann
 
@@ -73,7 +73,7 @@ def main() -> None:
 
     # ---- Part A: hard-negative mining vs anchor count ---------------------
     normed = corpus.select(
-        "vec_id", "label", l2_normalize(F.col("embedding")).alias("nv"))
+        "vec_id", "label", F.expr(l2_normalize_sql("embedding")).alias("nv"))
     results_a = []
     for n_anchors in ANCHOR_COUNTS:
         anchors = (normed.filter(F.col("vec_id") % (n // n_anchors) == 0)
@@ -86,8 +86,8 @@ def main() -> None:
         scored = (normed.join(
             F.broadcast(anchors),
             F.col("label") != F.col("anchor_label"))
-            .withColumn("cosine", F.round(
-                dot(F.col("anchor_nv"), F.col("nv")), 6)))
+            .withColumn("cosine", F.expr(
+                f"round({dot_sql('anchor_nv', 'nv')}, 6)")))
         w = Window.partitionBy("anchor_id").orderBy(
             F.col("cosine").desc(), F.col("vec_id").asc())
         out = (scored.withColumn("rnk", F.row_number().over(w))

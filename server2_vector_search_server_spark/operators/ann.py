@@ -41,11 +41,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark.functions.vector import (
-    dot_sql, squared_l2_py, squared_l2_sql,
+    cosine_sql, dot_sql, squared_l2_py, squared_l2_sql,
 )
 from server2_vector_search_server_spark.operators.knn import (
     exact_score, knn_topk, score_sql, top_k, top_k_per_query,
-    vector_literal_sql, vectors_literal, vectors_literal_sql,
+    vector_literal_sql, vectors_literal_sql,
 )
 
 
@@ -123,9 +123,9 @@ def _nearest_cells(cent_rows, vec, n, centroid_id_col, centroid_vec_col):
         squared_l2_py(vec, r[centroid_vec_col]), r[centroid_id_col]))[:n]
 
 
-def codebook_transport(vectors: DataFrame, cent_rows, *,
-                       centroid_id_col: str = "centroid_id",
-                       centroid_vec_col: str = "centroid"):
+def codebook_transport_sql(vectors: DataFrame, cent_rows, *,
+                           centroid_id_col: str = "centroid_id",
+                           centroid_vec_col: str = "centroid"):
     """Attach a driver-small codebook to ``vectors``, picking the cheaper
     transport by size (measured in SCALE.md §32):
 
@@ -139,40 +139,12 @@ def codebook_transport(vectors: DataFrame, cent_rows, *,
 
     Arithmetic downstream is bit-identical either way (same doubles, same
     op order). ``cent_rows`` must be sorted by centroid id. Returns
-    ``(paired_df, vecs_arr, ids_arr)``: callers build their distance
-    expressions over the two array columns and, if ``paired_df`` is not
+    ``(paired_df, vecs_sql, ids_sql)``, SQL TEXT for the two codebook
+    arrays: callers build their whole distance/ranking expression as ONE
+    ``F.expr`` parse (r11: the Column form paid 2-3 HOF lambdas, ~40 py4j
+    round trips each, per call site) and, if ``paired_df`` is not
     ``vectors``, drop ``_cb_ids``/``_cb_vecs`` when done.
     """
-    cent_ids = [r[centroid_id_col] for r in cent_rows]
-    dim = len(cent_rows[0][centroid_vec_col]) if cent_rows else 0
-    if len(cent_rows) * dim <= CODEBOOK_LIT_MAX_ELEMENTS:
-        # r11: both literal arrays in ONE expr parse each — the
-        # per-element/per-vector form cost n_cent·(dim+1) py4j round
-        # trips per plan build (the vector_literal r10 lesson applied to
-        # the nested case; values identical via exact float repr)
-        vecs_arr = vectors_literal([r[centroid_vec_col] for r in cent_rows])
-        ids_arr = F.expr(
-            "array(" + ",".join(f"{int(c)}L" for c in cent_ids) + ")")
-        return vectors, vecs_arr, ids_arr
-    if not all(isinstance(c, int) for c in cent_ids):
-        raise ValueError("codebook_transport expects integer centroid ids "
-                         f"(got {type(cent_ids[0]).__name__})")
-    cb = vectors.sparkSession.createDataFrame(
-        [(list(map(int, cent_ids)),
-          [[float(x) for x in r[centroid_vec_col]] for r in cent_rows])],
-        "_cb_ids array<bigint>, _cb_vecs array<array<double>>")
-    paired = vectors.crossJoin(F.broadcast(cb))
-    return paired, F.col("_cb_vecs"), F.col("_cb_ids")
-
-
-def codebook_transport_sql(vectors: DataFrame, cent_rows, *,
-                           centroid_id_col: str = "centroid_id",
-                           centroid_vec_col: str = "centroid"):
-    """:func:`codebook_transport` returning SQL TEXT for the two codebook
-    arrays instead of Columns (r11): hot callers build their whole
-    distance/ranking expression as ONE ``F.expr`` parse, where the Column
-    form paid 2-3 HOF lambdas (~40 py4j round trips each) per call site.
-    Same size-based transport split, same values either way."""
     cent_ids = [r[centroid_id_col] for r in cent_rows]
     dim = len(cent_rows[0][centroid_vec_col]) if cent_rows else 0
     if len(cent_rows) * dim <= CODEBOOK_LIT_MAX_ELEMENTS:
@@ -181,8 +153,8 @@ def codebook_transport_sql(vectors: DataFrame, cent_rows, *,
         ids_sql = "array(" + ",".join(f"{int(c)}L" for c in cent_ids) + ")"
         return vectors, vecs_sql, ids_sql
     if not all(isinstance(c, int) for c in cent_ids):
-        raise ValueError("codebook_transport expects integer centroid ids "
-                         f"(got {type(cent_ids[0]).__name__})")
+        raise ValueError("codebook_transport_sql expects integer centroid "
+                         f"ids (got {type(cent_ids[0]).__name__})")
     cb = vectors.sparkSession.createDataFrame(
         [(list(map(int, cent_ids)),
           [[float(x) for x in r[centroid_vec_col]] for r in cent_rows])],
@@ -199,10 +171,10 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, *,
     step: at scale, write the corpus partitioned/bucketed by ``centroid_id``.
 
     Centroids are collected (they must be driver-small — this IS the coarse
-    quantizer) and attached via :func:`codebook_transport`, so assignment is
-    a narrow argmin projection: zero shuffles, zero row blow-up (the big-
-    codebook transport adds one single-row broadcast). The old
-    crossJoin(broadcast of the centroid TABLE) + row_number window
+    quantizer) and attached via :func:`codebook_transport_sql`, so
+    assignment is a narrow argmin projection: zero shuffles, zero row
+    blow-up (the big-codebook transport adds one single-row broadcast).
+    The old crossJoin(broadcast of the centroid TABLE) + row_number window
     multiplied the corpus by n_centroids and shuffled it back down —
     measured 27.5 s vs 8.5 s for 200k×64 against 64 centroids (SCALE.md).
     Tie-break matches the window form: lowest centroid id among equal
@@ -339,12 +311,10 @@ def sq8_quantize(vectors: DataFrame, *, vec_col: str = "embedding",
     and DuckDB contract — never Python ``round``), so quantized scores are
     DuckDB-oracle-checkable bit-for-bit.
     """
-    absmax = F.array_max(F.transform(F.col(vec_col),
-                                     lambda x: F.abs(x.cast("double"))))
-    scale = F.lit(127.0) / F.greatest(absmax, F.lit(1e-30))
-    qvec = F.transform(F.col(vec_col),
-                       lambda x: F.round(x.cast("double") * scale)
-                       .cast("tinyint"))
+    absmax = f"array_max(transform(`{vec_col}`, x -> abs(CAST(x AS DOUBLE))))"
+    scale = F.expr(f"127.0D / greatest({absmax}, 1e-30D)")
+    qvec = F.expr(f"transform(`{vec_col}`, x -> CAST(round("
+                  f"CAST(x AS DOUBLE) * `{scale_col}`) AS TINYINT))")
     return (vectors.withColumn(scale_col, scale)
             .withColumn(qvec_col, qvec))
 
@@ -1245,19 +1215,14 @@ def facility_location_select(universe: DataFrame, pool: DataFrame, k: int, *,
     marginal coverage gain, and coverage_micro, total coverage after the
     pick; gains are non-increasing by submodularity, which the caller can
     assert)."""
-    from server2_vector_search_server_spark.functions.vector import (
-        cosine_similarity,
-    )
-
     spark = universe.sparkSession
     factor = 10 ** score_decimals
     u = universe.select(F.col(id_col).alias("_v"),
                         F.col(vec_col).alias("_uvec"))
     p = pool.select(F.col(id_col).alias("_c"),
                     F.col(vec_col).alias("_pvec"))
-    sim = F.round(F.greatest(
-        cosine_similarity(F.col("_uvec"), F.col("_pvec")),
-        F.lit(0.0)), score_decimals)
+    sim = F.expr(f"round(greatest({cosine_sql('_uvec', '_pvec')}, 0.0D), "
+                 f"{int(score_decimals)})")
     sims = (u.crossJoin(F.broadcast(p))
             .select("_c", "_v",
                     F.round(sim * factor).cast("long").alias("_s"))

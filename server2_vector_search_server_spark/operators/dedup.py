@@ -31,9 +31,8 @@ from server2_vector_search_server_spark.functions.text import (
     word_shingles,
 )
 from server2_vector_search_server_spark.functions.vector import (
-    cosine_similarity,  # noqa: F401  (re-exported; used by callers/tests)
-    dot,
-    l2_norm,
+    dot_sql,
+    l2_normalize_sql,
 )
 
 # Deterministic affine permutation parameters for MinHash: h_j(x) =
@@ -113,7 +112,7 @@ def _long_lits(vals) -> Column:
     ``F.array(*[F.lit(v).cast("long")...])`` form pays a py4j round trip
     per element, and the signature builders call this with 62-slot bit
     tables per plan build (r10: the same driver-side build-time tax
-    ``operators/knn.vector_literal`` documents)."""
+    ``operators/knn.vector_literal_sql`` documents)."""
     body = ",".join(f"{int(v)}L" for v in vals)
     return F.expr(f"array({body})")
 
@@ -646,7 +645,7 @@ def cosine_near_duplicates(vectors: DataFrame, *, vec_col: str = "embedding",
     Vectors are L2-normalized ONCE per row (materialized via
     localCheckpoint, so Catalyst cannot inline the norm back into the join
     condition), making the per-pair work a single dot product. The naive
-    form — ``cosine_similarity`` inside the pair filter — recomputes BOTH
+    form — ``cosine_sql`` inside the pair filter — recomputes BOTH
     norms per pair because the predicate gets pushed into the cross-join
     condition: 4 extra array aggregates × O(n²) pairs. localCheckpoint, not
     persist: a persist() with no unpersist() pins cached storage across
@@ -667,22 +666,17 @@ def cosine_near_duplicates(vectors: DataFrame, *, vec_col: str = "embedding",
     80k pairs: eager/narrow 1.34 s, eager/repartitioned 0.94 s,
     lazy/repartitioned 0.77 s median."""
     v = vectors if max_id is None else vectors.filter(F.col(id_col) < max_id)
-    vec = F.col(vec_col)
-    norm = l2_norm(vec)
     # zero-norm guard: all-zero vector stays all-zero (cosine 0 vs anything)
-    denom = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
     normalized = (
         _widen(v.select(F.col(id_col),
-                        F.transform(vec, lambda x: x.cast("double") / denom)
-                        .alias("_nv")))
+                        F.expr(l2_normalize_sql(f"`{vec_col}`")).alias("_nv")))
         .localCheckpoint(eager=False)
     )
     a = normalized.select(F.col(id_col).alias("id_a"), F.col("_nv").alias("n_a"))
     b = normalized.select(F.col(id_col).alias("id_b"), F.col("_nv").alias("n_b"))
     return (
         a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine",
-                    F.round(dot(F.col("n_a"), F.col("n_b")), 6))
+        .withColumn("cosine", F.expr(f"round({dot_sql('n_a', 'n_b')}, 6)"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -726,7 +720,7 @@ def cosine_lsh_near_duplicates(vectors: DataFrame,
         # re-shipped them via createDataFrame, one extra driver-blocking
         # job plus two pickle round trips per call for plan-constant data.
         # Values are identical: float32→double widening is exact on both
-        # routes, and the downstream dot() casts to double either way.
+        # routes, and the downstream dot_sql casts to double either way.
         planes = hyperplanes
     else:
         if len(hyperplanes) < need:
@@ -736,9 +730,6 @@ def cosine_lsh_near_duplicates(vectors: DataFrame,
             [(i, [float(x) for x in h])
              for i, h in enumerate(hyperplanes[:need])],
             "plane_idx int, plane array<double>")
-    vec = F.col(vec_col)
-    norm = l2_norm(vec)
-    denom = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
     # NO localCheckpoint here, deliberately — twice-over lineage recompute
     # is cheap (norms are a narrow projection; candidates come from HASH
     # joins, so unlike the exact crossJoin twin Catalyst cannot push the
@@ -748,7 +739,7 @@ def cosine_lsh_near_duplicates(vectors: DataFrame,
     # inputs outside the operator instead.
     normalized = _widen(vectors.select(
         F.col(id_col).alias("id"),
-        F.transform(vec, lambda x: x.cast("double") / denom).alias("_nv"),
+        F.expr(l2_normalize_sql(f"`{vec_col}`")).alias("_nv"),
     ))
     # sign bit per (vector, hyperplane): dot of COLUMN arrays — same
     # zip_with/aggregate fold order as the literal form, so the oracle's
@@ -759,13 +750,14 @@ def cosine_lsh_near_duplicates(vectors: DataFrame,
     # cosine_near_duplicates documents); one tiny pre-shuffle of the raw
     # vectors buys full-width map-side dot computation
     par = vectors.sparkSession.sparkContext.defaultParallelism
-    raw = (vectors.select(F.col(id_col).alias("id"), vec.alias("_v"))
+    raw = (vectors.select(F.col(id_col).alias("id"),
+                          F.col(vec_col).alias("_v"))
            .repartition(par))
     buckets = (raw.join(F.broadcast(planes))
                .select("id",
                        F.floor(F.col("plane_idx") / bits).cast("int")
                        .alias("tbl"),
-                       F.when(dot(F.col("_v"), F.col("plane")) > 0,
+                       F.when(F.expr(f"{dot_sql('_v', 'plane')} > 0"),
                               F.expr(f"shiftleft(1L, int(plane_idx "
                                      f"% {bits}))"))
                        .otherwise(F.lit(0).cast("long")).alias("_bit"))
@@ -779,7 +771,7 @@ def cosine_lsh_near_duplicates(vectors: DataFrame,
     a = normalized.select(F.col("id").alias("id_a"), F.col("_nv").alias("n_a"))
     b = normalized.select(F.col("id").alias("id_b"), F.col("_nv").alias("n_b"))
     return (cand.join(a, "id_a").join(b, "id_b")
-            .withColumn("cosine", F.round(dot(F.col("n_a"), F.col("n_b")), 6))
+            .withColumn("cosine", F.expr(f"round({dot_sql('n_a', 'n_b')}, 6)"))
             .filter(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine"))
 
@@ -821,12 +813,9 @@ def semantic_dedup(vectors: DataFrame, centroids: DataFrame, *,
     from server2_vector_search_server_spark.operators.ann import ivf_assign
 
     def _normalize(df, col_name, out):
-        vec = F.col(col_name)
-        norm = l2_norm(vec)
-        denom = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
         return df.select(
             *[c for c in df.columns if c != col_name],
-            F.transform(vec, lambda x: x.cast("double") / denom).alias(out))
+            F.expr(l2_normalize_sql(f"`{col_name}`")).alias(out))
 
     # both sides normalized: assignment runs on the unit sphere, where
     # squared-L2 argmin == cosine argmax (the spherical k-means geometry)
@@ -844,14 +833,10 @@ def semantic_dedup(vectors: DataFrame, centroids: DataFrame, *,
     # member j is dropped iff some member before it in the id-sorted array
     # (exactly the lower ids — ids are unique) has cosine >= threshold;
     # same dot operand order as the old a-then-b join form
-    verdicts = F.transform(
-        F.col("_ms"),
-        lambda m, j: F.struct(
-            m["_id"].alias("_id"),
-            F.exists(
-                F.slice(F.col("_ms"), F.lit(1), j),
-                lambda a: F.round(dot(a["_nv"], m["_nv"]), 6)
-                >= F.lit(float(threshold))).alias("_dropped")))
+    verdicts = F.expr(
+        f"transform(_ms, (m, j) -> named_struct('_id', m._id, '_dropped', "
+        f"exists(slice(_ms, 1, j), a -> "
+        f"round({dot_sql('a._nv', 'm._nv')}, 6) >= {float(threshold)!r}D)))")
     return (grouped.select(centroid_id_col,
                            F.explode(verdicts).alias("_v"))
             .select(F.col("_v._id").alias(id_col),
@@ -953,7 +938,7 @@ def build_bloom(corpus: DataFrame, key_col: str, *,
     repeats executor-side, so at most m/64 (index, word) rows ever cross the
     wire or reach the driver — the corpus itself is scanned once and never
     shuffled. The filter rides to probes as a broadcast row (same transport
-    pattern as ann.codebook_transport), never as a giant literal.
+    pattern as ann.codebook_transport_sql), never as a giant literal.
     """
     n_words = (n_bits + 63) // 64
     rows = (

@@ -504,7 +504,9 @@ def knn_graph(vectors: DataFrame, k: int = 2, *,
     same downstream graph shape, shuffle ∝ n·cell_size instead of n²."""
     from pyspark.sql import Window
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
+    from server2_vector_search_server_spark.functions.vector import (
+        squared_l2_sql,
+    )
 
     n = vectors.count()
     if n > max_rows:
@@ -518,8 +520,8 @@ def knn_graph(vectors: DataFrame, k: int = 2, *,
     b = vectors.select(F.col(id_col).alias("_dst"),
                        F.col(vec_col).alias("_vb"))
     pairs = (a.crossJoin(b).filter(F.col("_src") != F.col("_dst"))
-             .withColumn("_d", F.round(squared_l2(F.col("_va"),
-                                                  F.col("_vb")), 6))
+             .withColumn("_d", F.expr(
+                 f"round({squared_l2_sql('_va', '_vb')}, 6)"))
              .select("_src", "_dst", "_d"))
     w = Window.partitionBy("_src").orderBy(F.col("_d").asc(),
                                            F.col("_dst").asc())
@@ -621,8 +623,10 @@ def beam_search_knn(
     scores round to ``score_decimals``, all ranks tie-break on id, so the
     walk is reproducible and oracle-checkable hop for hop.
     """
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
+    from server2_vector_search_server_spark.operators.knn import (
+        exact_score,
+        vector_literal_sql,
+    )
 
     # materialize the graph ONCE: the walk references it every hop, and an
     # unmaterialized construction lineage would re-execute per hop (measured
@@ -631,9 +635,8 @@ def beam_search_knn(
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    score = F.round(
-        F.lit(1.0) - squared_l2(vector_literal(query_vec), F.col(vec_col)),
-        score_decimals)
+    score = exact_score(vector_literal_sql(query_vec), f"`{vec_col}`",
+                        score_decimals)
 
     # The walk is inherently sequential and TINY: frontier ≤ beam ids,
     # expansions ≤ beam × degree — the bounded driver state every graph
@@ -683,8 +686,9 @@ def knn_graph_bucketed(
     therefore oracle-checkable, unlike sampled NN-Descent."""
     from pyspark.sql import Window
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
+    from server2_vector_search_server_spark.functions.vector import (
+        squared_l2_sql,
+    )
 
     # nprobe-nearest-cell membership as a NARROW projection: centroids are
     # driver-small literals, per-row (rounded-dist, cid) structs are
@@ -694,13 +698,13 @@ def knn_graph_bucketed(
     # it back down (SCALE.md §13's ivf_assign lesson; re-measured here:
     # the 40k×512-cell build spent minutes in that window alone).
     # CRITICAL shape: ONE transform over the codebook arrays (literal or
-    # single broadcast row, size-picked by ann.codebook_transport) — NOT
-    # n_cells separate struct subtrees (that form blows the expression
+    # single broadcast row, size-picked by ann.codebook_transport_sql) —
+    # NOT n_cells separate struct subtrees (that form blows the expression
     # tree out of codegen and evaluated 512 independent aggregates per
     # row; measured minutes vs seconds at 40k×512), and at 512×64 the
     # nested-literal build itself costs ~20 s of Py4J (SCALE.md §32).
     from server2_vector_search_server_spark.operators.ann import (
-        codebook_transport,
+        codebook_transport_sql,
     )
 
     cent_rows = sorted(centroids.collect(),
@@ -711,13 +715,13 @@ def knn_graph_bucketed(
     # 512×64 doubles ≈ 10 GB of shuffle; measured +25 s on this build).
     n_parts = vectors.sparkSession.sparkContext.defaultParallelism
     spread = vectors.repartition(n_parts, F.col(id_col))
-    paired, vecs_arr, ids_arr = codebook_transport(
+    paired, vecs_sql, ids_sql = codebook_transport_sql(
         spread, cent_rows, centroid_id_col=centroid_id_col,
         centroid_vec_col=centroid_vec_col)
-    dists = F.transform(
-        vecs_arr, lambda c: F.round(squared_l2(c, F.col(vec_col)), 6))
-    cell_structs = F.zip_with(
-        dists, ids_arr, lambda d, i: F.struct(d.alias("d"), i.alias("cid")))
+    cell_structs = F.expr(
+        f"zip_with(transform({vecs_sql}, "
+        f"c -> round({squared_l2_sql('c', f'`{vec_col}`')}, 6)), "
+        f"{ids_sql}, (d, i) -> named_struct('d', d, 'cid', i))")
     # (cid, id) ONLY — the vector payload is re-joined per unique pair
     # later, never carried through the membership/pair shuffles. The
     # projection is the CPU-heavy step (higher-order functions evaluate
@@ -749,9 +753,8 @@ def knn_graph_bucketed(
     vb = vectors.select(F.col(id_col).alias("_dst"),
                         F.col(vec_col).alias("_vb"))
     scored = (pairs.join(va, "_src").join(vb, "_dst")
-              .select("_src", "_dst",
-                      F.round(squared_l2(F.col("_va"), F.col("_vb")), 6)
-                      .alias("_d")))
+              .select("_src", "_dst", F.expr(
+                  f"round({squared_l2_sql('_va', '_vb')}, 6)").alias("_d")))
     w = Window.partitionBy("_src").orderBy(F.col("_d").asc(),
                                            F.col("_dst").asc())
     nn = (scored.withColumn("_rn", F.row_number().over(w))

@@ -44,40 +44,30 @@ from server2_vector_search_server_spark.functions.filters import apply_where
 from server2_vector_search_server_spark.functions.vector import squared_l2_sql
 
 
-def vector_literal(vec: Sequence[float]) -> Column:
-    """A query vector as a literal array column (broadcast in the plan —
-    the Spark analog of the reference embedding the query once driver-side,
-    ``vector_store.py:32``).
+def vector_literal_sql(vec: Sequence[float]) -> str:
+    """SQL text of a query vector as a literal ``array<double>`` (broadcast
+    in the plan — the Spark analog of the reference embedding the query
+    once driver-side, ``vector_store.py:32``), for embedding in larger
+    one-string expressions such as :func:`exact_score`.
 
-    r10: ONE ``F.expr`` call building the whole array on the JVM — the old
-    per-element ``F.lit`` form cost dim+1 py4j round trips per vector
-    (and ``F.lit(list)`` pays the same: pyspark expands it element-wise),
-    and the ANN pillars build dozens of these per query (4 codebooks × 8
-    codewords at PQ alone): profiled 1.3–2.4 s of driver-side plan BUILD
-    time per ``pq_knn`` call, before Spark ever saw the plan. ``repr`` of
+    r10: ONE string parsed on the JVM — the old per-element ``F.lit``
+    form cost dim+1 py4j round trips per vector (and ``F.lit(list)``
+    pays the same: pyspark expands it element-wise), and the ANN pillars
+    build dozens of these per query (4 codebooks × 8 codewords at PQ
+    alone): profiled 1.3–2.4 s of driver-side plan BUILD time per
+    ``pq_knn`` call, before Spark ever saw the plan. ``repr`` of
     a Python float is the shortest round-tripping decimal and Spark's
     ``D``-suffixed literal parses it back to the identical double, so the
     constant array is value-identical to the per-lit form."""
-    return F.expr(vector_literal_sql(vec))
-
-
-def vector_literal_sql(vec: Sequence[float]) -> str:
-    """SQL text of :func:`vector_literal`, for embedding in larger
-    one-string expressions."""
     return "array(" + ",".join(f"{float(x)!r}D" for x in vec) + ")"
 
 
 def vectors_literal_sql(vecs: Sequence[Sequence[float]]) -> str:
     """SQL text for a literal ``array<array<double>>`` (a whole codebook):
-    the nested-array analog of :func:`vector_literal`, emitted as ONE
+    the nested-array analog of :func:`vector_literal_sql`, emitted as ONE
     string so a K-codeword book costs one ``F.expr`` parse instead of K+1
     py4j round trips (r11; same exact-repr round-trip argument)."""
     return "array(" + ",".join(vector_literal_sql(v) for v in vecs) + ")"
-
-
-def vectors_literal(vecs: Sequence[Sequence[float]]) -> Column:
-    """:func:`vectors_literal_sql` as a Column."""
-    return F.expr(vectors_literal_sql(vecs))
 
 
 def _resolve_k(k: int) -> int:
@@ -103,10 +93,11 @@ def exact_score(query_sql: str, vec_sql: str,
     ``F.expr``. Both sides are SQL text: a literal from
     :func:`vector_literal_sql` or a (backquoted) column or array
     expression, so single-query and batch operators share it. The text is
-    the expression tree the Column form
-    ``F.round(F.lit(1.0) - squared_l2(q, v), n)`` builds, so scores are
-    bitwise the same (tests/test_knn.py), at 3 py4j round trips to build
-    instead of 177 for the Column form's three PySpark lambdas (16 dims)."""
+    the expression tree of the retired Column form
+    ``F.round(F.lit(1.0) - squared_l2(q, v), n)``, kept as a frozen spec in
+    tests/test_knn.py, so scores are bitwise the same, at 3 py4j round
+    trips to build instead of 177 for that form's three PySpark lambdas
+    (16 dims)."""
     return F.expr(score_sql(squared_l2_sql(query_sql, vec_sql),
                             score_decimals))
 

@@ -12,13 +12,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from server2_vector_search_server_spark.functions.vector import squared_l2_sql
 from server2_vector_search_server_spark.operators import ann
+from server2_vector_search_server_spark.operators.knn import (
+    exact_score,
+    score_sql,
+    vector_literal_sql,
+    vectors_literal_sql,
+)
 from server2_vector_search_server_spark.plans.registry import (
     scratch_dir,
     state_partitions,
     REGISTRY,
     query,
     sql_dot,
+    sql_l2_norm,
     sql_sq_l2,
     tbl,
 )
@@ -160,12 +168,9 @@ def ann_hyperplane_multiprobe_knn(spark: SparkSession, sf_dir: str) -> DataFrame
 def _exact_topk_ids(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """Exact top-k ids for the canonical query — the truth side of the
     MLlib-tier invariant checks (one bounded brute-force pass)."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
-
     emb = tbl(spark, sf_dir, "embeddings")
-    qv = vector_literal(_vec(spark, sf_dir, _QUERY_ID))
-    s = F.round(F.lit(1.0) - squared_l2(F.col("embedding"), qv), 6)
+    s = exact_score(vector_literal_sql(_vec(spark, sf_dir, _QUERY_ID)),
+                    "embedding")
     return (emb.select("vec_id", s.alias("_s"))
             .orderBy(F.col("_s").desc(), F.col("vec_id").asc())
             .limit(k).select("vec_id"))
@@ -190,8 +195,6 @@ def ann_mllib_brp_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (approxNearestNeighbors reports TRUE distances — only candidate
     generation is approximate); recall@5 vs exact ≥ 0.6 (measured 1.0 at
     both fixture SFs)."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-
     emb = tbl(spark, sf_dir, "embeddings")
     out = (ann.mllib_brp_ann(emb, _vec(spark, sf_dir, _QUERY_ID), k=5)
            .select("vec_id", F.round("distCol", 6).alias("l2_dist"))
@@ -199,9 +202,8 @@ def ann_mllib_brp_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = _exact_topk_ids(spark, sf_dir, 5)
     checked = (out.join(emb.select("vec_id", "embedding"), "vec_id")
                .join(_vec_df(spark, sf_dir), how="cross")
-               .withColumn("_true",
-                           F.round(F.sqrt(squared_l2(F.col("embedding"),
-                                                     F.col("_qv"))), 6)))
+               .withColumn("_true", F.expr(
+                   f"round(sqrt({squared_l2_sql('embedding', '_qv')}), 6)")))
     top1 = out.orderBy("l2_dist", "vec_id").first()
     return checked.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -256,8 +258,6 @@ def ann_mllib_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall over ALL exact pairs ≥ 0.8 (borderline near-threshold pairs
     may legitimately miss buckets). The quadratic truth join is the
     bounded verification primitive, as in dedup_cosine_lsh_quality_eval."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-
     emb = (tbl(spark, sf_dir, "embeddings")
            .filter(F.col("vec_id") < _SJ_N).select("vec_id", "embedding"))
     both = emb.select(
@@ -271,8 +271,8 @@ def ann_mllib_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = both.select(F.col("vec_id").alias("id_b"),
                     F.col("embedding").alias("_eb"))
     exact = (a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("_d", F.sqrt(squared_l2(F.col("_ea"),
-                                                 F.col("_eb"))))
+             .withColumn("_d", F.expr(
+                 f"sqrt({squared_l2_sql('_ea', '_eb')})"))
              .filter(F.col("_d") <= _SJ_THRESHOLD)
              .select("id_a", "id_b").localCheckpoint(eager=True))
     n_exact = exact.count()
@@ -308,8 +308,6 @@ def ann_ivf_kmeans_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe path rescores exactly); recall@5 vs global exact ≥ 0.4
     (measured 0.6 at both fixture SFs — the rest is the nprobe=2 tax the
     SQL-checked ann_ivf_recall_at_k quantifies)."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-
     emb = tbl(spark, sf_dir, "embeddings")
     centroids = ann.ivf_train_kmeans(emb, n_centroids=_N_CENTROIDS)
     out = (ann.ivf_knn(emb, centroids, _vec(spark, sf_dir, _QUERY_ID),
@@ -319,10 +317,7 @@ def ann_ivf_kmeans_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked = (out.join(tbl(spark, sf_dir, "embeddings")
                         .select("vec_id", "embedding"), "vec_id")
                .join(_vec_df(spark, sf_dir), how="cross")
-               .withColumn("_true",
-                           F.round(F.lit(1.0)
-                                   - squared_l2(F.col("embedding"),
-                                                F.col("_qv")), 6)))
+               .withColumn("_true", exact_score("_qv", "embedding")))
     return checked.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.lit(top1["vec_id"] == _QUERY_ID
@@ -887,7 +882,6 @@ def ann_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     rankings. This is the operational loop for tuning nprobe at 100 TB:
     recall is measured on a query sample inside the engine, no export."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import squared_l2
     from server2_vector_search_server_spark.operators.ann import ivf_assign
 
     emb = tbl(spark, sf_dir, "embeddings")
@@ -897,7 +891,7 @@ def ann_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("vec_id").alias("centroid_id"),
                     F.col("embedding").alias("centroid")))
 
-    score = F.round(F.lit(1.0) - squared_l2(F.col("embedding"), F.col("qv")), 6)
+    score = exact_score("qv", "embedding")
     w_q = Window.partitionBy("qid").orderBy(score.desc(),
                                             F.col("vec_id").asc())
     exact = (emb.crossJoin(F.broadcast(q))
@@ -905,7 +899,7 @@ def ann_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("rn") <= _RECALL_K).select("qid", "vec_id"))
 
     w_p = Window.partitionBy("qid").orderBy(
-        squared_l2(F.col("centroid"), F.col("qv")).asc(),
+        F.expr(squared_l2_sql("centroid", "qv")).asc(),
         F.col("centroid_id").asc())
     probes = (cent.crossJoin(F.broadcast(q))
               .withColumn("rn", F.row_number().over(w_p))
@@ -1085,20 +1079,31 @@ _PQ_QDISTS_Q = " + ".join(
 def _recall_parts(spark, sf_dir):
     """(embeddings, broadcastable query set, exact top-K per query)."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import squared_l2
 
     emb = tbl(spark, sf_dir, "embeddings")
     q = (emb.filter(F.col("vec_id").isin(*_RECALL_QIDS))
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
-    score = F.round(F.lit(1.0) - squared_l2(F.col("embedding"),
-                                            F.col("qv")), 6)
+    score = exact_score("qv", "embedding")
     w_q = Window.partitionBy("qid").orderBy(score.desc(),
                                             F.col("vec_id").asc())
     exact = (emb.crossJoin(F.broadcast(q))
              .withColumn("rn", F.row_number().over(w_q))
              .filter(F.col("rn") <= _RECALL_K).select("qid", "vec_id"))
     return emb, q, exact
+
+
+def _pq_qv_score(books: list[list[list[float]]]):
+    """The PQ asymmetric score against the per-query ``qv`` column:
+    ``round(1 − Σ_m table_m[pq_code_m], 6)``, each query→codeword table a
+    ``transform`` over the literal codebook, all in one ``F.expr``."""
+    sub = len(books[0][0])
+    d2 = "0.0D"
+    for m, cbook in enumerate(books):
+        q_slice = f"slice(qv, {m * sub + 1}, {sub})"
+        d2 += (f" + element_at(transform({vectors_literal_sql(cbook)}, "
+               f"c -> {squared_l2_sql('c', q_slice)}), pq_code_{m + 1})")
+    return F.expr(score_sql(d2, 6))
 
 
 def _recall_result(q, exact, tier):
@@ -1142,13 +1147,11 @@ def ann_sq8_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the exact ranking. The measured number is the whole point of the
     tier: how much ranking quality the 4x scan compression costs."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import squared_l2
 
     emb, q, exact = _recall_parts(spark, sf_dir)
     quant = ann.sq8_quantize(emb)
-    dequant = F.transform(F.col("qvec"),
-                          lambda x: x.cast("double") / F.col("sq8_scale"))
-    s8 = F.round(F.lit(1.0) - squared_l2(dequant, F.col("qv")), 6)
+    s8 = exact_score(
+        "qv", "transform(qvec, x -> CAST(x AS DOUBLE) / sq8_scale)")
     w = Window.partitionBy("qid").orderBy(s8.desc(), F.col("vec_id").asc())
     tier = (quant.crossJoin(F.broadcast(q))
             .withColumn("rn", F.row_number().over(w))
@@ -1185,12 +1188,10 @@ def ann_matryoshka_recall_at_k(spark: SparkSession,
     rescored top-k to approach exact. Same single-scan shape as the other
     recall tiers."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import squared_l2
 
     emb, q, exact = _recall_parts(spark, sf_dir)
-    sp = F.round(F.lit(1.0) - squared_l2(
-        F.slice(F.col("embedding"), 1, _MRL_PREFIX),
-        F.slice(F.col("qv"), 1, _MRL_PREFIX)), 6)
+    sp = exact_score(f"slice(qv, 1, {_MRL_PREFIX})",
+                     f"slice(embedding, 1, {_MRL_PREFIX})")
     w = Window.partitionBy("qid").orderBy(sp.desc(), F.col("vec_id").asc())
     tier = (emb.crossJoin(F.broadcast(q))
             .withColumn("rn", F.row_number().over(w))
@@ -1279,24 +1280,11 @@ def ann_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     at serving scale the batched path precomputes the q x K x M distance
     table (as ivf_knn_batch does for probes) instead."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import (
-        squared_l2,
-    )
-    from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
-    )
 
     emb, q, exact = _recall_parts(spark, sf_dir)
     books = ann.pq_codebooks(emb, _PQ_M, _PQ_K)
-    sub = len(books[0][0])
     encoded = ann.pq_encode(emb, books)
-    approx = F.lit(0.0)
-    for m, cbook in enumerate(books):
-        cw_lit = F.array(*[vector_literal(c) for c in cbook])
-        q_slice = F.slice(F.col("qv"), m * sub + 1, sub)
-        qdists = F.transform(cw_lit, lambda c: squared_l2(c, q_slice))
-        approx = approx + F.element_at(qdists, F.col(f"pq_code_{m + 1}"))
-    sp = F.round(F.lit(1.0) - approx, 6)
+    sp = _pq_qv_score(books)
     w = Window.partitionBy("qid").orderBy(sp.desc(), F.col("vec_id").asc())
     tier = (encoded.crossJoin(F.broadcast(q))
             .withColumn("rn", F.row_number().over(w))
@@ -1358,37 +1346,24 @@ def ann_ivf_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_ivf_recall_at_k it isolates the PQ ranking loss — the decomposition
     you tune against at 100 TB before touching nprobe or M."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import (
-        squared_l2,
-    )
-    from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
-    )
 
     emb, q, exact = _recall_parts(spark, sf_dir)
     cent = (emb.filter(F.col("vec_id") < _N_CENTROIDS)
             .select(F.col("vec_id").alias("centroid_id"),
                     F.col("embedding").alias("centroid")))
     w_p = Window.partitionBy("qid").orderBy(
-        squared_l2(F.col("centroid"), F.col("qv")).asc(),
+        F.expr(squared_l2_sql("centroid", "qv")).asc(),
         F.col("centroid_id").asc())
     probes = (cent.crossJoin(F.broadcast(q))
               .withColumn("rn", F.row_number().over(w_p))
               .filter(F.col("rn") <= _NPROBE).select("qid", "centroid_id"))
 
     books = ann.pq_codebooks(emb, _PQ_M, _PQ_K)
-    sub = len(books[0][0])
     codes = ann.pq_encode(emb, books).select(
         "vec_id", *[f"pq_code_{m + 1}" for m in range(_PQ_M)])
     assigned = ann.ivf_assign(emb, cent).select("vec_id", "centroid_id")
 
-    approx = F.lit(0.0)
-    for m, cbook in enumerate(books):
-        cw_lit = F.array(*[vector_literal(c) for c in cbook])
-        q_slice = F.slice(F.col("qv"), m * sub + 1, sub)
-        qdists = F.transform(cw_lit, lambda c: squared_l2(c, q_slice))
-        approx = approx + F.element_at(qdists, F.col(f"pq_code_{m + 1}"))
-    sp = F.round(F.lit(1.0) - approx, 6)
+    sp = _pq_qv_score(books)
     w = Window.partitionBy("qid").orderBy(sp.desc(), F.col("vec_id").asc())
     tier = (assigned.join(F.broadcast(probes), "centroid_id")
             .join(codes, "vec_id")
@@ -1434,24 +1409,11 @@ def pq_kmeans_recall_per_query(spark: SparkSession,
     ``ann_pq_kmeans_recall_at_k`` bounds; tests compare it to the
     slice-codebook twin directly)."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import (
-        squared_l2,
-    )
-    from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
-    )
 
     emb, q, exact = _recall_parts(spark, sf_dir)
     books = ann.pq_codebooks_kmeans(emb, _PQ_M, _PQ_K)
-    sub = len(books[0][0])
     encoded = ann.pq_encode(emb, books)
-    approx = F.lit(0.0)
-    for m, cbook in enumerate(books):
-        cw_lit = F.array(*[vector_literal(c) for c in cbook])
-        q_slice = F.slice(F.col("qv"), m * sub + 1, sub)
-        qdists = F.transform(cw_lit, lambda c: squared_l2(c, q_slice))
-        approx = approx + F.element_at(qdists, F.col(f"pq_code_{m + 1}"))
-    sp = F.round(F.lit(1.0) - approx, 6)
+    sp = _pq_qv_score(books)
     w = Window.partitionBy("qid").orderBy(sp.desc(), F.col("vec_id").asc())
     tier = (encoded.crossJoin(F.broadcast(q))
             .withColumn("rn", F.row_number().over(w))
@@ -1710,11 +1672,6 @@ def ann_ivf_pq_residual_recall_at_k(spark: SparkSession,
     same 0.1–0.2; SCALE.md §1a's uniform-vectors lesson). On clustered
     real embeddings the residual lift appears once the probe set contains
     the true neighbors."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
-    )
-
     emb = tbl(spark, sf_dir, "embeddings")
     centroids = (emb.filter(F.col("vec_id") < _N_CENTROIDS)
                  .select(F.col("vec_id").alias("centroid_id"),
@@ -1724,8 +1681,7 @@ def ann_ivf_pq_residual_recall_at_k(spark: SparkSession,
     walk = (ann.ivf_pq_residual_knn(emb, centroids, qv, books,
                                     k=10, nprobe=_NPROBE)
             .select("vec_id"))
-    score = F.round(
-        F.lit(1.0) - squared_l2(vector_literal(qv), F.col("embedding")), 6)
+    score = exact_score(vector_literal_sql(qv), "embedding")
     exact = (emb.select("vec_id", score.alias("score"))
              .orderBy(F.col("score").desc(), F.col("vec_id").asc())
              .limit(10).select("vec_id"))
@@ -1754,17 +1710,12 @@ def _pq_frontier_ranked(spark, sf_dir, max_rank):
     (emb, q, exact, npdf, pq_ranked[nprobe, qid, vec_id, rn])."""
     from pyspark.sql import Window
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
-    )
-
     emb, q, exact = _recall_parts(spark, sf_dir)
     cent = (emb.filter(F.col("vec_id") < _N_CENTROIDS)
             .select(F.col("vec_id").alias("centroid_id"),
                     F.col("embedding").alias("centroid")))
     w_p = Window.partitionBy("qid").orderBy(
-        squared_l2(F.col("centroid"), F.col("qv")).asc(),
+        F.expr(squared_l2_sql("centroid", "qv")).asc(),
         F.col("centroid_id").asc())
     probes_ranked = (cent.crossJoin(F.broadcast(q))
                      .withColumn("rn", F.row_number().over(w_p))
@@ -1777,18 +1728,11 @@ def _pq_frontier_ranked(spark, sf_dir, max_rank):
               .select("nprobe", "qid", "centroid_id"))
 
     books = ann.pq_codebooks(emb, _PQ_M, _PQ_K)
-    sub = len(books[0][0])
     codes = ann.pq_encode(emb, books).select(
         "vec_id", *[f"pq_code_{m + 1}" for m in range(_PQ_M)])
     assigned = ann.ivf_assign(emb, cent).select("vec_id", "centroid_id")
 
-    approx = F.lit(0.0)
-    for m, cbook in enumerate(books):
-        cw_lit = F.array(*[vector_literal(c) for c in cbook])
-        q_slice = F.slice(F.col("qv"), m * sub + 1, sub)
-        qdists = F.transform(cw_lit, lambda c: squared_l2(c, q_slice))
-        approx = approx + F.element_at(qdists, F.col(f"pq_code_{m + 1}"))
-    sp = F.round(F.lit(1.0) - approx, 6)
+    sp = _pq_qv_score(books)
     w = Window.partitionBy("nprobe", "qid").orderBy(
         sp.desc(), F.col("vec_id").asc())
     pq_ranked = (assigned.join(F.broadcast(probes), "centroid_id")
@@ -2001,8 +1945,6 @@ def ann_ivf_pq_rescore_frontier(spark: SparkSession,
     code-bound baseline it improves on."""
     from pyspark.sql import Window
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-
     emb, q, exact, npdf, pq_ranked = _pq_frontier_ranked(
         spark, sf_dir, max(_FRONTIER_CANDS))
     cdf = spark.createDataFrame([(c,) for c in _FRONTIER_CANDS],
@@ -2011,9 +1953,7 @@ def ann_ivf_pq_rescore_frontier(spark: SparkSession,
                                F.col("rn") <= F.col("candidates"))
                 .join(emb.select("vec_id", "embedding"), "vec_id")
                 .join(F.broadcast(q), "qid")
-                .withColumn("s", F.round(
-                    F.lit(1.0) - squared_l2(F.col("embedding"),
-                                            F.col("qv")), 6)))
+                .withColumn("s", exact_score("qv", "embedding")))
     w2 = Window.partitionBy("candidates", "nprobe", "qid").orderBy(
         F.col("s").desc(), F.col("vec_id").asc())
     tier = (rescored.withColumn("rn2", F.row_number().over(w2))
@@ -2289,16 +2229,13 @@ def ann_pca_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0, 1] — a projection regression (dropped centering, truncated to
     noise components) reds the row."""
     from pyspark.sql import Window
-    from server2_vector_search_server_spark.functions.vector import (
-        squared_l2,
-    )
 
     emb, q, exact = _recall_parts(spark, sf_dir)
     comps = _pca_comps(spark, sf_dir)
     red = ann.pca_project(emb, comps, out_col="_red")
     qred = (ann.pca_project(q, comps, vec_col="qv", out_col="_qred")
             .select("qid", "_qred"))
-    sc = F.round(F.lit(1.0) - squared_l2(F.col("_red"), F.col("_qred")), 6)
+    sc = exact_score("_qred", "_red")
     w = Window.partitionBy("qid").orderBy(sc.desc(), F.col("vec_id").asc())
     tier = (red.crossJoin(F.broadcast(qred))
             .withColumn("rn", F.row_number().over(w))
@@ -2435,12 +2372,6 @@ _FL_UNIVERSE = 200     # coverage universe: vec_id < 200
 _FL_K = 5
 
 
-def _fl_norm(a: str) -> str:
-    """DuckDB twin of functions/vector.l2_norm (same op order)."""
-    return (f"sqrt(list_sum(list_transform({a}, "
-            f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))")
-
-
 def _fl_sql() -> str:
     """Unrolled greedy facility-location rounds (the _mmr_sql pattern):
     each pick is an exact-integer argmax; coverage state is recomputed
@@ -2453,11 +2384,11 @@ def _fl_sql() -> str:
     sims AS MATERIALIZED (
       SELECT p.vec_id AS c, u.vec_id AS v,
              CAST(ROUND(GREATEST(
-               CASE WHEN {_fl_norm('u.embedding')}
-                         * {_fl_norm('p.embedding')} = 0.0 THEN 0.0
+               CASE WHEN {sql_l2_norm('u.embedding')}
+                         * {sql_l2_norm('p.embedding')} = 0.0 THEN 0.0
                     ELSE {sql_dot('u.embedding', 'p.embedding')}
-                         / ({_fl_norm('u.embedding')}
-                            * {_fl_norm('p.embedding')}) END, 0.0)
+                         / ({sql_l2_norm('u.embedding')}
+                            * {sql_l2_norm('p.embedding')}) END, 0.0)
                * 1000000) AS BIGINT) AS s
       FROM pool p, univ u)"""]
     sel: list[str] = []

@@ -543,13 +543,13 @@ def graph_beam_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force top-10. A low number here means the entry point / hop
     budget, not the graph, is the binding constraint — the operational
     dial an HNSW deployment tunes (efSearch analog = beam)."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
     from server2_vector_search_server_spark.operators.graph import (
         beam_search_knn,
         knn_graph_bucketed,
     )
     from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
+        exact_score,
+        vector_literal_sql,
     )
 
     emb = tbl(spark, sf_dir, "embeddings")
@@ -562,8 +562,7 @@ def graph_beam_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk = (beam_search_knn(emb, edges, qv, k=_BS_RECALL_K, beam=_BS_BEAM,
                             hops=_BS_HOPS, entry_ids=(0,))
             .select(F.col("vec_id").alias("id")))
-    score = F.round(
-        F.lit(1.0) - squared_l2(vector_literal(qv), F.col("embedding")), 6)
+    score = exact_score(vector_literal_sql(qv), "embedding")
     exact = (emb.select(F.col("vec_id").alias("id"), score.alias("score"))
              .orderBy(F.col("score").desc(), F.col("id").asc())
              .limit(_BS_RECALL_K))

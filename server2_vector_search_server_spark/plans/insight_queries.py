@@ -1203,13 +1203,13 @@ def embedding_procrustes_alignment(spark: SparkSession,
     x_j·y_k) integer micro-unit partials, partial-aggregable into exactly
     d² = 4,096 cells regardless of corpus size; the SVD runs on the driver
     over the d×d matrix (dim-bounded, like the ANN centroid collects); the
-    rotation rides back via ann.codebook_transport (4,096 floats → ONE
+    rotation rides back via ann.codebook_transport_sql (4,096 floats → ONE
     broadcast row, SCALE §32) for a single scan computing alignment error
     as an exact aggregate."""
     import numpy as np
 
     from server2_vector_search_server_spark.operators.ann import (
-        codebook_transport,
+        codebook_transport_sql,
     )
 
     d = _PROC_DIM
@@ -1241,7 +1241,7 @@ def embedding_procrustes_alignment(spark: SparkSession,
 
     rows = [{"centroid_id": j, "centroid": W[j, :].tolist()}
             for j in range(d)]
-    paired, w_rows, _ids = codebook_transport(
+    paired, w_sql, _ids = codebook_transport_sql(
         pairs, rows, centroid_id_col="centroid_id",
         centroid_vec_col="centroid")
     aligned = (
@@ -1249,7 +1249,7 @@ def embedding_procrustes_alignment(spark: SparkSession,
         f"aggregate(sequence(0, {d - 1}), cast(0.0 as double), "
         f"(acc, j) -> acc + element_at(x, j + 1) "
         f"* element_at(element_at(_w, j + 1), k + 1)))")
-    errs = (paired.withColumn("_w", w_rows)
+    errs = (paired.withColumn("_w", F.expr(w_sql))
             .withColumn("_aligned", F.expr(aligned))
             .select(
                 F.expr(f"aggregate(sequence(0, {d - 1}), "
@@ -2638,9 +2638,7 @@ def search_ltr_feature_matrix(spark: SparkSession,
     is a rank-limited window — Q × corpus expansion never materializes
     beyond the window's partial top-k."""
     from server2_vector_search_server_spark.functions.text import tokens
-    from server2_vector_search_server_spark.functions.vector import (
-        similarity_score,
-    )
+    from server2_vector_search_server_spark.operators.knn import exact_score
 
     emb = tbl(spark, sf_dir, "embeddings")
     q = (emb.filter(F.col("vec_id").isin(*_LTR_QUERIES))
@@ -2661,8 +2659,7 @@ def search_ltr_feature_matrix(spark: SparkSession,
           for qid, terms in _LTR_QUERIES.items()])
     feats = (d.crossJoin(F.broadcast(q))
              .select("qid", "doc_id",
-                     F.round(similarity_score(F.col("qv"), F.col("dv")),
-                             6).alias("cosine_score"),
+                     exact_score("qv", "dv").alias("cosine_score"),
                      hits.cast("long").alias("term_hits"),
                      F.col("n_chars").cast("long").alias("n_chars"),
                      F.size("tk").cast("long").alias("n_tokens")))
@@ -3059,7 +3056,7 @@ def ann_ivf_cell_split_rebalance(spark: SparkSession,
     (every vector exactly once), locality (untouched cells keep their
     exact membership), and the split itself."""
     from server2_vector_search_server_spark.functions.vector import (
-        squared_l2,
+        squared_l2_sql,
     )
     from server2_vector_search_server_spark.operators.ann import ivf_assign
 
@@ -3089,8 +3086,7 @@ def ann_ivf_cell_split_rebalance(spark: SparkSession,
                 .select("parent", "scid", "sc"))
     resplit = (hot.join(F.broadcast(seedvecs),
                         hot.cid == F.col("parent"))
-               .withColumn("d", squared_l2(F.col("sc"),
-                                           F.col("embedding"))))
+               .withColumn("d", F.expr(squared_l2_sql("sc", "embedding"))))
     w = Window.partitionBy("vec_id").orderBy("d", "scid")
     reassigned = (resplit.withColumn("_rn", F.row_number().over(w))
                   .filter(F.col("_rn") == 1)

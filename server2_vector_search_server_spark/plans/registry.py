@@ -283,8 +283,9 @@ def state_partitions(spark, n: int = 8):
 # --- shared oracle SQL fragments -------------------------------------------
 
 def sql_sq_l2(a: str, b: str) -> str:
-    """DuckDB squared-L2 mirroring functions/vector.squared_l2's op order:
-    cast each element to DOUBLE, subtract, square via multiplication, sum."""
+    """DuckDB squared-L2 mirroring functions/vector.squared_l2_sql's op
+    order: cast each element to DOUBLE, subtract, square via
+    multiplication, sum."""
     d = f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
     return f"list_sum(list_transform(list_zip({a}, {b}), p -> {d} * {d}))"
 

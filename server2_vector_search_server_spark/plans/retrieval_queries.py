@@ -31,7 +31,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark.functions.text import tokens
-from server2_vector_search_server_spark.functions.vector import dot
+from server2_vector_search_server_spark.functions.vector import dot_sql
+from server2_vector_search_server_spark.operators.knn import (
+    exact_score,
+    vector_literal_sql,
+)
 from server2_vector_search_server_spark.plans.registry import (
     exact_sum,
     query,
@@ -207,18 +211,10 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _query_vec,
     )
 
-    from server2_vector_search_server_spark.functions.vector import (
-        similarity_score,
-    )
-    from server2_vector_search_server_spark.operators.knn import (
-        vector_literal,
-    )
-
     emb = (tbl(spark, sf_dir, "embeddings")
            .filter((F.col("vec_id") != 0) & (F.col("vec_id") < 200)))
     qv = _query_vec(spark, sf_dir, 0)
-    score = F.round(
-        similarity_score(vector_literal(qv), F.col("embedding")), 6)
+    score = exact_score(vector_literal_sql(qv), "embedding")
     vr = emb.select(
         F.col("vec_id").alias("doc_id"),
         F.row_number().over(
@@ -295,7 +291,7 @@ def search_maxsim_late_interaction(spark: SparkSession,
               .select("label", "embedding"))
     pairs = corpus.crossJoin(F.broadcast(q)).select(
         "label", "qid",
-        F.round(dot(F.col("qv"), F.col("embedding")), 6).alias("sim"))
+        F.expr(f"round({dot_sql('qv', 'embedding')}, 6)").alias("sim"))
     mx = pairs.groupBy("label").agg(
         *[F.max(F.when(F.col("qid") == i, F.col("sim")))
           .alias(f"best_{i}") for i in range(3)])
@@ -363,16 +359,11 @@ def search_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed candidates — sequential by nature, bounded by C, and
     bit-identical to the unrolled SQL because every float op is the same
     Spark/DuckDB expression."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import (
-        mmr_rerank,
-        vector_literal,
-    )
+    from server2_vector_search_server_spark.operators.knn import mmr_rerank
 
     emb = tbl(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 42).select("embedding").first()[0]
-    rel = F.round(F.lit(1.0) - squared_l2(vector_literal(qv),
-                                          F.col("embedding")), 6)
+    rel = exact_score(vector_literal_sql(qv), "embedding")
     cand = (emb.select("vec_id", rel.alias("rel"), "embedding")
             .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
             .limit(_MMR_C))
@@ -441,14 +432,9 @@ def search_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded collect (the codebook-transport pattern — dimension-sized,
     never corpus-sized). At 100 TB both passes are single corpus scans
     with a broadcast query vector; the feedback set is top-k tiny."""
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
-    from server2_vector_search_server_spark.plans.registry import exact_sum
-
     emb = tbl(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 42).select("embedding").first()[0]
-    rel = F.round(F.lit(1.0) - squared_l2(F.col("embedding"),
-                                          vector_literal(qv)), 6)
+    rel = exact_score(vector_literal_sql(qv), "embedding")
     top = (emb.select("vec_id", "embedding")
            .orderBy(rel.desc(), F.col("vec_id").asc()).limit(_PRF_K))
     mean = (top.select(F.posexplode("embedding").alias("dim", "x"))
@@ -458,8 +444,7 @@ def search_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
     mvals = {r["dim"]: r["m"] for r in mean.collect()}   # bounded: dim rows
     alpha, beta = float(_PRF_ALPHA), float(_PRF_BETA)
     q2 = [alpha * float(qv[i]) + beta * mvals[i] for i in range(_PRF_DIM)]
-    prf = F.round(F.lit(1.0) - squared_l2(F.col("embedding"),
-                                          vector_literal(q2)), 6)
+    prf = exact_score(vector_literal_sql(q2), "embedding")
     return (emb.select("vec_id", "label", prf.alias("prf_score"))
             .orderBy(F.col("prf_score").desc(), F.col("vec_id").asc())
             .limit(_PRF_FINAL_K))

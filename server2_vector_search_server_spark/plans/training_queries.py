@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark.functions.vector import (
-    dot,
-    l2_normalize,
+    dot_sql,
+    l2_normalize_sql,
 )
 from server2_vector_search_server_spark.plans.registry import (
     scratch_dir,
@@ -59,7 +59,12 @@ _SQL_NORMED = """
 def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tbl(spark, sf_dir, "embeddings")
     return emb.select(
-        "vec_id", "label", l2_normalize(F.col("embedding")).alias("nv"))
+        "vec_id", "label", F.expr(l2_normalize_sql("embedding")).alias("nv"))
+
+
+def _cosine(a: str, b: str):
+    """Cosine of two unit vectors: their dot product, rounded to 6."""
+    return F.expr(f"round({dot_sql(a, b)}, 6)")
 
 
 # ---------------------------------------------------------------------------
@@ -122,8 +127,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (corpus.join(
         F.broadcast(anchors),
         F.col("negative_label") != F.col("anchor_label"))
-        .withColumn("cosine", F.round(
-            dot(F.col("anchor_nv"), F.col("nv")), 6)))
+        .withColumn("cosine", _cosine("anchor_nv", "nv")))
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cosine").desc(), F.col("negative_id").asc())
     return (scored.withColumn("rnk", F.row_number().over(w))
@@ -199,8 +203,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("label").alias("true_label"),
                     F.col("nv").alias("test_nv")))
     scored = (train.crossJoin(F.broadcast(test))
-              .withColumn("cosine", F.round(
-                  dot(F.col("test_nv"), F.col("nv")), 6)))
+              .withColumn("cosine", _cosine("test_nv", "nv")))
     w_nn = Window.partitionBy("test_id").orderBy(
         F.col("cosine").desc(), F.col("train_id").asc())
     votes = (scored.withColumn("rnk", F.row_number().over(w_nn))
@@ -381,7 +384,7 @@ def crosslingual_bitext_candidates(spark: SparkSession,
     emb = tbl(spark, sf_dir, "embeddings")
     normed = (docs.join(emb, docs.doc_id == emb.vec_id)
               .select("doc_id", "lang",
-                      l2_normalize(F.col("embedding")).alias("nv")))
+                      F.expr(l2_normalize_sql("embedding")).alias("nv")))
     anchors = (normed.filter((F.col("lang") == "en")
                              & (F.col("doc_id") < _BT_ANCHORS))
                .select(F.col("doc_id").alias("anchor_id"),
@@ -391,8 +394,7 @@ def crosslingual_bitext_candidates(spark: SparkSession,
              .select(F.col("doc_id").alias("cand_id"),
                      F.col("lang").alias("cand_lang"), "nv"))
     pairs = (cands.crossJoin(F.broadcast(anchors))
-             .withColumn("cosine", F.round(
-                 dot(F.col("anchor_nv"), F.col("nv")), 6))
+             .withColumn("cosine", _cosine("anchor_nv", "nv"))
              .drop("anchor_nv", "nv"))
     micro = F.round(F.col("cosine") * 1000000).cast("long")
     w_a = Window.partitionBy("anchor_id").orderBy(
@@ -495,7 +497,7 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("label").alias("qlabel"),
                  F.col("nv").alias("qnv")))
     w_rank = Window.partitionBy("qid").orderBy(
-        F.round(dot(F.col("nv"), F.col("qnv")), 6).desc(),
+        _cosine("nv", "qnv").desc(),
         F.col("vec_id").asc())
     top = (corpus.crossJoin(F.broadcast(q))
            .withColumn("rnk", F.row_number().over(w_rank))
@@ -569,7 +571,7 @@ def embedding_whitening_zca(spark: SparkSession, sf_dir: str) -> DataFrame:
     as integer micro-units (partial-aggregable; never corpus-sized state);
     the eigendecomposition is d x d on the driver (dim-bounded, like the
     ANN centroid collects); the rotation rides back through
-    ann.codebook_transport for ONE distributed transform pass whose
+    ann.codebook_transport_sql for ONE distributed transform pass whose
     whitened covariance is re-accumulated and checked against the identity
     (max |cov_w - I| < 1e-3). The oracle pins n, the EXACT covariance
     trace from the same micro-unit sums, and the two invariants any
@@ -577,7 +579,7 @@ def embedding_whitening_zca(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from server2_vector_search_server_spark.operators.ann import (
-        codebook_transport,
+        codebook_transport_sql,
     )
 
     d = _ZCA_DIM
@@ -618,7 +620,7 @@ def embedding_whitening_zca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = [{"centroid_id": j, "centroid": W[j, :].tolist()}
             for j in range(d)]
-    paired, w_rows, _ids = codebook_transport(
+    paired, w_sql, _ids = codebook_transport_sql(
         emb, rows, centroid_id_col="centroid_id",
         centroid_vec_col="centroid")
     mu_lit = F.array(*[F.lit(float(v)).cast("double") for v in mu_r])
@@ -629,7 +631,7 @@ def embedding_whitening_zca(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"aggregate(sequence(0, {d - 1}), cast(0.0 as double), "
                 f"(acc, j) -> acc + element_at(_cx, j + 1) "
                 f"* element_at(element_at(_w, j + 1), k + 1)))")
-    ydf = (paired.withColumn("_mu", mu_lit).withColumn("_w", w_rows)
+    ydf = (paired.withColumn("_mu", mu_lit).withColumn("_w", F.expr(w_sql))
            .withColumn("_cx", F.expr(centered))
            .select(F.expr(whitened).alias("y")))
     wcells = (ydf.select(F.posexplode("y").alias("j", "yj"), F.col("y"))
@@ -734,7 +736,7 @@ def search_mrr_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("label").alias("qlabel"),
                  F.col("nv").alias("qnv")))
     w_rank = Window.partitionBy("qid").orderBy(
-        F.round(dot(F.col("nv"), F.col("qnv")), 6).desc(),
+        _cosine("nv", "qnv").desc(),
         F.col("vec_id").asc())
     w_cum = (Window.partitionBy("qid").orderBy("rnk")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))

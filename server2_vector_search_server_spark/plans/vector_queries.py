@@ -16,7 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
-from server2_vector_search_server_spark.operators.knn import knn_join, knn_topk
+from server2_vector_search_server_spark.functions.vector import squared_l2_sql
+from server2_vector_search_server_spark.operators.knn import (
+    exact_score,
+    knn_join,
+    knn_topk,
+    vector_literal_sql,
+)
 from server2_vector_search_server_spark.plans.registry import (
     query,
     sql_score,
@@ -179,13 +185,9 @@ def search_per_collection_topk(spark: SparkSession,
     embeddings fixture."""
     from pyspark.sql import Window
 
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
-
     emb = tbl(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 42).select("embedding").first()[0]
-    score = F.round(F.lit(1.0) - squared_l2(vector_literal(qv),
-                                            F.col("embedding")), 6)
+    score = exact_score(vector_literal_sql(qv), "embedding")
     w = Window.partitionBy("label").orderBy(score.desc(),
                                             F.col("vec_id").asc())
     return (emb.withColumn("score", score)
@@ -355,14 +357,9 @@ def embedding_intrinsic_dim_twonn(spark: SparkSession,
                    F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("d"),
                    F.col("embedding").alias("vb"))
-    from server2_vector_search_server_spark.functions.vector import (
-        squared_l2,
-    )
-
     pairs = (a.crossJoin(b).filter(F.col("s") != F.col("d"))
-             .select("s", "d",
-                     F.round(squared_l2(F.col("va"), F.col("vb")), 6)
-                     .alias("dist")))
+             .select("s", "d", F.expr(
+                 f"round({squared_l2_sql('va', 'vb')}, 6)").alias("dist")))
     w = Window.partitionBy("s").orderBy(F.col("dist").asc(),
                                         F.col("d").asc())
     nn = (pairs.withColumn("rn", F.row_number().over(w))

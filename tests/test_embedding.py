@@ -13,7 +13,7 @@ from server2_vector_search_server_spark.embedding import (
     embed_with_model,
     hash_embedding_expr,
 )
-from server2_vector_search_server_spark.functions.vector import l2_norm
+from server2_vector_search_server_spark.functions.vector import dot_sql
 
 
 def _d(c):
@@ -64,7 +64,7 @@ def texts(spark):
 
 def test_hash_embedding_deterministic_and_normalized(texts):
     out = embed_hash(texts, dim=16).withColumn(
-        "norm", l2_norm(F.col("embedding"))).collect()
+        "norm", F.sqrt(F.expr(dot_sql("embedding", "embedding")))).collect()
     by_id = {r["id"]: r for r in out}
     # determinism: same text → identical vector
     assert by_id[1]["embedding"] == by_id[2]["embedding"]

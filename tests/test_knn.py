@@ -9,8 +9,45 @@ from server2_vector_search_server_spark import config
 from server2_vector_search_server_spark.operators.knn import (
     knn_join,
     knn_topk,
-    vector_literal,
 )
+
+
+# The Column-form vector kernels the library shipped before its one SQL-text
+# form (functions/vector.py). Kept here, frozen, as the specs the SQL text
+# is pinned to bit-for-bit; do not edit.
+
+def _d(c):
+    return c.cast("double")
+
+
+def frozen_squared_l2(a, b):
+    diffs = F.zip_with(a, b, lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y)))
+    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def frozen_dot(a, b):
+    prods = F.zip_with(a, b, lambda x, y: _d(x) * _d(y))
+    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def frozen_l2_norm(a):
+    return F.sqrt(F.aggregate(
+        F.transform(a, lambda x: _d(x) * _d(x)), F.lit(0.0),
+        lambda acc, x: acc + x))
+
+
+def frozen_l2_normalize(a):
+    def by_norm(r):
+        return F.transform(F.array(frozen_l2_norm(r)), lambda n: F.when(
+            n == 0.0, F.transform(r, lambda x: _d(x))
+        ).otherwise(F.transform(r, lambda x: _d(x) / n)))[0]
+
+    return F.transform(F.array(a), by_norm)[0]
+
+
+def frozen_cosine_similarity(a, b):
+    denom = frozen_l2_norm(a) * frozen_l2_norm(b)
+    return F.when(denom == 0.0, F.lit(0.0)).otherwise(frozen_dot(a, b) / denom)
 
 
 def _query_vec(tables):
@@ -202,18 +239,19 @@ def test_overfetch_rerank_funnel_contract(spark):
 
 
 def test_squared_l2_sql_and_py_twins_bitwise(spark):
-    """r11: the SQL-text and Python constant-fold twins of squared_l2 must
-    be BITWISE identical to the Column form — they replace it at hot ANN
-    plan-build sites purely to cut py4j round trips, never to change a
-    double. Tricky values: non-dyadic decimals, tiny/huge magnitudes,
-    negative zero, float32-boundary, subnormal."""
+    """The SQL-text kernels (squared_l2, dot, cosine) and the Python
+    constant fold of squared_l2 must be BITWISE identical to the frozen
+    Column-form specs above — the SQL form replaced them purely to cut
+    py4j round trips, never to change a double. Tricky values: non-dyadic
+    decimals, tiny/huge magnitudes, negative zero, float32-boundary,
+    subnormal."""
     import struct
 
     from server2_vector_search_server_spark.functions.vector import (
-        squared_l2, squared_l2_py, squared_l2_sql,
+        cosine_sql, dot_sql, squared_l2_py, squared_l2_sql,
     )
     from server2_vector_search_server_spark.operators.knn import (
-        exact_score, vector_literal_sql, vectors_literal,
+        exact_score, vector_literal_sql, vectors_literal_sql,
     )
 
     a = [0.1, -1.5e-7, 3.4e38, 1.0 / 3.0, -0.0, 5e-324, 2.0, -1e-200]
@@ -225,11 +263,24 @@ def test_squared_l2_sql_and_py_twins_bitwise(spark):
     # score_decimals=None is the unrounded score
     pairs = [(a, "b"), (a, "a"), (a[3:], "slice(b, 4, 5)"),
              (a[:2], "slice(b, 1, 2)")]
-    spec = [F.lit(1.0) - squared_l2(vector_literal(q), F.expr(v))
+    spec = [F.lit(1.0) - frozen_squared_l2(F.expr(vector_literal_sql(q)),
+                                           F.expr(v))
             for q, v in pairs]
+    # dot and cosine over the same columns, both operand orders, and a
+    # zero vector for cosine's zero-denominator guard
+    kernel_pairs = [("a", "b"), ("b", "a"), ("a", "a"),
+                    ("a", "transform(a, x -> 0.0D)")]
     row = df.select(
-        squared_l2(F.col("a"), F.col("b")).alias("col_form"),
+        frozen_squared_l2(F.col("a"), F.col("b")).alias("col_form"),
         F.expr(squared_l2_sql("a", "b")).alias("sql_form"),
+        *[frozen_dot(F.expr(x), F.expr(y)).alias(f"dot_col_{i}")
+          for i, (x, y) in enumerate(kernel_pairs)],
+        *[F.expr(dot_sql(x, y)).alias(f"dot_sql_{i}")
+          for i, (x, y) in enumerate(kernel_pairs)],
+        *[frozen_cosine_similarity(F.expr(x), F.expr(y))
+          .alias(f"cos_col_{i}") for i, (x, y) in enumerate(kernel_pairs)],
+        *[F.expr(cosine_sql(x, y)).alias(f"cos_sql_{i}")
+          for i, (x, y) in enumerate(kernel_pairs)],
         *[F.round(e, 6).alias(f"spec_{i}") for i, e in enumerate(spec)],
         *[e.alias(f"spec_raw_{i}") for i, e in enumerate(spec)],
         *[exact_score(vector_literal_sql(q), v).alias(f"shared_{i}")
@@ -247,32 +298,44 @@ def test_squared_l2_sql_and_py_twins_bitwise(spark):
     for i in range(len(pairs)):
         assert bits(row[f"shared_{i}"]) == bits(row[f"spec_{i}"]), i
         assert bits(row[f"shared_raw_{i}"]) == bits(row[f"spec_raw_{i}"]), i
+    for i in range(len(kernel_pairs)):
+        assert bits(row[f"dot_sql_{i}"]) == bits(row[f"dot_col_{i}"]), i
+        assert bits(row[f"cos_sql_{i}"]) == bits(row[f"cos_col_{i}"]), i
+    assert row["cos_sql_3"] == 0.0                  # guarded, not NaN
 
     # the nested literal builder round-trips every element exactly
-    got = df.select(vectors_literal([a, b]).alias("v")).first()["v"]
+    got = df.select(
+        F.expr(vectors_literal_sql([a, b])).alias("v")).first()["v"]
     assert [bits(x) for x in got[0]] == [bits(x) for x in a]
     assert [bits(x) for x in got[1]] == [bits(x) for x in b]
 
 
 def test_l2_normalize_norm_once_forms_bitwise(spark):
-    """l2_normalize binds its input and norm to lambda variables so each is
-    evaluated once per row; it and its SQL-text twin must stay bitwise
-    identical to the per-element-norm form they replaced, zero-vector
-    guard, float input and null elements included."""
+    """l2_normalize_sql binds its input and norm to lambda variables so each
+    is evaluated once per row; it must stay bitwise identical to the frozen
+    Column spec, to the per-element-norm form that spec replaced, and to
+    the divide-by-guarded-norm form dedup hand-rolled (x / (n == 0 ? 1 :
+    n)) — zero-vector guard, float input, NaN and null elements
+    included."""
     import struct
 
     from server2_vector_search_server_spark.functions.vector import (
-        l2_norm, l2_normalize, l2_normalize_sql,
+        l2_normalize_sql,
     )
 
     def old_form(a):
-        n = l2_norm(a)
+        n = frozen_l2_norm(a)
         return F.when(n == 0.0, F.transform(a, lambda x: x.cast("double"))) \
             .otherwise(F.transform(a, lambda x: x.cast("double") / n))
 
+    def dedup_form(a):
+        n = frozen_l2_norm(a)
+        denom = F.when(n == 0.0, F.lit(1.0)).otherwise(n)
+        return F.transform(a, lambda x: x.cast("double") / denom)
+
     vecs = [[0.1, -1.5e-7, 1.0 / 3.0, -0.0, 5e-324, 2.0, -1e-200, 3.0],
             [0.0, 0.0, -0.0], [3.0, 4.0], [1e300, 1e300], [1.0, None],
-            [], None]
+            [], None, [float("nan"), 1.0]]
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "id int, a array<double>")
     df = df.withColumn("f", F.col("a").cast("array<float>"))
@@ -281,7 +344,8 @@ def test_l2_normalize_norm_once_forms_bitwise(spark):
         *[e.alias(f"{name}_{c}")
           for c in ("a", "f")
           for name, e in (("old", old_form(F.col(c))),
-                          ("col", l2_normalize(F.col(c))),
+                          ("col", frozen_l2_normalize(F.col(c))),
+                          ("dedup", dedup_form(F.col(c))),
                           ("sql", F.expr(l2_normalize_sql(c))))],
     ).collect()
 
@@ -292,6 +356,7 @@ def test_l2_normalize_norm_once_forms_bitwise(spark):
     for r in rows:
         for c in ("a", "f"):
             assert bits(r[f"col_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
+            assert bits(r[f"dedup_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
             assert bits(r[f"sql_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
     zero = next(r for r in rows if r["id"] == 1)
     assert zero["col_a"] == [0.0, 0.0, -0.0]        # guarded, not NaN
@@ -300,8 +365,9 @@ def test_l2_normalize_norm_once_forms_bitwise(spark):
 def test_knn_operator_build_py4j_budget(spark, py4j_calls):
     """Plan-build cost guard: the k-NN operators score through the shared
     SQL-text exact score, so building each stays within a fixed budget of
-    py4j round trips (measured 126, 126, 219 and 177 calls; a Column-form
-    score costs 177 alone, and these builds took 375-619 calls with it)."""
+    py4j round trips (measured 126, 126, 80 and 177 calls; a Column-form
+    score costs 177 alone, and these builds took 375-619 calls with it;
+    sq8_knn took 219 with its quantizer built from Column lambdas)."""
     from server2_vector_search_server_spark.operators.ann import (
         matryoshka_knn,
         sq8_knn,
@@ -324,7 +390,7 @@ def test_knn_operator_build_py4j_budget(spark, py4j_calls):
         "matryoshka_knn": (
             lambda: matryoshka_knn(emb, q, k=3, prefix_dim=8, candidates=6),
             150),
-        "sq8_knn": (lambda: sq8_knn(emb, q, k=3), 250),
+        "sq8_knn": (lambda: sq8_knn(emb, q, k=3), 100),
         "knn_join": (lambda: knn_join(queries, emb, k=3), 200),
     }
     calls = {name: py4j_calls(build) for name, (build, _) in builds.items()}

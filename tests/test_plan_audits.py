@@ -71,19 +71,19 @@ def test_sq8_ranking_scans_compressed_only_when_materialized(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from server2_vector_search_server_spark.operators.ann import sq8_quantize
-    from server2_vector_search_server_spark.functions.vector import squared_l2
-    from server2_vector_search_server_spark.operators.knn import vector_literal
+    from server2_vector_search_server_spark.operators.knn import (
+        exact_score,
+        vector_literal_sql,
+    )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     path = str(tmp_path / "sq8")
     sq8_quantize(emb).drop("embedding").write.parquet(path)
     q = emb.filter(F.col("vec_id") == 42).select("embedding").first()[0]
     stored = spark.read.parquet(path)
-    dq = F.transform(F.col("qvec"),
-                     lambda x: x.cast("double") / F.col("sq8_scale"))
+    dq = "transform(qvec, x -> CAST(x AS DOUBLE) / sq8_scale)"
     ranked = (stored
-              .withColumn("s", F.round(
-                  F.lit(1.0) - squared_l2(vector_literal(q), dq), 6))
+              .withColumn("s", exact_score(vector_literal_sql(q), dq))
               .select("vec_id", "s")
               .orderBy(F.desc("s"), "vec_id").limit(5))
     plan = ranked._jdf.queryExecution().executedPlan().toString()

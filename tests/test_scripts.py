@@ -1,9 +1,11 @@
-"""Script health: every ``scripts/*.py`` compiles, the generic tools import
-without side effects, and ``bench_xl`` reuses ``bench.py``'s loop instead of
-keeping a copy. No Spark session is started."""
+"""Script health: every ``scripts/*.py`` compiles, every package name it
+imports (function-local imports included) resolves, the generic tools
+import without side effects, and ``bench_xl`` reuses ``bench.py``'s loop
+instead of keeping a copy. No Spark session is started."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import importlib.util
 import os
@@ -14,6 +16,7 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS = os.path.join(ROOT, "scripts")
+PACKAGE = "server2_vector_search_server_spark"
 
 
 def _load(name: str):
@@ -29,6 +32,41 @@ def _load(name: str):
     ids=os.path.basename)
 def test_script_byte_compiles(path, tmp_path):
     py_compile.compile(path, cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+def _package_imports(path: str):
+    """``(module, name)`` for every import of the package anywhere in the
+    script's AST (``name`` is None for a plain ``import module``)."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 \
+                and node.module.split(".")[0] == PACKAGE:
+            for alias in node.names:
+                yield node.module, alias.name
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == PACKAGE:
+                    yield alias.name, None
+
+
+def test_script_package_imports_resolve():
+    """Byte-compiling does not check a function-local ``from package.mod
+    import name``; import each module and look each name up, so a script
+    calling a deleted helper fails here instead of at its next run."""
+    resolved, missing = 0, []
+    for path in sorted(glob.glob(os.path.join(SCRIPTS, "*.py"))):
+        for module, name in _package_imports(path):
+            where = f"{os.path.basename(path)}: {module} {name}"
+            try:
+                mod = importlib.import_module(module)
+                if name is not None and not hasattr(mod, name):
+                    importlib.import_module(f"{module}.{name}")
+            except ImportError:
+                missing.append(where)
+                continue
+            resolved += 1
+    assert resolved > 0 and not missing, missing
 
 
 @pytest.mark.parametrize("name",
