@@ -1,30 +1,110 @@
-"""Connected components over a pair graph — transitive dedup clustering.
+"""Graph operators over DataFrame edge lists.
 
-Near-dup detection (operators/dedup.py) emits PAIRS; curation needs GROUPS:
-if A≈B and B≈C, all three are one cluster and one representative survives.
-That closure is a connected-components problem on the similarity graph.
+- components: :func:`connected_components` (min-label propagation, the
+  pair→group closure behind transitive dedup clustering),
+  :func:`connected_components_star`, :func:`strongly_connected_components`
+  and :func:`bowtie_decomposition` (both over :func:`reachability_closure`);
+- cores: :func:`k_core`, :func:`k_core_degree_state`;
+- ranking: :func:`pagerank`, :func:`personalized_pagerank`, :func:`hits`,
+  :func:`label_propagation`;
+- paths and centrality: :func:`shortest_paths`, :func:`harmonic_centrality`,
+  :func:`betweenness_centrality`, :func:`dag_longest_path_layers`;
+- neighborhood graphs: :func:`knn_graph`, :func:`knn_graph_bucketed`,
+  :func:`beam_search_knn`, :func:`triangle_count`.
 
-Algorithm: iterative min-label propagation to fixpoint — every node's label
-becomes the minimum label in its closed neighborhood; converged when no
-label changes. Each iteration is one join + one aggregate (two shuffles) and
-the number of iterations is the graph diameter, which for near-dup clusters
-is tiny (clusters are small and dense). The driver loop materializes each
-round with ``localCheckpoint`` so the plan/lineage doesn't grow with
-iterations — without it, iteration i would replay all i−1 predecessors and
-the DAG would deepen linearly.
-
-At 100 TB: label propagation is the right choice while the diameter is small
-(dedup graphs). For adversarial long-chain graphs use the large-star /
-small-star algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — public) which converges in O(log² n) rounds; the
-DataFrame skeleton is the same join+min shape, so it drops into this
-function without changing callers.
+Checkpoint idiom, so no plan grows with its round count: a fixpoint runs
+through :func:`_fixpoint` (a lazy checkpoint per round plus ONE counting
+action on it that materializes it and decides convergence); a frontier BFS
+runs through :func:`_bfs_levels` (eagerly checkpointed levels, the settled
+set being their union); an edge table every round re-reads on one key is
+pinned once with :func:`_pinned`, which keeps its hash partitioning.
+Fixed-round loops (PageRank, HITS, label propagation, shortest paths, beam
+search) have no convergence test and stay plain ``for`` loops.
 """
 
 from __future__ import annotations
 
+import logging
+from functools import reduce
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
+
+
+def _fixpoint(state: DataFrame, step: Callable[[DataFrame], DataFrame],
+              settled: Callable[[DataFrame, DataFrame], bool], *,
+              max_iter: int, name: str, error: str) -> DataFrame:
+    """Iterate ``state = step(state)`` until ``settled(new, old)``.
+
+    Each round's frame is checkpointed lazily, and the first action of
+    ``settled`` on it both materializes it and decides convergence: one
+    counting action per round, not a checkpoint plus a test. Raises
+    ``RuntimeError(error)`` once ``max_iter`` rounds are spent. Every
+    hundredth round is logged: the peeling operators' default caps are
+    provable bounds that never fire, so a deep loop is otherwise silent."""
+    for round_no in range(1, max_iter + 1):
+        new = step(state).localCheckpoint(eager=False)
+        if settled(new, state):
+            return new
+        state = new
+        if round_no % 100 == 0:
+            _log.warning("%s: %d rounds so far without a fixpoint — a "
+                         "deep chain; each round is one counting action",
+                         name, round_no)
+    raise RuntimeError(error)
+
+
+def _flags_clear(new: DataFrame, _old: DataFrame) -> bool:
+    """``settled`` for a step that flags each changed row in ``_chg``."""
+    return new.filter("_chg").count() == 0
+
+
+def _count_stable(n_rows: int):
+    """``settled`` for state that only shrinks: the fixpoint is the first
+    round that keeps every row. The previous count is remembered, so each
+    round counts once."""
+    def settled(new: DataFrame, _old: DataFrame) -> bool:
+        nonlocal n_rows
+        prev, n_rows = n_rows, new.count()
+        return prev == n_rows
+
+    return settled
+
+
+def _bfs_levels(seed: DataFrame, edges: DataFrame, src: str,
+                grow: Callable[[DataFrame, int], DataFrame], *,
+                max_rounds: int, error: str | None = None) -> list:
+    """Frontier BFS from ``seed`` (rows keyed by ``(s, node)``).
+
+    Round ``hop`` joins the last level to ``edges`` on ``node == src``,
+    lets ``grow(joined, hop)`` shape the next ``(s, node, ...)`` rows,
+    keeps the pairs no earlier level settled (anti-join) and checkpoints
+    them eagerly; an empty level ends the search. ``isEmpty`` on a cached
+    level is a take over cached blocks, measured cheaper than the
+    fixpoints' lazy checkpoint plus count (betweenness, sf0.1: +3.2% wall
+    over 7 passes for the count, same 84 jobs). The settled set is the
+    union of the checkpointed levels, one scan per level, so it needs no
+    checkpoint of its own. Returns the levels, seed first; after
+    ``max_rounds`` rounds raises ``RuntimeError(error)`` if ``error`` is
+    given."""
+    level = seed.localCheckpoint(eager=True)
+    levels, settled = [level], level
+    for hop in range(1, max_rounds + 1):
+        reached = grow(level.join(edges, level["node"] == edges[src]), hop)
+        seen = settled.selectExpr("s AS _ks", "node AS _kn")
+        level = (reached.join(seen, F.expr("s = _ks AND node = _kn"),
+                              "left_anti")
+                 .localCheckpoint(eager=True))
+        if level.isEmpty():
+            return levels
+        levels.append(level)
+        settled = settled.unionByName(level)
+    if error is not None:
+        raise RuntimeError(error)
+    return levels
 
 
 def connected_components(edges: DataFrame, src: str = "src",
@@ -45,36 +125,26 @@ def connected_components(edges: DataFrame, src: str = "src",
     labels = (bi.select(F.col("a").alias("node")).distinct()
               .withColumn("component", F.col("node"))
               .localCheckpoint(eager=True))
-    for _ in range(max_iter):
+
+    def relabel(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             bi.join(labels, bi.b == labels.node)
             .groupBy("a").agg(F.min("component").alias("nbr_component")))
-        # the old label is already on the join row, so the convergence
-        # flag is computed INLINE and counted off the checkpointed frame —
-        # the former new⋈old self-join (one extra join job per round, per
-        # caller) only re-derived information this row already holds
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    "component",
-                    F.coalesce("nbr_component", F.col("component")))
-                .alias("component"),
-                (F.coalesce("nbr_component", F.col("component"))
-                 < F.col("component")).alias("_chg"))
-            .localCheckpoint(eager=False))
-        # r11: LAZY checkpoint — the count below is the materialization
-        # barrier (it scans every partition through the narrow filter),
-        # so each round pays ONE job instead of eager-then-count's two
-        changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations; "
-        "graph diameter too large for label propagation — use "
-        "large-star/small-star")
+        return (labels.join(neighbor_min, labels.node == neighbor_min.a,
+                            "left")
+                .selectExpr(
+                    "node",
+                    "least(component, coalesce(nbr_component, component)) "
+                    "AS component",
+                    "coalesce(nbr_component, component) < component "
+                    "AS _chg"))
+
+    return _fixpoint(
+        labels, relabel, _flags_clear, max_iter=max_iter,
+        name="connected_components",
+        error=f"connected_components did not converge in {max_iter} "
+              "iterations; graph diameter too large for label propagation "
+              "— use large-star/small-star").select("node", "component")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -116,10 +186,9 @@ def k_core(edges: DataFrame, k: int, *, src: str = "src",
     Communities", VLDB 2018, whose communities are connected k-cores).
 
     Each round is one degree aggregate plus two semi-joins — shuffle ∝
-    surviving edges, never node-pairs — with a localCheckpoint per round
-    (iterative-lineage rule) and a count-based fixpoint test. Edge count
-    strictly decreases every non-fixpoint round, so rounds are bounded
-    by the INITIAL edge count and termination is guaranteed;
+    surviving edges, never node-pairs. Edge count strictly decreases
+    every non-fixpoint round, so rounds are bounded by the INITIAL edge
+    count and termination is guaranteed;
     ``max_iter`` defaults to that bound (``None``). Deep-peeling chains
     legitimately need many rounds — a pendant path of n nodes with k=2
     peels ~2 nodes per round, i.e. ~n/2 rounds (ADVICE r7) — so callers
@@ -133,41 +202,29 @@ def k_core(edges: DataFrame, k: int, *, src: str = "src",
     regime and slower in this one (SCALE §68 regime split)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    import logging
-
     bi = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
                        F.greatest(F.col(src), F.col(dst)).alias("b"))
           .filter(F.col("a") != F.col("b"))
           .distinct().localCheckpoint(eager=False))
-    n_edges = bi.count()      # materializes the lazy checkpoint (r11)
+    n_edges = bi.count()
     if max_iter is None:
         max_iter = n_edges + 1
-    for round_no in range(max_iter):
-        # the provable bound (initial edge count) can never fire on valid
-        # input, so runaway-depth peels would otherwise be invisible in a
-        # long job — warn every 100 sequential rounds (ADVICE r8)
-        if round_no and round_no % 100 == 0:
-            logging.getLogger(__name__).warning(
-                "k_core: %d peeling rounds so far, %d edges remain — "
-                "deep peel chain; consider full core decomposition "
-                "instead of per-round re-aggregation", round_no, n_edges)
-        if n_edges == 0:
-            return bi
+
+    def peel(bi: DataFrame) -> DataFrame:
         deg = (bi.select(F.col("a").alias("node"))
                .unionAll(bi.select(F.col("b").alias("node")))
                .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
         keep = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (bi.join(keep.withColumnRenamed("node", "a"),
-                       "a", "left_semi")
-               .join(keep.withColumnRenamed("node", "b"),
-                     "b", "left_semi")
-               .select("a", "b").localCheckpoint(eager=False))
-        n_next = nxt.count()  # materialization barrier (r11, one job)
-        if n_next == n_edges:
-            return nxt
-        bi, n_edges = nxt, n_next
-    raise RuntimeError(
-        f"k_core did not reach a fixpoint in {max_iter} rounds")
+        return (bi.join(keep.withColumnRenamed("node", "a"),
+                        "a", "left_semi")
+                .join(keep.withColumnRenamed("node", "b"),
+                      "b", "left_semi")
+                .select("a", "b"))
+
+    return _fixpoint(bi, peel, _count_stable(n_edges), max_iter=max_iter,
+                     name="k_core",
+                     error=f"k_core did not reach a fixpoint in {max_iter} "
+                           "rounds")
 
 
 def k_core_degree_state(edges: DataFrame, k: int, *, src: str = "src",
@@ -221,30 +278,30 @@ def k_core_degree_state(edges: DataFrame, k: int, *, src: str = "src",
            .repartition("node")
            .localCheckpoint(eager=True))           # pinned once, never redone
     state = (adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-             .localCheckpoint(eager=True))
+             .localCheckpoint(eager=False))
+    n_nodes = state.count()
     if max_iter is None:
-        max_iter = state.count() + 1
-    for _ in range(max_iter):
+        max_iter = n_nodes + 1
+
+    def peel(state: DataFrame) -> DataFrame:
         removed = state.filter(F.col("deg") < k).select("node")
-        if removed.isEmpty():
-            alive = state.select("node")
-            return (bi.join(alive.withColumnRenamed("node", "a"),
-                            "a", "left_semi")
-                    .join(alive.withColumnRenamed("node", "b"),
-                          "b", "left_semi")
-                    .select("a", "b"))
         dec = (adj.join(removed, "node")
                .groupBy(F.col("nbr").alias("node"))
                .agg(F.count(F.lit(1)).alias("dec")))
-        state = (state.join(removed, "node", "left_anti")
-                 .join(dec, "node", "left")
-                 .select("node",
-                         (F.col("deg") - F.coalesce(F.col("dec"),
-                                                    F.lit(0)))
-                         .alias("deg"))
-                 .localCheckpoint(eager=True))     # node-sized state only
-    raise RuntimeError(
-        f"k_core_degree_state did not reach a fixpoint in {max_iter} rounds")
+        return (state.join(removed, "node", "left_anti")
+                .join(dec, "node", "left")
+                .select("node",
+                        (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0)))
+                        .alias("deg")))
+
+    alive = _fixpoint(
+        state, peel, _count_stable(n_nodes), max_iter=max_iter,
+        name="k_core_degree_state",
+        error=f"k_core_degree_state did not reach a fixpoint in {max_iter} "
+              "rounds").select("node")
+    return (bi.join(alive.withColumnRenamed("node", "a"), "a", "left_semi")
+            .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
+            .select("a", "b"))
 
 
 def connected_components_star(edges: DataFrame, src: str = "src",
@@ -261,8 +318,8 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     ~log² n — measured in SCALE.md §12).
 
     Convergence test: the oriented edge set is a fixpoint of both phases
-    (checked by exact set comparison via anti-joins — two cheap shuffles on
-    the shrinking edge list).
+    (exact set comparison via two ``exceptAll``s on the shrinking edge
+    list).
     """
     cur = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
            .where(F.col("src") != F.col("dst"))
@@ -270,21 +327,20 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     nodes = (cur.select(F.col("src").alias("node"))
              .union(cur.select(F.col("dst").alias("node")))
              .distinct().localCheckpoint(eager=True))
-    for _ in range(max_rounds):
-        nxt = (_small_star(_large_star(cur))
-               .localCheckpoint(eager=True))
-        unchanged = (nxt.exceptAll(cur).isEmpty()
-                     and cur.exceptAll(nxt).isEmpty())
-        cur = nxt
-        if unchanged:
-            # fixpoint: cur is a star forest (node -> component min)
-            parent = cur.groupBy("src").agg(F.min("dst").alias("component"))
-            return (nodes.join(parent, nodes.node == parent.src, "left")
-                    .select("node",
-                            F.coalesce("component", F.col("node"))
-                            .alias("component")))
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_rounds} rounds")
+
+    def same_edges(new: DataFrame, old: DataFrame) -> bool:
+        return new.exceptAll(old).isEmpty() and old.exceptAll(new).isEmpty()
+
+    cur = _fixpoint(
+        cur, lambda cur: _small_star(_large_star(cur)), same_edges,
+        max_iter=max_rounds, name="connected_components_star",
+        error=f"connected_components_star did not converge in {max_rounds} "
+              "rounds")
+    # fixpoint: cur is a star forest (node -> component min)
+    parent = cur.groupBy("src").agg(F.min("dst").alias("component"))
+    return (nodes.join(parent, nodes.node == parent.src, "left")
+            .select("node",
+                    F.coalesce("component", F.col("node")).alias("component")))
 
 
 def component_summary(components: DataFrame) -> DataFrame:
@@ -304,8 +360,14 @@ def component_summary(components: DataFrame) -> DataFrame:
 # unpinned 3.6 s per pagerank call; at the §53 10× corpus (5.9M edges)
 # the pin wins on both wall (9.4 → 6.5 s) and decade shuffle growth
 # (24.6× → 12×). The gate is the measured crossover, same spirit as
-# pagerank's broadcast_node_limit.
+# _BROADCAST_NODE_LIMIT.
 _PIN_MIN_ROWS = 2_000_000
+
+# Above this many nodes pagerank, hits and label_propagation stop
+# broadcasting their node-sized rank/score/label table every round and
+# exchange it against pre-partitioned edges instead: a per-round broadcast
+# of a node-sized table is a scale-killer at 100× nodes (VERDICT r3).
+_BROADCAST_NODE_LIMIT = 5_000_000
 
 
 def _pinned(df: DataFrame, key, *, materialized: bool = False) -> DataFrame:
@@ -345,7 +407,6 @@ def _pinned(df: DataFrame, key, *, materialized: bool = False) -> DataFrame:
 def pagerank(edges: DataFrame, *, iterations: int = 3, damping: float = 0.85,
              src: str = "src", dst: str = "dst", scale: int = 12,
              broadcast_ranks: bool | None = None,
-             broadcast_node_limit: int = 5_000_000,
              out_deg: DataFrame | None = None,
              nodes: DataFrame | None = None,
              n_nodes: int | None = None) -> DataFrame:
@@ -371,7 +432,7 @@ def pagerank(edges: DataFrame, *, iterations: int = 3, damping: float = 0.85,
     forces either; VERDICT r3 item: a per-round broadcast of a node-sized
     table is a scale-killer at 100× nodes):
 
-    - small graphs (n ≤ ``broadcast_node_limit``): broadcast outdeg, ranks
+    - small graphs (n ≤ ``_BROADCAST_NODE_LIMIT``): broadcast outdeg, ranks
       and contribs; the cached edge list is pinned hash(``dst``), so every
       round's contribution aggregate is EXCHANGE-FREE — rounds shuffle
       nothing at all (plan-audited).
@@ -382,14 +443,8 @@ def pagerank(edges: DataFrame, *, iterations: int = 3, damping: float = 0.85,
       contribs and the node join are plain shuffle joins. Per round: two
       node-sized exchanges, zero edge-sized ones.
     """
-    # ONE edge-sized materialization via _pinned (repartition + eager
-    # persist): everything downstream (outdeg, nodes, every round's join)
-    # derives from e0, so the caller's edge plan — often a join+distinct
-    # itself — is computed exactly once, AND the cached scan reports its
-    # hash partitioning so the per-round exchange on that key is elided.
-    # localCheckpoint would cut lineage too but scans back as ExistingRDD
-    # with UNKNOWN partitioning — the round-7 plan audit caught this
-    # branch silently re-exchanging edges every round (see _pinned).
+    # ONE edge-sized materialization: outdeg, nodes and every round derive
+    # from e0, so the caller's edge plan (often a join+distinct) runs once.
     if broadcast_ranks is False:
         e0 = _pinned(edges.select(src, dst), F.col(src))
     else:
@@ -417,7 +472,7 @@ def pagerank(edges: DataFrame, *, iterations: int = 3, damping: float = 0.85,
                  .distinct().localCheckpoint(eager=True))
     n = n_nodes if n_nodes is not None else nodes.count()
     use_bcast = (broadcast_ranks if broadcast_ranks is not None
-                 else n <= broadcast_node_limit)
+                 else n <= _BROADCAST_NODE_LIMIT)
 
     if use_bcast:
         # outdeg is node-sized -> broadcast, so the edge list never
@@ -824,9 +879,8 @@ def personalized_pagerank(edges: DataFrame, restart_nodes: DataFrame, *,
 
 
 def hits(edges: DataFrame, *, iterations: int = 2,
-         src: str = "src", dst: str = "dst", scale: int = 12,
-         broadcast_scores: bool | None = None,
-         broadcast_node_limit: int = 5_000_000) -> DataFrame:
+         src: str = "src", dst: str = "dst",
+         scale: int = 12) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, public algorithm) with a
     fixed iteration count and L1 normalization:
 
@@ -843,7 +897,7 @@ def hits(edges: DataFrame, *, iterations: int = 2,
     Scale — the same strategy fork as :func:`pagerank` (a per-round
     broadcast of a node-sized table is a scale-killer at 100× nodes):
 
-    - small graphs (n ≤ ``broadcast_node_limit``): broadcast the score
+    - small graphs (n ≤ ``_BROADCAST_NODE_LIMIT``): broadcast the score
       tables; the edge list never shuffles.
     - big graphs: TWO pre-partitioned pinned edge caches — by ``dst`` for
       the hub step and by ``src`` for the authority step (the join key
@@ -866,18 +920,11 @@ def hits(edges: DataFrame, *, iterations: int = 2,
     e0 = edges.select(src, dst).localCheckpoint(eager=True)
     n = (e0.select(F.col(src).alias("node"))
          .union(e0.select(F.col(dst).alias("node"))).distinct().count())
-    use_bcast = (broadcast_scores if broadcast_scores is not None
-                 else n <= broadcast_node_limit)
-    if use_bcast:
+    if n <= _BROADCAST_NODE_LIMIT:
         e_dst = e_src = e0
         _side = lambda df: F.broadcast(df)          # noqa: E731
     else:
-        # _pinned above the _PIN_MIN_ROWS gate: persist (not
-        # localCheckpoint — ExistingRDD loses partitioning and every
-        # round would re-exchange edges); below the gate the tiny edge
-        # table re-exchanges per round, which the §54-addendum A/B
-        # measured as cheaper than pinning. materialized=True: e0 is
-        # already checkpointed, don't copy it into block storage again
+        # materialized=True: e0 is already checkpointed
         e_dst = _pinned(e0, F.col(dst), materialized=True)
         e_src = _pinned(e0, F.col(src), materialized=True)
         _side = lambda df: df.hint("shuffle_hash")  # noqa: E731
@@ -909,9 +956,7 @@ def hits(edges: DataFrame, *, iterations: int = 2,
 
 
 def label_propagation(edges: DataFrame, *, iterations: int = 3,
-                      src: str = "src", dst: str = "dst",
-                      broadcast_labels: bool | None = None,
-                      broadcast_node_limit: int = 5_000_000) -> DataFrame:
+                      src: str = "src", dst: str = "dst") -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007, public algorithm), made deterministic: every node starts with
     its own id as label; each round it adopts the most frequent label in
@@ -934,21 +979,12 @@ def label_propagation(edges: DataFrame, *, iterations: int = 3,
     bi = (e0.select(F.col(src).alias("a"), F.col(dst).alias("b"))
           .unionByName(e0.select(F.col(dst).alias("a"),
                                  F.col(src).alias("b"))).distinct())
-    if broadcast_labels is None:
-        n = bi.select("a").distinct().count()
-        use_bcast = n <= broadcast_node_limit
-    else:
-        use_bcast = broadcast_labels
-    if use_bcast:
+    if bi.select("a").distinct().count() <= _BROADCAST_NODE_LIMIT:
         bi = bi.localCheckpoint(eager=True)
         _side = lambda df: F.broadcast(df)          # noqa: E731
     else:
-        # _pinned above the _PIN_MIN_ROWS gate: persist (not
-        # localCheckpoint — ExistingRDD loses partitioning and every
-        # round would re-exchange edges); below it, re-exchanging the
-        # small table per round measured cheaper (§54 addendum). bi is a
-        # derived plan (union+distinct), so _pinned's internal
-        # checkpoint is what makes it run exactly once
+        # bi is a derived plan (union+distinct): _pinned's checkpoint
+        # runs it exactly once
         bi = _pinned(bi, F.col("b"))
         _side = lambda df: df.hint("shuffle_hash")  # noqa: E731
     labels = (bi.select(F.col("a").alias("node")).distinct()
@@ -993,25 +1029,16 @@ def harmonic_centrality(edges: DataFrame, sources: DataFrame, *,
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     e0 = edges.select(src, dst).distinct().localCheckpoint(eager=True)
-    frontier = (sources.select(F.col(sources.columns[0]).alias("s"))
-                .distinct()
-                .select("s", F.col("s").alias("node"),
-                        F.lit(0).cast("long").alias("dist"))
-                .localCheckpoint(eager=True))
-    known = frontier
-    for hop in range(1, max_hops + 1):
-        nxt = (frontier.join(e0, frontier["node"] == e0[src])
-               .select("s", F.col(dst).alias("node"),
-                       F.lit(hop).cast("long").alias("dist"))
-               .distinct())
-        k = known.select(F.col("s").alias("_ks"),
-                         F.col("node").alias("_kn"))
-        frontier = (nxt.join(k, (nxt["s"] == k["_ks"])
-                             & (nxt["node"] == k["_kn"]), "left_anti")
-                    .localCheckpoint(eager=True))
-        if frontier.isEmpty():
-            break
-        known = known.unionByName(frontier).localCheckpoint(eager=True)
+    seed = (sources.select(F.col(sources.columns[0]).alias("s")).distinct()
+            .select("s", F.col("s").alias("node"),
+                    F.lit(0).cast("long").alias("dist")))
+    levels = _bfs_levels(
+        seed, e0, src,
+        lambda j, hop: j.select("s", F.col(dst).alias("node"),
+                                F.lit(hop).cast("long").alias("dist"))
+        .distinct(),
+        max_rounds=max_hops)
+    known = reduce(DataFrame.unionByName, levels)
     factor = 10 ** scale
     return (known.filter(F.col("dist") > 0)
             .groupBy("node")
@@ -1033,8 +1060,7 @@ def betweenness_centrality(edges: DataFrame, sources: DataFrame, *,
     result    B(v)   = Σ_s δ_s(v)                (v ≠ s; interior only)
 
     Every per-node quantity is level-synchronous, so the whole thing is
-    |levels| rounds of join+aggregate, each materialized with
-    ``localCheckpoint`` (iterative-lineage rule). Path counts σ are exact
+    |levels| rounds of join+aggregate. Path counts σ are exact
     BIGINTs; dependency contributions enter sums as round(·10^scale)
     BIGINT micro-units with a fixed operand order, so the result is
     shuffle-order-free and a level-unrolled SQL oracle reproduces it
@@ -1052,50 +1078,22 @@ def betweenness_centrality(edges: DataFrame, sources: DataFrame, *,
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     factor = 10 ** scale
     e0 = edges.select(src, dst).distinct().localCheckpoint(eager=True)
-    frontier = (sources.select(F.col(sources.columns[0]).alias("s"))
-                .distinct()
-                .select("s", F.col("s").alias("node"),
-                        F.lit(0).cast("long").alias("d"),
-                        F.lit(1).cast("long").alias("sigma"))
-                .localCheckpoint(eager=True))
-    levels = [frontier]
-    settled = frontier
-    for hop in range(1, max_hops + 1):
-        grown = (frontier.join(e0, frontier["node"] == e0[src])
-                 .groupBy("s", F.col(dst).alias("node"))
-                 .agg(F.sum("sigma").alias("sigma")))
-        k = settled.select(F.col("s").alias("_ks"),
-                           F.col("node").alias("_kn"))
-        # r11 note: the lazy-checkpoint+count() fusion that pays off in
-        # k_core/connected_components was A/B'd here and REVERTED (+3.2%
-        # at 7 passes, jobs 84→84): isEmpty() on the eagerly-cached RDD
-        # is a take(1) over cached blocks — cheaper than the count
-        # aggregate the fusion substitutes — and the hop count is too
-        # small for the saved materialization job to matter.
-        frontier = (grown.join(k, (grown["s"] == k["_ks"])
-                               & (grown["node"] == k["_kn"]), "left_anti")
-                    .select("s", "node", F.lit(hop).cast("long").alias("d"),
-                            "sigma")
-                    .localCheckpoint(eager=True))
-        if frontier.isEmpty():
-            break
-        levels.append(frontier)
-        # settled = union of the per-level CHECKPOINTED frames: the union
-        # plan is a scan of cached partitions with lineage depth 1
-        # regardless of round count, so re-checkpointing it every round
-        # was an extra materialization per round the anti-join never
-        # needed. Wall-neutral at the bench size (the per-round job
-        # FLOOR dominates, as in pagerank SCALE §54) but strictly fewer
-        # jobs for the same lineage guarantee.
-        settled = settled.unionByName(frontier)
+    seed = (sources.select(F.col(sources.columns[0]).alias("s")).distinct()
+            .select("s", F.col("s").alias("node"),
+                    F.lit(0).cast("long").alias("d"),
+                    F.lit(1).cast("long").alias("sigma")))
+    levels = _bfs_levels(
+        seed, e0, src,
+        lambda j, hop: (j.groupBy("s", F.col(dst).alias("node"))
+                        .agg(F.sum("sigma").alias("sigma"))
+                        .select("s", "node",
+                                F.lit(hop).cast("long").alias("d"),
+                                "sigma")),
+        max_rounds=max_hops)
     # backward dependency accumulation, deepest level first (δ = 0 there).
     # No checkpoints here: each δ table derives from the CHECKPOINTED
     # levels plus at most max_hops prior δ plans, so lineage depth is
-    # bounded by the hop count — the iterative-lineage rule only demands
-    # barriers where depth would grow with data or unbounded rounds.
-    # (Measured neutral on wall at sf0.1 — the forward phase's per-round
-    # isEmpty/union jobs dominate — but fewer bounded materializations is
-    # strictly less work for the same lineage guarantee.)
+    # bounded by the hop count.
     deltas: dict[int, DataFrame] = {
         len(levels) - 1:
             levels[-1].select("s", "node",
@@ -1146,7 +1144,7 @@ def reachability_closure(edges: DataFrame, *, src: str = "src",
                          max_iter: int = 64) -> DataFrame:
     """Full reachability closure of a directed graph: (s, node) pairs
     with ``node`` reachable from ``s`` in ≥0 hops, by frontier BFS to
-    fixpoint (anti-join dedup per round, localCheckpoint lineage cuts).
+    fixpoint (anti-join dedup per round).
     The building block under SCCs and bow-tie decomposition. Pair volume
     is Σ|reach(s)| — quadratic on strongly-connected graphs; restrict
     the source set (or graph slice) at corpus scale exactly as the FW-BW
@@ -1155,25 +1153,15 @@ def reachability_closure(edges: DataFrame, *, src: str = "src",
     e0 = edges.select(src, dst).distinct().localCheckpoint(eager=True)
     nodes = (e0.select(F.col(src).alias("v"))
              .union(e0.select(F.col(dst).alias("v"))).distinct())
-    frontier = (nodes.select(F.col("v").alias("s"),
-                             F.col("v").alias("node"))
-                .localCheckpoint(eager=True))
-    reach = frontier
-    for _ in range(max_iter):
-        nxt = (frontier.join(e0, frontier["node"] == e0[src])
-               .select("s", F.col(dst).alias("node")).distinct())
-        k = reach.select(F.col("s").alias("_ks"),
-                         F.col("node").alias("_kn"))
-        frontier = (nxt.join(k, (nxt["s"] == k["_ks"])
-                             & (nxt["node"] == k["_kn"]), "left_anti")
-                    .localCheckpoint(eager=True))
-        if frontier.isEmpty():
-            return reach
-        reach = reach.unionByName(frontier).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"reachability_closure did not reach a fixpoint in {max_iter} "
-        "rounds — graph diameter exceeds the guard; raise max_iter or "
-        "restrict the source set (FW-BW style)")
+    levels = _bfs_levels(
+        nodes.select(F.col("v").alias("s"), F.col("v").alias("node")),
+        e0, src,
+        lambda j, _hop: j.select("s", F.col(dst).alias("node")).distinct(),
+        max_rounds=max_iter,
+        error=f"reachability_closure did not reach a fixpoint in {max_iter} "
+              "rounds — graph diameter exceeds the guard; raise max_iter or "
+              "restrict the source set (FW-BW style)")
+    return reduce(DataFrame.unionByName, levels)
 
 
 def strongly_connected_components(edges: DataFrame, *, src: str = "src",
@@ -1193,8 +1181,7 @@ def strongly_connected_components(edges: DataFrame, *, src: str = "src",
     conquer (Fleischer et al. 2000, public) where each pivot round is
     exactly two of these BFS closures restricted to the remaining node
     set; this operator is that building block exposed directly. Each
-    round is one join + anti-join, localCheckpointed (iterative-lineage
-    rule).
+    round is one join + anti-join.
     """
     reach = reachability_closure(edges, src=src, dst=dst,
                                  max_iter=max_iter)
@@ -1239,23 +1226,23 @@ def dag_longest_path_layers(edges: DataFrame, *, src: str = "src",
               .union(e0.select(F.col(dst).alias("node"))).distinct()
               .select("node", F.lit(0).cast("long").alias("layer"))
               .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        cand = (e0.join(layers, e0[src] == layers["node"])
-                .select(F.col(dst).alias("node"),
-                        (F.col("layer") + 1).alias("layer")))
-        nxt = (layers.unionByName(cand)
-               .groupBy("node").agg(F.max("layer").alias("layer"))
-               .localCheckpoint(eager=True))
-        changed = (nxt.alias("n")
-                   .join(layers.alias("o"), "node")
-                   .filter(F.col("n.layer") != F.col("o.layer")).count())
-        layers = nxt
-        if changed == 0:
-            return layers
-    raise RuntimeError(
-        f"dag_longest_path_layers did not converge in {max_iter} rounds "
-        "— the graph likely contains a cycle (layers grow forever on "
-        "cycles); run strongly_connected_components to locate it")
+
+    def relax(layers: DataFrame) -> DataFrame:
+        up = (e0.join(layers, e0[src] == layers["node"])
+              .groupBy(F.col(dst).alias("node"))
+              .agg(F.max(F.col("layer") + 1).alias("_up")))
+        return (layers.join(up, "node", "left")
+                .selectExpr("node",
+                            "greatest(layer, coalesce(_up, layer)) AS layer",
+                            "coalesce(_up, layer) > layer AS _chg"))
+
+    return _fixpoint(
+        layers, relax, _flags_clear, max_iter=max_iter,
+        name="dag_longest_path_layers",
+        error=f"dag_longest_path_layers did not converge in {max_iter} "
+              "rounds — the graph likely contains a cycle (layers grow "
+              "forever on cycles); run strongly_connected_components to "
+              "locate it").select("node", "layer")
 
 
 def bowtie_decomposition(edges: DataFrame, *, src: str = "src",

@@ -820,8 +820,8 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one map-side-combinable degree fold plus two
     semi-joins of the edge list against the survivor set. Survivor sets
     here ride broadcast; past ~5M nodes the joins flip to the
-    pre-partitioned shuffle strategy exactly as ``graph_pagerank``/
-    ``graph_label_propagation`` auto-switch (graph.py:208-228) — peeling
+    pre-partitioned shuffle strategy exactly as ``graph.pagerank`` and
+    ``graph.label_propagation`` auto-switch — peeling
     adds no new scale seam. Rounds are bounded by the graph's degeneracy
     ordering depth; production k-core implementations cap rounds the
     same way this query does."""

@@ -846,8 +846,6 @@ def streaming_edge_table_upkeep(spark: SparkSession,
     compacts offline exactly like the ANN index tombstone path; the
     supplier cap here only bounds the driver-checked result, not the
     mechanism."""
-    from pyspark.sql.utils import AnalysisException
-
     work = scratch_dir("edge_upkeep_")
     src = os.path.join(work, "lineitem")
     out_dir = os.path.join(work, "pairs")
@@ -863,12 +861,9 @@ def streaming_edge_table_upkeep(spark: SparkSession,
                              batch_df.l_orderkey
                              == orders_static.o_orderkey)
                .select("l_suppkey", "o_custkey").distinct())
-        try:
-            existing = spark.read.parquet(out_dir)
-            new = new.join(existing, ["l_suppkey", "o_custkey"],
-                           "left_anti")
-        except AnalysisException:
-            pass                               # first batch: nothing yet
+        if os.path.isdir(out_dir):   # absent until the first batch writes
+            new = new.join(spark.read.parquet(out_dir),
+                           ["l_suppkey", "o_custkey"], "left_anti")
         new.write.mode("append").parquet(out_dir)
 
     with state_partitions(spark):

@@ -68,3 +68,27 @@ def py4j_calls():
         return calls
 
     return count
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``count(fn)``: the Spark jobs ``fn()`` runs, by job group.
+
+    ``fn`` runs once under a fresh job group; the count is
+    ``statusTracker().getJobIdsForGroup`` of that group, the method of
+    ``scripts/pillar_layers.py``. Jobs include the map-stage jobs adaptive
+    execution submits for each shuffle."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"spark_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "spark_jobs")
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

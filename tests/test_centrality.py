@@ -318,3 +318,26 @@ def test_scc_empty_max_iter_guard(spark):
     import pytest as _pt
     with _pt.raises(RuntimeError, match="fixpoint"):
         reachability_closure(e, max_iter=2)
+
+
+def test_round_loops_pay_one_counting_action_per_round(spark, spark_jobs):
+    """Job budget on a 6-node chain (6 rounds each). A fixpoint round of
+    dag_longest_path_layers is one lazy checkpoint plus one count of its
+    change flags, and a reachability_closure level is one eager
+    checkpoint plus isEmpty, the reached set being the union of the
+    levels. Counts include adaptive execution's map-stage and broadcast
+    jobs: measured 52 and 51; a second action per DAG round makes 64, a
+    per-round checkpoint of the reached set 56."""
+    from server2_vector_search_server_spark.operators.graph import (
+        dag_longest_path_layers,
+        reachability_closure,
+    )
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                  "src long, dst long")
+    jobs = {"dag_longest_path_layers":
+            spark_jobs(lambda: dag_longest_path_layers(chain)),
+            "reachability_closure":
+            spark_jobs(lambda: reachability_closure(chain))}
+    assert jobs["dag_longest_path_layers"] <= 52, jobs
+    assert jobs["reachability_closure"] <= 51, jobs

@@ -6,6 +6,7 @@ import pytest
 from server2_vector_search_server_spark.operators.graph import (
     component_summary,
     connected_components,
+    connected_components_star,
 )
 
 
@@ -37,6 +38,8 @@ def test_nonconvergence_raises(spark):
         [(i, i + 1) for i in range(1, 12)], "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iter=2)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(edges, max_rounds=1)
 
 
 def test_component_summary_shape(spark):
@@ -48,10 +51,6 @@ def test_component_summary_shape(spark):
 
 
 def _cc_star(spark, pairs):
-    from server2_vector_search_server_spark.operators.graph import (
-        connected_components_star,
-    )
-
     edges = spark.createDataFrame(pairs, "src long, dst long")
     rows = connected_components_star(edges).collect()
     return {r["node"]: r["component"] for r in rows}
@@ -157,10 +156,11 @@ def test_beam_search_finds_query_neighborhood(spark):
         assert r["score"] == exact[r["vec_id"]]
 
 
-def test_pagerank_auto_switch_matches_broadcast(spark):
-    """Auto mode with a tiny broadcast_node_limit must take the big-graph
+def test_pagerank_auto_switch_matches_broadcast(spark, monkeypatch):
+    """Auto mode with a tiny _BROADCAST_NODE_LIMIT must take the big-graph
     branch (lazy repartition, no second edge checkpoint) and produce
     EXACTLY the broadcast branch's ranks — strategy only moves rows."""
+    from server2_vector_search_server_spark.operators import graph as G
     from server2_vector_search_server_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
@@ -168,32 +168,35 @@ def test_pagerank_auto_switch_matches_broadcast(spark):
         "src string, dst string")
     small = {(r["node"], r["pr"])
              for r in pagerank(edges, iterations=3).collect()}
+    monkeypatch.setattr(G, "_BROADCAST_NODE_LIMIT", 1)
     auto_big = {(r["node"], r["pr"])
-                for r in pagerank(edges, iterations=3,
-                                  broadcast_node_limit=1).collect()}
+                for r in pagerank(edges, iterations=3).collect()}
     forced = {(r["node"], r["pr"])
               for r in pagerank(edges, iterations=3,
                                 broadcast_ranks=False).collect()}
     assert small == auto_big == forced and len(small) == 4
 
 
-def test_hits_branches_identical(spark, tables):
+def test_hits_branches_identical(spark, tables, monkeypatch):
     """Both HITS execution strategies (broadcast scores vs pre-partitioned
     edges + shuffled scores) must produce bit-identical scores — strategy
     moves rows, never arithmetic (the pagerank branch-equality contract)."""
+    from server2_vector_search_server_spark.operators import graph as G
     from server2_vector_search_server_spark.operators.graph import hits
 
     edges = spark.createDataFrame(
         [(f"s{i % 7}", f"c{(i * 3) % 11}") for i in range(40)],
         "src string, dst string").distinct()
     a = {(r["node"], r["hub"], r["authority"])
-         for r in hits(edges, broadcast_scores=True).collect()}
+         for r in hits(edges).collect()}
+    monkeypatch.setattr(G, "_BROADCAST_NODE_LIMIT", 0)
     b = {(r["node"], r["hub"], r["authority"])
-         for r in hits(edges, broadcast_scores=False).collect()}
+         for r in hits(edges).collect()}
     assert a == b and len(a) > 0
 
 
-def test_label_propagation_branches_identical(spark, tables):
+def test_label_propagation_branches_identical(spark, tables, monkeypatch):
+    from server2_vector_search_server_spark.operators import graph as G
     from server2_vector_search_server_spark.operators.graph import (
         label_propagation,
     )
@@ -202,9 +205,10 @@ def test_label_propagation_branches_identical(spark, tables):
         [(f"n{i}", f"n{(i * 2 + 1) % 23}") for i in range(40)],
         "src string, dst string").distinct()
     a = {(r["node"], r["label"]) for r in
-         label_propagation(edges, broadcast_labels=True).collect()}
+         label_propagation(edges).collect()}
+    monkeypatch.setattr(G, "_BROADCAST_NODE_LIMIT", 0)
     b = {(r["node"], r["label"]) for r in
-         label_propagation(edges, broadcast_labels=False).collect()}
+         label_propagation(edges).collect()}
     assert a == b and len(a) > 0
 
 
