@@ -1,120 +1,109 @@
-"""Full-surface oracle parity sweep at sf0.01 — writes PARITY_r{N}.json.
+"""Oracle parity sweep: registered queries vs their DuckDB oracles.
 
-Usage: PYTHONPATH=/root/repo python scripts/full_sweep.py <round>
-Compares every registered query against its DuckDB oracle with the
-driver-hash-equivalent logic (column-name-sorted, value-exact, NaN==NaN).
+Usage (from the repo root):
+  PYTHONPATH=. python scripts/full_sweep.py <round>     # every query;
+                                                       # writes PARITY_r{N}.json
+  PYTHONPATH=. python scripts/full_sweep.py head        # the driver-head window
+  PYTHONPATH=. python scripts/full_sweep.py name...     # the named queries
+  ... full_sweep.py --sf DIR ...                        # another corpus
+
+No target sweeps every query without writing an artifact. ``--sf``
+defaults to sf0.01, the driver's correctness scale; its tables may be
+bare ``.parquet`` files or Spark part-file directories. Each query is
+compared with ``plans.registry.oracle_mismatch``, the comparator of the
+test gate, and a failure prints its first differing row and column. The
+session is ``session.get_spark``, so ``SPARK_GRAFT_CPUS`` sets its cores
+and ``SPARK_DRIVER_MEMORY`` its heap. Exits 1 when any query fails, 2 on
+an unknown query name.
 """
 
+import argparse
 import json
+import os
 import sys
 import time
 
-import duckdb
-import numpy as np
-from pyspark.sql import SparkSession
+from server2_vector_search_server_spark.plans import (
+    _DRIVER_HEAD_SIZE, load_registry)
+from server2_vector_search_server_spark.plans.registry import (
+    oracle_connection, oracle_mismatch)
+from server2_vector_search_server_spark.session import get_spark
 
-from server2_vector_search_server_spark.plans import load_registry
-
-ROUND = int(sys.argv[1]) if len(sys.argv) > 1 else 0
 SF = "/root/testdata/sf0.01"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
-def _normalize(df):
-    """pytest-mirror normalization (tests/test_oracle_parity.py): lists
-    to tuples, column-name order, row sort. str()-based canonicalization
-    is WRONG for list cells (numpy array str differs from list str)."""
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].map(lambda v: tuple(v)
-                              if isinstance(v, (list, tuple, np.ndarray))
-                              else v)
-    return df.sort_values(list(df.columns), ignore_index=True)
-
-
-def _values_equal(a, b):
-    import math
-    af = isinstance(a, (float, np.floating))
-    bf = isinstance(b, (float, np.floating))
-    ai = isinstance(a, (int, np.integer)) and not isinstance(a, bool)
-    bi = isinstance(b, (int, np.integer)) and not isinstance(b, bool)
-    if (af and bi) or (ai and bf):
-        return False
-    if af and bf:
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    if isinstance(a, tuple) and isinstance(b, tuple):
-        return (len(a) == len(b)
-                and all(_values_equal(x, y) for x, y in zip(a, b)))
-    return a == b
-
-
-def frames_equal(got, want):
-    if sorted(got.columns) != sorted(want.columns) or len(got) != len(want):
-        return False
-    g, w = _normalize(got), _normalize(want)
-    for i in range(len(g)):
-        for c in g.columns:
-            if not _values_equal(g[c].iloc[i], w[c].iloc[i]):
-                return False
-    return True
-
-
-def main():
-    t0 = time.time()
-    reg = load_registry()
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    failures, rows_only, checked = [], 0, 0
-    for i, (name, rq) in enumerate(sorted(reg.items())):
+def sweep(spark, sf, reg, names):
+    """Run ``names`` against their oracles; ``(failures, rows_only)``."""
+    con = oracle_connection(sf)
+    failures, rows_only = [], 0
+    for i, name in enumerate(names, 1):
+        rq = reg[name]
+        tag = f"[{i}/{len(names)}] {name}"
         try:
-            got = rq.fn(spark, SF).toPandas()
+            got = rq.fn(spark, sf).toPandas()
             if rq.oracle is None:
                 rows_only += 1
-                print(f"[{i+1}/{len(reg)}] {name} rows-only {len(got)}",
-                      flush=True)
+                print(f"{tag} rows-only {len(got)}", flush=True)
                 continue
-            want = con.execute(rq.oracle).df()
-            ok = frames_equal(got, want)
-            checked += 1
-            print(f"[{i+1}/{len(reg)}] {name} "
-                  f"{'OK' if ok else 'FAIL'} {len(got)}", flush=True)
-            if not ok:
-                failures.append(name)
+            mismatch = oracle_mismatch(got, con.execute(rq.oracle).df())
+            status = f"OK {len(got)}" if mismatch is None \
+                else f"FAIL {mismatch}"
         except Exception as ex:
-            checked += 1
+            mismatch = status = f"ERROR {type(ex).__name__}: {ex}"
+        print(f"{tag} {status}"[:300], flush=True)
+        if mismatch is not None:
             failures.append(name)
-            print(f"[{i+1}/{len(reg)}] {name} ERROR "
-                  f"{type(ex).__name__}: {ex}"[:300], flush=True)
-    doc = {
-        "round": ROUND,
-        "what": ("Full-surface oracle parity at the driver's correctness "
-                 "scale (sf0.01): every registered query vs its DuckDB "
-                 "oracle — row count, column set, and exact values on "
-                 "column-name-sorted rows (driver-hash-equivalent compare "
-                 "from tests/test_oracle_parity.py)."),
-        "sf": 0.01,
-        "queries_total": len(reg),
-        "queries_checked": checked,
-        "rows_only": rows_only,
-        "failures": failures,
-        "wall_seconds": int(time.time() - t0),
-    }
-    out = f"PARITY_r{ROUND:02d}.json"
-    with open(out, "w") as fh:
-        json.dump(doc, fh, indent=1)
+    return failures, rows_only
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf", default=SF, help="corpus directory")
+    ap.add_argument("target", nargs="*",
+                    help="a round number, 'head', or query names")
+    args = ap.parse_args(argv)
+    t0 = time.time()
+    reg = load_registry()
+    rnd = None
+    if args.target == ["head"]:
+        names = list(reg)[:_DRIVER_HEAD_SIZE]
+    elif len(args.target) == 1 and args.target[0].isdigit():
+        rnd, names = int(args.target[0]), sorted(reg)
+    elif args.target:
+        names = args.target
+        unknown = [n for n in names if n not in reg]
+        if unknown:
+            print("unknown queries:", unknown)
+            return 2
+    else:
+        names = sorted(reg)
+    spark = get_spark("full_sweep")
+    spark.sparkContext.setLogLevel("ERROR")
+    failures, rows_only = sweep(spark, args.sf, reg, names)
+    wall = int(time.time() - t0)
+    print(f"\nsweep: {len(names) - len(failures)}/{len(names)} OK in {wall}s")
     print("FAILURES:", failures)
-    print("wrote", out, f"({int(time.time()-t0)}s)")
+    if rnd is not None:
+        doc = {
+            "round": rnd,
+            "what": ("Full-surface oracle parity: every registered query "
+                     "vs its DuckDB oracle — column set, row count, and "
+                     "exact values on column-name-sorted rows "
+                     "(plans.registry.oracle_mismatch, the comparator of "
+                     "tests/test_oracle_parity.py)."),
+            "sf": os.path.basename(os.path.normpath(args.sf)),
+            "queries_total": len(reg),
+            "queries_checked": len(names) - rows_only,
+            "rows_only": rows_only,
+            "failures": failures,
+            "wall_seconds": wall,
+        }
+        out = f"PARITY_r{rnd:02d}.json"
+        with open(out, "w") as fh:
+            json.dump(doc, fh, indent=1)
+        print("wrote", out)
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

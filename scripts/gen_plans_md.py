@@ -116,16 +116,11 @@ def summarize(plan: str) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from server2_vector_search_server_spark.plans import load_registry
+    from server2_vector_search_server_spark.session import get_spark
 
     reg = load_registry()
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = get_spark("gen_plans_md")
     spark.sparkContext.setLogLevel("ERROR")
     jutils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
 

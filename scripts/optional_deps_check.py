@@ -25,12 +25,9 @@ _SPARK = None
 def _spark():
     global _SPARK
     if _SPARK is None:
-        from pyspark.sql import SparkSession
+        from server2_vector_search_server_spark.session import get_spark
 
-        _SPARK = (SparkSession.builder.master("local[4]")
-                  .config("spark.sql.shuffle.partitions", "4")
-                  .config("spark.ui.enabled", "false")
-                  .appName("optional_deps_check").getOrCreate())
+        _SPARK = get_spark("optional_deps_check")
         _SPARK.sparkContext.setLogLevel("ERROR")
     return _SPARK
 

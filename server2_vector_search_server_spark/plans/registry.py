@@ -5,7 +5,10 @@ a named query: a callable ``(spark, sf_dir) -> DataFrame`` plus (when
 SQL-expressible) an equivalent DuckDB SQL string. The driver's correctness
 gate runs both at sf=0.01 and compares row-count + schema + order-insensitive
 value hash; ``tests/test_oracle_parity.py`` runs the same comparison locally
-at sf0.001 so regressions surface before a round ends.
+at sf0.001 so regressions surface before a round ends, and
+``scripts/full_sweep.py`` runs it at sf0.01 (or any corpus). Both compare
+through :func:`oracle_mismatch` against the views of
+:func:`oracle_connection`, defined once below.
 
 Parity rules (FIXTURES.md §Determinism):
   * floats: cast to DOUBLE before arithmetic on BOTH sides, identical op
@@ -64,6 +67,97 @@ def query(name: str, *, oracle: str | None, survey: str):
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
+
+
+# --- the parity comparison --------------------------------------------------
+
+# The driver-generated tables every oracle may read.
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+
+
+def oracle_connection(sf_dir: str, tables=TABLES):
+    """A DuckDB connection with one view per table of ``sf_dir``.
+
+    A table is ``{name}.parquet``: one bare file (the driver's testdata
+    layout) or a directory of Spark part files (any table Spark wrote,
+    e.g. an amplified corpus); a directory is read through its
+    ``*.parquet`` parts."""
+    import os
+
+    import duckdb
+
+    con = duckdb.connect()
+    for name in tables:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+    return con
+
+
+def _normalize(df):
+    """Column-name order, list cells as tuples, rows sorted. Never compare
+    str()-canonicalized rows: a numpy array cell prints as ``[1 2]`` and a
+    list as ``[1, 2]``."""
+    import numpy as np
+
+    df = df.reindex(sorted(df.columns), axis=1)
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].map(
+                lambda v: tuple(v)
+                if isinstance(v, (list, tuple, np.ndarray)) else v)
+    return df.sort_values(list(df.columns), ignore_index=True)
+
+
+def _values_equal(a, b) -> bool:
+    """Cell equality as the driver's value hash sees it: exact, NaN equals
+    NaN, tuples element-wise, and dtype-sensitive: int64 on one engine
+    and float64 on the other hash differently even when numerically equal
+    (DuckDB HUGEINT -> float via pandas vs Spark BIGINT)."""
+    import math
+
+    import numpy as np
+
+    a_float = isinstance(a, (float, np.floating))
+    b_float = isinstance(b, (float, np.floating))
+    a_int = isinstance(a, (int, np.integer)) and not isinstance(a, bool)
+    b_int = isinstance(b, (int, np.integer)) and not isinstance(b, bool)
+    if (a_float and b_int) or (a_int and b_float):
+        return False
+    if a_float and b_float:
+        if math.isnan(a) and math.isnan(b):
+            return True
+        return a == b
+    if isinstance(a, tuple) and isinstance(b, tuple):
+        return len(a) == len(b) and all(_values_equal(x, y)
+                                        for x, y in zip(a, b))
+    return a == b
+
+
+def oracle_mismatch(got, want, *, empty_ok: bool = True) -> str | None:
+    """The first difference between a query's Spark result and its DuckDB
+    oracle (two pandas frames), or None when they match: the column set,
+    the row count, then every cell of the column-name-sorted rows.
+
+    ``empty_ok=False`` also rejects two empty results: a 0-row match is
+    vacuous and usually means the query's fixture constants miss the
+    data."""
+    if sorted(got.columns) != sorted(want.columns):
+        return (f"column mismatch {sorted(got.columns)} vs "
+                f"{sorted(want.columns)}")
+    if len(got) != len(want):
+        return f"rowcount {len(got)} vs {len(want)}"
+    if not empty_ok and len(got) == 0:
+        return "both sides empty — vacuous pass"
+    g, w = _normalize(got), _normalize(want)
+    for i in range(len(g)):
+        for c in g.columns:
+            a, b = g[c].iloc[i], w[c].iloc[i]
+            if not _values_equal(a, b):
+                return f"row {i} col {c}: spark={a!r} duckdb={b!r}"
+    return None
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -4,12 +4,11 @@ import os
 
 import pytest
 
+from server2_vector_search_server_spark.plans.registry import (
+    TABLES, oracle_connection)
 from server2_vector_search_server_spark.session import get_spark, load_tables
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
 
 
 @pytest.fixture(scope="session")
@@ -26,14 +25,7 @@ def tables(spark):
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
-
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"'{SF_SMOKE}/{name}.parquet'")
-    return con
+    return oracle_connection(SF_SMOKE)
 
 
 @pytest.fixture

@@ -1123,9 +1123,9 @@ def test_stupid_backoff_branches_on_crafted_corpus(spark, tmp_path):
     crafted corpus where every path fires, comparing the Spark query
     against its own DuckDB oracle on the same parquet (the full parity
     check, not a reimplementation)."""
-    import duckdb
-
     from server2_vector_search_server_spark.plans import load_registry
+    from server2_vector_search_server_spark.plans.registry import (
+        oracle_connection)
 
     # train bigrams: (a,b) (b,a) (a,b) (b,c) from doc 0, (c,c) (c,b) from
     # doc 1 — so for doc 300 "a b c a zzz": (a,b) seen, (b,c) seen,
@@ -1143,9 +1143,7 @@ def test_stupid_backoff_branches_on_crafted_corpus(spark, tmp_path):
     rq = reg["text_stupid_backoff_scores"]
     got = rq.fn(spark, sf).toPandas().sort_values("doc_id",
                                                   ignore_index=True)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
-                f"'{sf}/documents.parquet/*.parquet'")
+    con = oracle_connection(sf, ["documents"])
     want = con.execute(rq.oracle).df().sort_values("doc_id",
                                                    ignore_index=True)
     assert got["doc_id"].tolist() == want["doc_id"].tolist() == [300, 339]

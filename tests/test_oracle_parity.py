@@ -10,12 +10,13 @@ break the driver's hash.
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 import pytest
 
 from server2_vector_search_server_spark.plans import load_registry
+# perfbench/analytics.py's oracle check imports _normalize and _values_equal
+# from this module.
+from server2_vector_search_server_spark.plans.registry import (  # noqa: F401
+    _normalize, _values_equal, oracle_mismatch)
 from tests.conftest import SF_SMOKE
 
 REGISTRY = load_registry()
@@ -62,37 +63,16 @@ ORACLE_CASES = [pytest.param(n, marks=pytest.mark.slow)
                 if n in SLOW_ORACLE else n for n in ORACLE_CASES]
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            import numpy as np
-
-            df[c] = df[c].map(
-                lambda v: tuple(v)
-                if isinstance(v, (list, tuple, np.ndarray)) else v)
-    return df.sort_values(list(df.columns), ignore_index=True)
-
-
-def _values_equal(a, b) -> bool:
-    import numpy as np
-
-    a_float = isinstance(a, (float, np.floating))
-    b_float = isinstance(b, (float, np.floating))
-    a_int = isinstance(a, (int, np.integer)) and not isinstance(a, bool)
-    b_int = isinstance(b, (int, np.integer)) and not isinstance(b, bool)
-    # The driver's value hash is dtype-sensitive: int64 on one engine and
-    # float64 on the other hash differently even when numerically equal
-    # (DuckDB HUGEINT -> float via pandas vs Spark BIGINT). Mirror that.
-    if (a_float and b_int) or (a_int and b_float):
-        return False
-    if a_float and b_float:
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    if isinstance(a, tuple) and isinstance(b, tuple):
-        return len(a) == len(b) and all(_values_equal(x, y) for x, y in zip(a, b))
-    return a == b
+# a 0-row match is vacuous — an empty result usually means the query's
+# fixture constants miss the data (caught live once: a query-id band
+# outside the embeddings range). Queries legitimately empty at the tiny
+# smoke SF must be allowlisted WITH their verified-at-sf0.01 row count.
+EMPTY_OK_AT_SMOKE = {
+    "nation_pair_volume",   # NATION_1<->NATION_2 trade: 14 rows at sf0.01
+    # mod-400 graph over only 200 parts peels to an empty 4-core at
+    # the smoke SF (documented in the query); 3 communities at sf0.01
+    "graph_kcore_influential_communities",
+}
 
 
 @pytest.mark.parametrize("name", ORACLE_CASES)
@@ -100,27 +80,9 @@ def test_query_matches_oracle(name, spark, duck):
     rq = REGISTRY[name]
     got = rq.fn(spark, SF_SMOKE).toPandas()
     want = duck.execute(rq.oracle).df()
-    assert sorted(got.columns) == sorted(want.columns), \
-        f"{name}: column mismatch {sorted(got.columns)} vs {sorted(want.columns)}"
-    assert len(got) == len(want), f"{name}: rowcount {len(got)} vs {len(want)}"
-    # a 0-row match is vacuous — an empty result usually means the query's
-    # fixture constants miss the data (caught live once: a query-id band
-    # outside the embeddings range). Queries legitimately empty at the tiny
-    # smoke SF must be allowlisted WITH their verified-at-sf0.01 row count.
-    empty_ok_at_smoke = {
-        "nation_pair_volume",   # NATION_1<->NATION_2 trade: 14 rows at sf0.01
-        # mod-400 graph over only 200 parts peels to an empty 4-core at
-        # the smoke SF (documented in the query); 3 communities at sf0.01
-        "graph_kcore_influential_communities",
-    }
-    if name not in empty_ok_at_smoke:
-        assert len(got) > 0, f"{name}: both sides empty — vacuous pass"
-    g, w = _normalize(got), _normalize(want)
-    for i in range(len(g)):
-        for c in g.columns:
-            a, b = g[c].iloc[i], w[c].iloc[i]
-            assert _values_equal(a, b), \
-                f"{name}: row {i} col {c}: spark={a!r} duckdb={b!r}"
+    mismatch = oracle_mismatch(got, want,
+                               empty_ok=name in EMPTY_OK_AT_SMOKE)
+    assert mismatch is None, f"{name}: {mismatch}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_CASES)
@@ -139,3 +101,32 @@ def test_entry_smoke(spark):
     names = set(e.queries())
     oracles = e.oracle_sql()
     assert set(oracles) <= names
+
+
+def test_oracle_mismatch_is_the_driver_hash_strict():
+    """The comparator both the gate above and ``scripts/full_sweep.py``
+    use: each check it makes, pinned on hand-built frames."""
+    import numpy as np
+    import pandas as pd
+
+    def frame(**cols):
+        return pd.DataFrame(cols)
+
+    base = frame(a=[2, 1], v=[[1, 2], [3]])
+    # row order, column order and list-vs-ndarray cells do not matter
+    assert oracle_mismatch(base, frame(v=[np.array([3]), np.array([1, 2])],
+                                       a=[1, 2])) is None
+    assert oracle_mismatch(frame(x=[float("nan")]),
+                           frame(x=[float("nan")])) is None
+    assert oracle_mismatch(base, frame(a=[1, 2])).startswith(
+        "column mismatch")
+    assert oracle_mismatch(base, frame(a=[1], v=[[3]])) == "rowcount 2 vs 1"
+    # int vs float is unequal even when numerically equal
+    assert oracle_mismatch(frame(x=[1]), frame(x=[1.0])) \
+        .startswith("row 0 col x: spark=")
+    assert oracle_mismatch(frame(v=[(1, 2)]), frame(v=[(1, 2.0)])) \
+        .startswith("row 0 col v:")
+    empty = frame(x=[])
+    assert oracle_mismatch(empty, empty) is None
+    assert oracle_mismatch(empty, empty, empty_ok=False) == \
+        "both sides empty — vacuous pass"

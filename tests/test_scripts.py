@@ -1,7 +1,8 @@
 """Script health: every ``scripts/*.py`` compiles, every package name it
 imports (function-local imports included) resolves, the generic tools
-import without side effects, and ``bench_xl`` reuses ``bench.py``'s loop
-instead of keeping a copy. No Spark session is started."""
+import without side effects, ``bench_xl`` reuses ``bench.py``'s loop and
+``full_sweep`` the test gate's comparator instead of keeping a copy. Only
+the view set-up test starts a Spark session."""
 
 from __future__ import annotations
 
@@ -69,8 +70,8 @@ def test_script_package_imports_resolve():
     assert resolved > 0 and not missing, missing
 
 
-@pytest.mark.parametrize("name",
-                         ["explain", "dump_rows", "pillar_layers", "bench_xl"])
+@pytest.mark.parametrize("name", ["explain", "dump_rows", "pillar_layers",
+                                  "bench_xl", "full_sweep"])
 def test_generic_tool_imports_without_side_effects(name, monkeypatch):
     from pyspark import SparkContext
 
@@ -92,3 +93,32 @@ def test_bench_xl_reuses_bench_loop_and_cpu_reference(monkeypatch):
     assert xl._cpu_reference_sec is bench._cpu_reference_sec
     assert xl.time_pillars is bench.time_pillars
     assert xl.SF_DIR == bench.SF_DIR
+
+
+def test_full_sweep_reuses_test_gate_comparator_and_views():
+    import tests.conftest
+    import tests.test_oracle_parity
+
+    sweep = _load("full_sweep")
+    assert sweep.oracle_mismatch is tests.test_oracle_parity.oracle_mismatch
+    assert sweep.oracle_connection is tests.conftest.oracle_connection
+    assert sweep.get_spark is tests.conftest.get_spark
+
+
+def test_oracle_views_read_single_file_and_spark_directory(spark, tmp_path):
+    """A table is read the same whether it is one bare ``.parquet`` file or
+    a directory of Spark part files."""
+    from server2_vector_search_server_spark.plans.registry import (
+        oracle_connection)
+
+    df = spark.range(10).selectExpr("id", "id * 2 AS twice")
+    df.repartition(3).write.parquet(str(tmp_path / "parts" / "t.parquet"))
+    df.coalesce(1).write.parquet(str(tmp_path / "staging"))
+    (part,) = (tmp_path / "staging").glob("part-*.parquet")
+    (tmp_path / "single").mkdir()
+    part.rename(tmp_path / "single" / "t.parquet")
+
+    want = [(i, 2 * i) for i in range(10)]
+    for layout in ("parts", "single"):
+        con = oracle_connection(str(tmp_path / layout), ["t"])
+        assert con.execute("SELECT * FROM t ORDER BY id").fetchall() == want
