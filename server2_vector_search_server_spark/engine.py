@@ -33,6 +33,13 @@ Scale: every method is a thin composition of the library's operators — the
 partition-pruned scan, broadcast-scored top-k, and anti-join gate all hold
 their plans at cluster scale; only :meth:`upload_documents`' per-file status
 summary collects (bounded by the number of uploaded files, not rows).
+
+An upload runs in the JVM end to end: a list batch becomes an Arrow-built
+``LocalRelation``, chunking and the hash embedding are SQL-text
+expressions, and no plan it builds starts a Python worker (a custom
+embedder or a ``kss`` / ``words:N`` split mode brings one back). It pays
+two collects: the status probe before the ingest and the per-document
+chunk counts after.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ from __future__ import annotations
 import logging
 from typing import Any, Mapping, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,6 +61,7 @@ from server2_vector_search_server_spark.plans.ingest import ingest_documents
 from server2_vector_search_server_spark.sources.store import ChunkStore
 
 _log = logging.getLogger(__name__)
+_UPLOAD_SCHEMA = pa.schema([("doc_name", pa.string()), ("text", pa.string())])
 
 
 def _join_keywords(keywords: str | Sequence[str]) -> str:
@@ -117,26 +126,30 @@ class DocumentSearchEngine:
         app.py:152-157); duplicate names WITHIN the batch collapse to one
         upload (the reference processes files sequentially, so its exists
         check skips the later copies — for list input the first occurrence
-        wins); the rest are chunked, embedded, and appended.
+        wins); the rest are chunked, embedded, and appended. For list input
+        the statuses come in first-occurrence order.
         """
-        if not isinstance(docs, DataFrame):
-            seen: dict[str, str] = {}
+        seen: dict[str, str] = {}
+        if isinstance(docs, DataFrame):
+            docs = docs.dropDuplicates(["doc_name"])
+        else:
             for name, text in docs:
                 seen.setdefault(name, text)
-            docs = self.spark.createDataFrame(
-                list(seen.items()), "doc_name string, text string")
-        else:
-            docs = docs.dropDuplicates(["doc_name"])
-        # names that exist BEFORE this ingest: distinguishes "skipped as
-        # duplicate" from "parsed to zero chunks" in the status report
-        if self.store.is_empty():
-            pre_existing: set[str] = set()
-        else:
-            pre_existing = {
-                r["doc_name"] for r in
-                docs.select("doc_name").join(
-                    self.store.read(None).select("doc_name").distinct(),
-                    "doc_name", "left_semi").collect()}
+            # an Arrow table becomes a LocalRelation, so no scan of the batch
+            # starts a Python worker (a list becomes a pickled LogicalRDD)
+            docs = self.spark.createDataFrame(pa.table(
+                [list(seen), list(seen.values())], schema=_UPLOAD_SCHEMA))
+        # the one status probe, run before the ingest: each name and whether
+        # it is already stored, which tells "skipped as duplicate" from
+        # "parsed to zero chunks". EXISTS plans as an existence join: one
+        # flag per name, whatever the number of stored chunks.
+        exists = F.lit(False)
+        if not self.store.is_empty():
+            exists = (self.store.read(None).alias("s")
+                      .where(F.col("s.doc_name")
+                             == F.col("d.doc_name").outer()).exists())
+        stored = {r["doc_name"]: r["stored"] for r in docs.alias("d").select(
+            "doc_name", exists.alias("stored")).collect()}
         written = ingest_documents(
             self.store, docs, collection=collection_name,
             embed_dim=self.embed_dim, embedder=self.embedder,
@@ -147,12 +160,11 @@ class DocumentSearchEngine:
             .agg(F.count(F.lit(1)).alias("n_chunks")).collect()
         }
         statuses = []
-        for r in docs.select("doc_name").collect():
-            name = r["doc_name"]
+        for name in seen or stored:
             if name in added:
                 statuses.append({"filename": name, "status": "success",
                                  "chunks_added": added[name], "error": None})
-            elif name in pre_existing:
+            elif stored[name]:
                 statuses.append({
                     "filename": name, "status": "skipped", "chunks_added": 0,
                     "error": "Document with the same name already exists"})

@@ -24,11 +24,18 @@ analog), ``newline`` (the reference's fallback, exact), and ``words:N``
 (fixed-size word groups, for corpora without punctuation — the driver's
 ``documents`` fixture).
 
-Spark realization: per-document, order-sensitive fold ⇒ ``applyInPandas``
-grouped by ``doc_id``. This is the intended shape for 100 TB ingestion: each
-group is one document (bounded size), groups distribute freely across
-executors, and the only shuffle is the hash partition on doc_id. The pure
-functions are importable and unit-tested without Spark.
+Spark realization: for ``punct`` and ``newline`` (the engine's modes),
+:func:`chunks_sql` builds the whole split + merge as ONE SQL-text expression
+over the text column (a regex ``split``, then an ``aggregate`` over the
+sentence lengths that carries only the emitted ``[a, b)`` sentence ranges),
+so chunking runs in the JVM with no Python worker, like
+``embedding.hash_embedding_expr``. ``kss`` calls a Python library and
+``words:N`` is faster in Python (its ``str.split`` beat the two regex passes
+of a SQL form on long documents), so both stay a pandas UDF over the pure
+functions below. Either way the chunk array is ``posexplode``-d: a narrow
+transformation, no shuffle, since chunking one document never needs another
+document's rows. The pure functions are the spec: importable, unit-tested
+without Spark, and pinned string for string against :func:`chunks_sql`.
 """
 
 from __future__ import annotations
@@ -41,7 +48,14 @@ from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
 
-_PUNCT_SPLIT = re.compile(r"(?<=[.!?。！？])\s+")
+_SENTENCE_ENDERS = ".!?。！？"
+_PUNCT_SPLIT = re.compile(rf"(?<=[{_SENTENCE_ENDERS}])\s+")
+# Python's whitespace: the str.isspace set that re's \s, str.split() and
+# str.strip() use. Java's \s is ASCII-only and (?U)\s lacks \x1c-\x1f, so
+# the SQL chunker spells the set out.
+_WHITESPACE = ("\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+               "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008"
+               "\u2009\u200a\u2028\u2029\u202f\u205f\u3000")
 
 
 def _kss_split(text: str) -> list[str]:
@@ -159,6 +173,133 @@ def split_text(text: str, chunk_size: int = config.CHUNK_SIZE,
                            chunk_overlap)
 
 
+def _sql_chars(chars: str) -> str:
+    """``chars`` as SQL string-literal escapes (backslash, ``u``, four hex
+    digits), so the SQL text stays ASCII and each character reaches the JVM
+    as itself."""
+    return "".join(f"\\u{ord(c):04X}" for c in chars)
+
+
+def _regex_class(chars: str) -> str:
+    """A Java regex class of ``chars``, as SQL string-literal text. Java
+    tests a class's Latin-1 singles with one table lookup but every other
+    single with one more call, and a regex split tests a class at nearly
+    every character. So the wider characters sit behind one range check
+    (``[lo-hi&&[...]]``), which most characters fail at once: splitting
+    12 KB documents ran about 1.8x faster than with a flat class."""
+    narrow = "".join(c for c in chars if ord(c) < 256)
+    wide = "".join(c for c in chars if ord(c) >= 256)
+    return (f"[{_sql_chars(narrow)}[{_sql_chars(min(wide))}-"
+            f"{_sql_chars(max(wide))}&&[{_sql_chars(wide)}]]]")
+
+
+def _sentences_sql(text_sql: str, mode: str) -> str:
+    """:func:`split_sentences` as SQL text: the array of stripped, non-empty
+    sentences of ``text_sql`` (null for null text)."""
+    def strip(x: str) -> str:
+        # trim(BOTH ...), not a regexp_replace, which was far slower on
+        # long documents
+        return f"trim(BOTH '{_sql_chars(_WHITESPACE)}' FROM {x})"
+
+    def nonempty(arr: str) -> str:
+        return f"array_remove({arr}, '')"
+
+    if mode == "punct":
+        # the split consumes the whitespace between pieces, so only the
+        # text's own ends need stripping: the first and last pieces. Spark's
+        # trim walks the whole string, so trimming the text costs more.
+        pieces = (f"split({text_sql}, '(?<={_regex_class(_SENTENCE_ENDERS)})"
+                  f"{_regex_class(_WHITESPACE)}+')")
+        return nonempty(f"transform(array({pieces}), ps -> transform(ps, "
+                        f"(p, j) -> IF(j = 0 OR j = size(ps) - 1, "
+                        f"{strip('p')}, p)))[0]")
+    if mode == "newline":
+        return nonempty(f"transform(split({text_sql}, '{_sql_chars(chr(10))}'"
+                        f"), p -> {strip('p')})")
+    raise ValueError(f"no SQL form for sentence split mode {mode!r}")
+
+
+def chunks_sql(text_sql: str, chunk_size: int = config.CHUNK_SIZE,
+               chunk_overlap: int = config.CHUNK_OVERLAP,
+               mode: str = "punct") -> str:
+    """:func:`split_text` of the SQL expression ``text_sql`` as one SQL-text
+    expression: the array of chunk strings (null for null text). Modes
+    ``punct`` and ``newline`` only.
+
+    The merge is an ``aggregate`` over the sentence lengths whose state is
+    the emitted ``[a, b)`` sentence ranges ``r`` (flat: ``a0, b0, a1, b1,
+    ...``; ``aggregate`` copies its state every step, and a flat int array
+    is the cheapest to copy), the current chunk's first sentence ``a``,
+    and the index ``i`` of the sentence being placed (the current chunk is
+    always sentences ``[a, i)``). ``c`` is the current
+    chunk's joined length plus one separator, 0 when it is empty, so a
+    sentence of length ``ln`` fits when ``c + ln <= chunk_size`` (every
+    sentence is non-empty, so ``c > 0`` means the chunk is). A close
+    computes the overlap with a backward ``aggregate`` over the current
+    chunk's lengths: ``k`` trailing sentences, ``m`` their ``c``. Strings
+    are built once, at the end, by joining each range's sentences with
+    ``" "``; they are already stripped, because every sentence is. The
+    sentence and length arrays are bound once to lambda variables, so
+    neither is re-evaluated per element.
+
+    Because each step copies ``r``, one fold over all ``n`` sentences costs
+    ``n`` times the number of chunks. So the fold runs in blocks of
+    ``w = ceil(sqrt(n))`` sentences: an outer ``aggregate`` over the blocks
+    carries ``r``, and each block folds from the carried ``a``, ``c`` and
+    ``i`` with an empty ``r`` of its own, which it appends at the block's
+    end. A 10 MB document took about 23 s in one fold and about 1 s in
+    blocks (2 Spark threads on a 4-core box), as fast as the pandas UDF.
+    """
+    size, overlap = int(chunk_size), int(chunk_overlap)
+
+    def step(r: str, a: str, c: str) -> str:
+        return f"named_struct('r', {r}, 'a', {a}, 'c', {c}, 'i', acc.i + 1)"
+
+    closed = "concat(acc.r, array(acc.a, acc.i))"
+    # a sentence longer than chunk_size flushes the current chunk and is
+    # emitted alone; nothing carries over
+    oversize = step(f"concat(IF(acc.c > 0, {closed}, acc.r), "
+                    f"array(acc.i, acc.i + 1))", "acc.i + 1", "0")
+    # the backward scan keeps nothing past the first overflowing sentence
+    trailing = (
+        f"aggregate(reverse(slice(lens, acc.a + 1, acc.i - acc.a)), "
+        f"named_struct('k', 0, 'm', 0, 'done', false), (o, x) -> "
+        f"IF(o.done OR o.m + x > {overlap}, "
+        f"named_struct('k', o.k, 'm', o.m, 'done', true), "
+        f"named_struct('k', o.k + 1, 'm', o.m + x + 1, 'done', false)))")
+    # when the sentence does not fit beside the overlap, the overlap is
+    # flushed as its own chunk and the sentence starts a fresh one
+    flushed = (f"IF(ov.k > 0, concat({closed}, array(acc.i - ov.k, acc.i)), "
+               f"{closed})")
+    close = (
+        f"transform(array({trailing}), ov -> IF(ov.m + ln <= {size}, "
+        f"{step(closed, 'acc.i - ov.k', 'ov.m + ln + 1')}, "
+        f"{step(flushed, 'acc.i', 'ln + 1')}))[0]")
+    zero = ("named_struct('r', CAST(array() AS ARRAY<INT>), 'a', 0, 'c', 0, "
+            "'i', 0)")
+    finish = (f"acc -> transform(array(IF(acc.c > 0, {closed}, acc.r)), rr -> "
+              f"IF(size(rr) = 0, array(), transform(sequence(0, size(rr) DIV 2"
+              f" - 1), j -> array_join(slice(sents, rr[2 * j] + 1, "
+              f"rr[2 * j + 1] - rr[2 * j]), ' '))))[0]")
+    place = (f"(acc, ln) -> CASE WHEN ln > {size} THEN {oversize} "
+             f"WHEN acc.c + ln <= {size} THEN "
+             f"{step('acc.r', 'acc.a', 'acc.c + ln + 1')} "
+             f"ELSE {close} END")
+    # a block of w sentences folds from the carried a, c, i with no ranges,
+    # then appends its ranges to the carried ones
+    block = (f"aggregate(slice(lens, b + 1, w), named_struct('r', "
+             f"CAST(array() AS ARRAY<INT>), 'a', blk.a, 'c', blk.c, 'i', "
+             f"blk.i), {place}, acc -> named_struct('r', concat(blk.r, "
+             f"acc.r), 'a', acc.a, 'c', acc.c, 'i', acc.i))")
+    merge = (f"transform(array(greatest(1, int(ceil(sqrt(size(lens)))))), "
+             f"w -> aggregate(filter(sequence(0, size(lens), w), "
+             f"b -> b < size(lens)), {zero}, (blk, b) -> {block}, "
+             f"{finish}))[0]")
+    return (f"transform(array({_sentences_sql(text_sql, mode)}), sents -> "
+            f"transform(array(transform(sents, s -> length(s))), "
+            f"lens -> {merge})[0])[0]")
+
+
 def chunk_documents(docs: DataFrame, *, id_col: str = "doc_id",
                     text_col: str = "text",
                     chunk_size: int = config.CHUNK_SIZE,
@@ -168,22 +309,25 @@ def chunk_documents(docs: DataFrame, *, id_col: str = "doc_id",
     chunk with ``chunk_index`` (the materialized per-doc row_number the
     reference assigns at split time, ``document_processor.py:141-147``).
 
-    Implemented with a pandas UDF over ``text_col`` returning the chunk array,
-    then ``posexplode`` — a narrow transformation (NO shuffle at all, unlike a
-    grouped-map), because chunking one document never needs another
-    document's rows. Carries all other input columns through.
+    The chunk array is :func:`chunks_sql` over ``text_col`` (JVM only) for
+    ``punct`` and ``newline``, or a pandas UDF over :func:`split_text` for
+    ``kss`` and ``words:N``; either way it is ``posexplode``-d, a narrow
+    transformation with no shuffle. Carries all other input columns
+    through.
     """
-    def _chunk(texts):
-        return texts.map(
-            lambda t: split_text(t, chunk_size, chunk_overlap, mode))
+    if mode not in ("punct", "newline"):
+        def _chunk(texts):
+            return texts.map(
+                lambda t: split_text(t, chunk_size, chunk_overlap, mode))
 
-    # explicit functionType: `from __future__ import annotations` stringifies
-    # hints, which PySpark's eval-type inference can't read
-    chunk_udf = F.pandas_udf(_chunk, "array<string>")
+        # no type hints: `from __future__ import annotations` stringifies
+        # them, which PySpark's eval-type inference can't read
+        chunks = F.pandas_udf(_chunk, "array<string>")(F.col(text_col))
+    else:
+        chunks = F.expr(chunks_sql(f"`{text_col}`", chunk_size,
+                                   chunk_overlap, mode))
 
-    other_cols = [c for c in docs.columns if c != text_col]
-    return (
-        docs.withColumn("__chunks", chunk_udf(F.col(text_col)))
-        .select(*other_cols,
-                F.posexplode("__chunks").alias("chunk_index", "content"))
-    )
+    # the generator takes the expression itself: exploding a projected
+    # column instead ran about 1.6x slower on 12 KB documents
+    return docs.select(*[c for c in docs.columns if c != text_col],
+                       F.posexplode(chunks).alias("chunk_index", "content"))

@@ -6,10 +6,14 @@ expand) → parse → sentence-split+merge → enrich metadata → embed → sto
 
     files_df                               (A1/A2/A4 sources)
       └─ left-anti join on doc_name        (C3 — replaces per-file probe loop)
-         └─ chunk_documents               (H5/H6 — narrow, no shuffle)
+         └─ chunk_documents               (H5/H6 — narrow; SQL text for punct/newline)
             └─ enrich                     (H8/H9 — ids + engine metadata)
-               └─ embed                   (J1 — codegen'd hash or mapInPandas model)
+               └─ embed                   (J1 — SQL-text hash or mapInPandas model)
                   └─ store.append         (A5 — partitioned write, master=union)
+
+With the ``punct`` or ``newline`` splitter and the hash embedder every
+step is a JVM expression, so the pipeline starts no Python worker; the
+``kss`` and ``words:N`` splitters and a model embedder run in Python.
 
 Determinism: chunk/doc ids are ``md5(doc_name)`` and
 ``md5(doc_name || '#' || chunk_index)`` (FIXTURES.md rule 2), so outputs

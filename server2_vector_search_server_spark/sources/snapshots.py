@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from server2_vector_search_server_spark.sources.store import (
     CHUNKS_COLS as _COLS,
     CHUNKS_SCHEMA,
+    ChunkStore,
 )
 
 
@@ -132,13 +133,7 @@ class SnapshotChunkStore:
         references no files."""
         return not self._live_files()
 
-    def document_exists(self, doc_name: str,
-                        collection: str | None = None) -> bool:
-        """LIMIT-1 probe, same contract as ChunkStore.document_exists."""
-        if self.is_empty():
-            return False
-        df = self.read(collection).filter(F.col("doc_name") == doc_name)
-        return df.limit(1).count() > 0
+    document_exists = ChunkStore.document_exists
 
     def list_documents(self, collection: str | None = None) -> DataFrame:
         from server2_vector_search_server_spark.operators.catalog import (

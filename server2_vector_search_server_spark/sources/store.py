@@ -60,21 +60,31 @@ class ChunkStore:
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("collection").parquet(self.root))
 
-    def _overwrite_partitions(self, out: DataFrame,
-                              affected: list[str]) -> None:
+    @staticmethod
+    def _partitions(flagged: DataFrame) -> tuple[list[str], set[str]]:
+        """One aggregate over ``flagged``'s boolean ``hit`` column: the
+        partitions that hold a hit row, and the partitions that hold a row
+        that is not hit (those keep rows after the hits are removed)."""
+        rows = (flagged.groupBy("collection")
+                .agg(F.max("hit").alias("hit"),
+                     F.max(~F.col("hit")).alias("kept")).collect())
+        return ([r["collection"] for r in rows if r["hit"]],
+                {r["collection"] for r in rows if r["kept"]})
+
+    def _overwrite_partitions(self, out: DataFrame, affected: list[str],
+                              kept: set[str]) -> None:
         """Dynamic-partition overwrite of ``affected`` with ``out``'s rows,
         including the case dynamic mode cannot express: a partition whose
         surviving row set is EMPTY is never rewritten by Spark (nothing to
-        write → old files stay), so fully-emptied partitions are dropped
-        explicitly after the write. The survivor set is collected BEFORE
-        the write — ``out``'s lineage reads ``self.root``, and re-running
-        it after the overwrite would see the mutated table."""
+        write → old files stay), so the ``affected`` partitions outside
+        ``kept`` (those ``out`` holds no row of) are dropped explicitly
+        after the write. ``kept`` is collected BEFORE the write: ``out``'s
+        lineage reads ``self.root``, and re-running it after the overwrite
+        would see the mutated table."""
         import shutil
 
-        still_present = {r["collection"] for r in
-                         out.select("collection").distinct().collect()}
         self._overwrite_dynamic(out)
-        for part in set(affected) - still_present:
+        for part in set(affected) - kept:
             # local-path fallback for "drop empty partition" — on Delta/
             # Iceberg this is the metadata delete the commit already did
             shutil.rmtree(os.path.join(self.root, f"collection={part}"),
@@ -112,17 +122,18 @@ class ChunkStore:
             return
         table = self.read(None)
         ids = incoming.select("doc_id").distinct()
-        hit_parts = {r["collection"] for r in
-                     table.join(F.broadcast(ids), "doc_id")
-                     .select("collection").distinct().collect()}
-        hit_parts |= {r["collection"] for r in
-                      incoming.select("collection").distinct().collect()}
-        parts = sorted(hit_parts)
+        hit_parts, kept = self._partitions(
+            table.join(F.broadcast(ids.withColumn("hit", F.lit(True))),
+                       "doc_id", "left")
+            .select("collection", F.col("hit").isNotNull().alias("hit")))
+        new_parts = {r["collection"] for r in
+                     incoming.select("collection").distinct().collect()}
+        parts = sorted(set(hit_parts) | new_parts)
         survivors = (table.filter(F.col("collection").isin(parts))
                      .join(F.broadcast(ids), "doc_id", "left_anti"))
         out = (survivors.select(*CHUNKS_COLS)
                .unionByName(incoming.select(*CHUNKS_COLS)))
-        self._overwrite_partitions(out, parts)
+        self._overwrite_partitions(out, parts, kept | new_parts)
 
     # -- A7: scans ----------------------------------------------------------
     def read(self, collection: str | None = None) -> DataFrame:
@@ -139,11 +150,18 @@ class ChunkStore:
     # -- B4/B5: existence ----------------------------------------------------
     def document_exists(self, doc_name: str,
                         collection: str | None = None) -> bool:
-        """LIMIT-1 probe (vector_store.py:56-89); collection=None = global."""
+        """LIMIT-1 probe (vector_store.py:56-89); collection=None = global.
+
+        ``isEmpty`` runs one job over every partition, each stopping at its
+        first match. ``limit(1).count()`` runs two (the limit's
+        single-partition exchange is its own job), and ``limit(1)`` collects
+        take partitions incrementally, one more job per round that finds
+        no match. Only ``is_empty`` and ``read`` are used, so
+        ``SnapshotChunkStore`` shares this method."""
         if self.is_empty():
             return False
-        df = self.read(collection).filter(F.col("doc_name") == doc_name)
-        return df.limit(1).count() > 0
+        return not (self.read(collection)
+                    .filter(F.col("doc_name") == doc_name).isEmpty())
 
     # -- A8: delete ----------------------------------------------------------
     def delete_document(self, doc_id: str) -> bool:
@@ -158,14 +176,15 @@ class ChunkStore:
         if self.is_empty():
             return False
         table = self.read(None)
-        hit_parts = [r["collection"] for r in
-                     table.filter(F.col("doc_id") == doc_id)
-                     .select("collection").distinct().collect()]
+        # one probe answers both questions: which partitions hold the doc,
+        # and which of them keep other rows
+        hit_parts, kept = self._partitions(table.select(
+            "collection", (F.col("doc_id") == doc_id).alias("hit")))
         if not hit_parts:
             return False
         self._overwrite_partitions(
             table.filter(F.col("collection").isin(hit_parts))
-            .filter(F.col("doc_id") != doc_id), hit_parts)
+            .filter(F.col("doc_id") != doc_id), hit_parts, kept)
         return True
 
     # -- maintenance ---------------------------------------------------------

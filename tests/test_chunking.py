@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -204,3 +205,106 @@ def test_chunking_stats_recursive_cte_oracle_branch_coverage():
     # sanity: the crafted docs really exercise the intended branches
     assert any(len(c) > 120 for c in split_text(docs[1][1], 120, 30,
                                                 mode="words:10"))
+
+
+# -- the SQL-text chunker against the pure spec --------------------------------
+PY_WHITESPACE = [c for c in map(chr, range(0x110000)) if c.isspace()]
+
+
+def _parity_texts() -> list:
+    """Texts that hit every edge the SQL chunker could get wrong, plus a
+    seeded fuzz of words, sentence enders and whitespace."""
+    import random
+
+    ws = "".join(PY_WHITESPACE)
+    texts = [
+        None, "", "   ", ws, ws + "a" + ws,
+        # every Python whitespace character, as a separator, after a
+        # sentence ender, and at both ends
+        "".join(f"w{i}{c}" for i, c in enumerate(PY_WHITESPACE)),
+        "".join(f"s{i}.{c}" for i, c in enumerate(PY_WHITESPACE)),
+        ws + "Lead. Mid!" + ws + "Tail?" + ws,
+        "line one\nline two\n\n\x85line three line four\n",
+        # emoji and other astral code points: lengths count code points
+        "😀 😀😀. 𝔘𝔫𝔦 𝔠𝔬𝔡𝔢! 👍🏽👍🏽 ok. " * 6,
+        "서울은 대한민국의 수도입니다. 부산은 항구 도시입니다! 맞습니까? 네。好！真？",
+        # an oversize sentence between short ones
+        "short. " + "x" * 600 + ". tail one. tail two.",
+        # the overlap-does-not-fit restart (see the branch check below)
+        "aaaaaa bbbbbb cccccc",
+        "aaaaaa. bbbbbb. cccccc. dddddd.",
+        # a long document: the merge folds it in many blocks, and chunks
+        # and overlaps straddle the block ends
+        " ".join(f"Sentence {i} is {'long ' * (i % 7)}here." if i % 5
+                 else f"Line {i}\n" for i in range(600)),
+    ]
+    rnd = random.Random(11)
+    alphabet = list("abcdefgh.!?。！？") + PY_WHITESPACE + ["😀", "𝔘", "é"]
+    for _ in range(300):
+        n = rnd.choice([3, 40, 160, 700])
+        texts.append("".join(
+            rnd.choice(alphabet) if rnd.random() < 0.35
+            else rnd.choice("abcdefgh") for _ in range(n)))
+    return texts
+
+
+PARITY_PAIRS = [(25, 10), (13, 13), (8, 0), (120, 30), (500, 100)]
+
+
+@pytest.mark.parametrize("mode", ["punct", "newline"])
+def test_sql_chunker_matches_split_text(spark, mode):
+    """chunks_sql gives split_text's chunks string for string, in order."""
+    from server2_vector_search_server_spark.operators.chunking import (
+        chunks_sql,
+    )
+
+    texts = _parity_texts()
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = df.select("id", *[
+        F.expr(chunks_sql("text", size, overlap, mode)).alias(f"c{j}")
+        for j, (size, overlap) in enumerate(PARITY_PAIRS)]).collect()
+    assert len(got) == len(texts)
+    for row in got:
+        for j, (size, overlap) in enumerate(PARITY_PAIRS):
+            want = split_text(texts[row["id"]], size, overlap, mode)
+            assert list(row[f"c{j}"] or []) == want, (
+                mode, size, overlap, texts[row["id"]])
+    # the fixture reaches the restart branch: the pure overlap is flushed
+    # as its own chunk before the sentence that does not fit beside it
+    assert split_text("aaaaaa. bbbbbb. cccccc. dddddd.", 13, 13) == [
+        "aaaaaa.", "aaaaaa.", "bbbbbb.", "bbbbbb.", "cccccc.", "cccccc.",
+        "dddddd."]
+
+
+def test_sql_whitespace_class_is_python_isspace(spark):
+    """The regex class the SQL chunker splits on matches exactly the
+    characters str.isspace accepts, over the whole BMP and a sample of
+    astral code points."""
+    from server2_vector_search_server_spark.operators.chunking import (
+        _WHITESPACE,
+        _regex_class,
+    )
+
+    assert sorted(_WHITESPACE) == PY_WHITESPACE
+    probe = "".join(chr(c) for c in range(1, 0x10000)
+                    if not 0xD800 <= c < 0xE000) + "😀𝔘🏽\U0010FFFD"
+    df = spark.createDataFrame([(probe,)], "x string")
+    got = df.select(F.expr(
+        f"regexp_extract_all(x, '{_regex_class(_WHITESPACE)}', 0)")).first()[0]
+    assert got == [c for c in probe if c.isspace()]
+
+
+def test_python_udf_only_for_kss_and_words(spark):
+    """punct and newline chunk in the JVM; kss (a Python library) and
+    words:N (faster in Python on long documents) plan the pandas UDF."""
+    df = spark.createDataFrame([(1, "a. b.")], "doc_id long, text string")
+
+    def plan(mode):
+        return chunk_documents(df, mode=mode)._jdf.queryExecution() \
+            .executedPlan().toString()
+
+    for mode in ("punct", "newline"):
+        assert not any(n in plan(mode) for n in (
+            "ArrowEvalPython", "BatchEvalPython")), mode
+    for mode in ("kss", "words:2"):
+        assert "ArrowEvalPython" in plan(mode), mode

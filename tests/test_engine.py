@@ -60,6 +60,66 @@ def test_upload_intra_batch_duplicates_and_empty_docs(engine):
     assert {r["content"] for r in chunks} == {"First copy wins here."}
 
 
+def test_list_upload_runs_in_the_jvm(engine, spark_jobs):
+    """A list upload plans no Python evaluation and no pickled LogicalRDD
+    input, and pays a fixed number of jobs: the status probe (2), the
+    dedup gate (2), the checkpoint, the append and the per-document counts
+    (2). Statuses come back in first-occurrence order."""
+    from unittest import mock
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is the
+    # abstract base the classic and Connect frames share)
+    DataFrame = type(engine.spark.range(1))
+    plans = []
+
+    def recording(name):
+        orig = getattr(DataFrame, name)
+
+        def wrapper(self, *args, **kwargs):
+            qe = self._jdf.queryExecution()
+            plans.append((name, qe.optimizedPlan().toString(),
+                          qe.executedPlan().toString()))
+            return orig(self, *args, **kwargs)
+        return wrapper
+
+    batch = [("zeta.txt", "Zeta is new. It has two sentences."),
+             ("alpha.txt", "an already stored name"),
+             ("eta.txt", "Eta is new too.")]
+    with mock.patch.object(DataFrame, "collect", recording("collect")), \
+            mock.patch.object(DataFrame, "localCheckpoint",
+                              recording("localCheckpoint")):
+        statuses = engine.upload_documents(batch, "collection_b")
+    assert [s["filename"] for s in statuses] == [n for n, _ in batch]
+    assert [s["status"] for s in statuses] == ["success", "skipped",
+                                               "success"]
+    assert [name for name, _, _ in plans] == [
+        "collect", "localCheckpoint", "collect"]
+    for _, logical, physical in plans:
+        assert "ArrowEvalPython" not in physical, physical
+        assert "BatchEvalPython" not in physical, physical
+    # the probe and the ingest read the batch itself; the counts collect
+    # reads the checkpoint, which is a JVM-side LogicalRDD
+    for _, logical, _ in plans[:2]:
+        assert "LogicalRDD" not in logical, logical
+        assert "LocalRelation" in logical, logical
+
+    assert spark_jobs(lambda: engine.upload_documents(
+        [("theta.txt", "Theta is new."), ("alpha.txt", "stored")],
+        "collection_b")) <= 8
+
+
+def test_delete_and_exists_job_budgets(engine, spark_jobs):
+    """delete_document answers "which partitions hold the doc" and "which
+    keep other rows" with one aggregate (2 jobs), then writes (1);
+    document_exists is one job whether or not the name is stored."""
+    doc_id = engine.list_documents("collection_a") \
+        .filter("doc_name = 'alpha.txt'").first()["doc_id"]
+    assert spark_jobs(lambda: engine.delete_document(doc_id)) <= 3
+    assert engine.document_exists("alpha.txt") is False
+    assert spark_jobs(lambda: engine.document_exists("beta.txt")) == 1
+    assert spark_jobs(lambda: engine.document_exists("alpha.txt")) == 1
+
+
 def test_master_is_union_and_collections_are_pruned(engine):
     master = {r["doc_name"] for r in
               engine.list_documents("master").collect()}
