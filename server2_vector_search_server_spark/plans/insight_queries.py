@@ -1091,13 +1091,15 @@ def streaming_bloom_dedup_upkeep(spark: SparkSession,
         bloom_might_contain,
         bloom_positions,
     )
-    from server2_vector_search_server_spark.plans.registry import scratch_dir
+    from server2_vector_search_server_spark.plans.registry import (
+        scratch_dir,
+        staged_source,
+    )
 
     docs = tbl(spark, sf_dir, "documents")
     corpus = (docs.filter(F.col("doc_id") < 400)
               .select("doc_id", "text"))
-    src = scratch_dir("bloom_stream_")
-    corpus.repartition(6).write.mode("overwrite").parquet(src)
+    src = staged_source(spark, sf_dir, "documents_lt400", 6, lambda: corpus)
     state = scratch_dir("bloom_state_") + "/words"
 
     def process(b: DataFrame, batch_id: int) -> None:

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark.plans.registry import (
-    query, state_partitions, tbl,
+    query, tbl,
 )
 
 # ---------------------------------------------------------------------------
@@ -1554,21 +1554,20 @@ def streaming_seasonal_baseline_upkeep(spark: SparkSession,
 
     from server2_vector_search_server_spark.plans.registry import (
         scratch_dir,
+        staged_source,
     )
     from server2_vector_search_server_spark.streaming.ivm import (
         HourlyRollupView,
         start_rollup_stream,
     )
 
+    # the same events x 6 source streaming_incremental_rollup stages
+    src = staged_source(spark, sf_dir, "events", 6)
     work = scratch_dir("seasonal_ivm_")
-    src = os.path.join(work, "events")
-    tbl(spark, sf_dir, "events").repartition(6).write.parquet(src)
     view = HourlyRollupView(spark, os.path.join(work, "view"))
-    with state_partitions(spark):
-        q = start_rollup_stream(spark, src, view,
-                                os.path.join(work, "ckpt"),
-                                max_files_per_trigger=2)
-        q.awaitTermination()
+    q = start_rollup_stream(spark, src, view, os.path.join(work, "ckpt"),
+                            max_files_per_trigger=2)
+    q.awaitTermination()
     cur = view.current()
     origin_h = F.floor(
         F.unix_timestamp(F.lit(_SD_ORIGIN).cast("timestamp")) / 3600.0)

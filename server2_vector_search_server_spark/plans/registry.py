@@ -208,7 +208,8 @@ def scratch_dir(prefix: str) -> str:
 
 
 # Session-level memo for deterministic build artifacts (materialized index
-# directories, trained PQ codebooks, shared edge tables). Such an artifact
+# directories, trained PQ codebooks, shared edge tables, staged streaming
+# sources — see :func:`staged_source`). Such an artifact
 # is a LAYOUT of immutable input — identical bytes on every rebuild — so
 # repeated calls in one process (the bench's median-of-3, a long-lived
 # engine session) pay the build once and measure the SERVE path. Keyed by
@@ -342,13 +343,38 @@ def link_table_files(sf_dir: str, name: str, dest_dir: str) -> None:
         os.symlink(src, os.path.join(dest_dir, f"{name}.parquet"))
 
 
+def staged_source(spark: SparkSession, sf_dir: str, recipe: str,
+                  files: int, frame: Callable[[], DataFrame] | None = None
+                  ) -> str:
+    """A ``files``-file parquet copy of an input, staged once per
+    (recipe, file count, ``sf_dir``) in a process through
+    :func:`build_memo`, as a streaming pillar's file source: several files
+    make several micro-batches under ``maxFilesPerTrigger``.
+
+    ``frame()`` builds the rows; by default the whole table named
+    ``recipe``, so pillars that stream the same table the same way share
+    one directory. A recipe name must identify its rows: two pillars that
+    pass the same name get the same files. Only a source that the pillar
+    reads is staged this way, never one it appends to."""
+    def build() -> str:
+        src = scratch_dir(f"staged_{recipe}_")
+        rows = frame() if frame is not None else tbl(spark, sf_dir, recipe)
+        rows.repartition(files).write.mode("overwrite").parquet(src)
+        return src
+
+    return build_memo(("staged_source", recipe, files, sf_dir), build)
+
+
 from contextlib import contextmanager
 
 
 @contextmanager
 def state_partitions(spark, n: int = 8):
     """Context manager pinning ``spark.sql.shuffle.partitions`` while a
-    STREAMING query starts (restored on exit).
+    STATEFUL streaming query starts (restored on exit). It is for
+    stateful streams only: a stateless stream (a ``foreachBatch`` rollup,
+    a stream-static join) keeps no state store, so there the pin only
+    widens each batch's shuffle.
 
     Why: every micro-batch of a stateful streaming operator commits one
     state-store delta file PER SHUFFLE PARTITION per operator — so the

@@ -30,6 +30,7 @@ from server2_vector_search_server_spark.session import read_events_stream
 from server2_vector_search_server_spark.plans.registry import (
     link_table_files,
     scratch_dir,
+    staged_source,
     state_partitions,
     REGISTRY, exact_sum, query, sql_exact_sum, tbl,
 )
@@ -263,10 +264,10 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("doc_id") < 300).select("doc_id", "text"))
     corpus = docs.unionByName(
         docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text"))
-    src = scratch_dir("dedup_stream_")
     # several files => several micro-batches; copies land in different
     # batches than originals, so suppression must cross batch boundaries
-    corpus.repartition(6).write.mode("overwrite").parquet(src)
+    src = staged_source(spark, sf_dir, "documents_lt300_and_copies", 6,
+                        lambda: corpus)
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 2).parquet(src))
     deduped = (stream
@@ -317,15 +318,12 @@ def streaming_incremental_rollup(spark: SparkSession,
         HourlyRollupView, start_rollup_stream,
     )
 
+    src = staged_source(spark, sf_dir, "events", 6)
     work = scratch_dir("ivm_rollup_")
-    src = os.path.join(work, "events")
-    tbl(spark, sf_dir, "events").repartition(6).write.parquet(src)
     view = HourlyRollupView(spark, os.path.join(work, "view"))
-    with state_partitions(spark):
-        q = start_rollup_stream(spark, src, view,
-                                os.path.join(work, "ckpt"),
-                                max_files_per_trigger=2)
-        q.awaitTermination()
+    q = start_rollup_stream(spark, src, view, os.path.join(work, "ckpt"),
+                            max_files_per_trigger=2)
+    q.awaitTermination()
     view.compact()   # answers must be invariant across compaction
     return view.current().orderBy("window_start", "event_type")
 
@@ -356,10 +354,9 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_totals,
     )
 
-    work = scratch_dir("running_totals_")
-    src = os.path.join(work, "events")
-    (tbl(spark, sf_dir, "events").filter(F.col("user_id") < 300)
-     .repartition(6).write.parquet(src))
+    src = staged_source(
+        spark, sf_dir, "events_user_lt300", 6,
+        lambda: tbl(spark, sf_dir, "events").filter(F.col("user_id") < 300))
     stream = read_events_stream(spark, src, maxFilesPerTrigger=2)
     sink = f"running_totals_{uuid.uuid4().hex[:8]}"
     with state_partitions(spark):
@@ -628,10 +625,9 @@ def streaming_static_enrichment(spark: SparkSession,
     drained enrichment aggregate must equal the batch join; per-batch
     aggregation happens in foreachBatch-free append mode with the rollup
     applied after draining (exact cents sum, hash-gated)."""
-    work = scratch_dir("enrich_")
-    src = os.path.join(work, "events")
-    (tbl(spark, sf_dir, "events").filter(F.col("user_id") < 400)
-     .repartition(5).write.parquet(src))
+    src = staged_source(
+        spark, sf_dir, "events_user_lt400", 5,
+        lambda: tbl(spark, sf_dir, "events").filter(F.col("user_id") < 400))
     dim = (tbl(spark, sf_dir, "events").filter(F.col("user_id") < 400)
            .select("user_id").distinct()
            .select("user_id",
@@ -847,12 +843,12 @@ def streaming_edge_table_upkeep(spark: SparkSession,
     supplier cap here only bounds the driver-checked result, not the
     mechanism."""
     work = scratch_dir("edge_upkeep_")
-    src = os.path.join(work, "lineitem")
     out_dir = os.path.join(work, "pairs")
     li = (tbl(spark, sf_dir, "lineitem")
           .filter(F.col("l_suppkey") < _EDGE_SUPP_CAP)
           .select("l_orderkey", "l_suppkey"))
-    li.repartition(6).write.parquet(src)
+    src = staged_source(spark, sf_dir, "lineitem_supp_orderkeys", 6,
+                        lambda: li)
     orders_static = (tbl(spark, sf_dir, "orders")
                      .select("o_orderkey", "o_custkey"))
 

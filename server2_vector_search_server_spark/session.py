@@ -8,9 +8,15 @@ DataFrame API (partitioning, broadcast hints, AQE) so the same plans hold on a
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def get_spark(app_name: str = "server2_vector_search_server_spark",
@@ -44,8 +50,43 @@ def get_spark(app_name: str = "server2_vector_search_server_spark",
     return spark
 
 
+# Inferred parquet schemas, keyed by path, the Hadoop ``FileStatus`` length
+# and modification time, and the nanos-as-long setting (it changes what a
+# nanos timestamp infers as). Inference is a footer-reading Spark job; a
+# read with the schema given runs none.
+_SCHEMAS: dict = {}
+
+
+def _parquet_schema(spark: SparkSession, path: str):
+    """The inferred schema of the parquet file or directory at ``path``,
+    memoized per process under the key above. The status is read through
+    Hadoop's ``FileSystem``, so any URI scheme works; a directory's
+    modification time moves when a file is added to or removed from it. A
+    failed inference raises and is not memoized."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        status = fs.getFileStatus(jpath)
+    except Py4JJavaError:
+        # a missing or unreadable path: the reader raises its own error
+        return spark.read.parquet(path).schema
+    key = (path, status.getLen(), status.getModificationTime(),
+           spark.conf.get(NANOS_AS_LONG, "false"))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _SCHEMAS[key] = schema
+    return schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver-generated parquet table.
+
+    The table's schema is inferred once per process and then given to the
+    reader, so a repeated read runs no Spark job. The memo key is the path,
+    its Hadoop ``FileStatus`` length and modification time, and the
+    ``spark.sql.legacy.parquet.nanosAsLong`` setting: a table rewritten in
+    place is inferred again.
 
     ``events.parquet`` has shipped as either TIMESTAMP(NANOS) — which Spark's
     parquet reader rejects unless nanos are read as long and converted — or
@@ -60,16 +101,16 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # integer DIV, not float /: nanos ~1.7e18 exceed double's 53-bit
-            # mantissa, so float division drifts by up to ±1 microsecond
-            return df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(path)
+        spark.conf.set(NANOS_AS_LONG, "true")
+    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    if name != "events":
+        return df
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        # integer DIV, not float /: nanos ~1.7e18 exceed double's 53-bit
+        # mantissa, so float division drifts by up to ±1 microsecond
+        return df.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def read_events_stream(spark: SparkSession, src_dir: str,
@@ -77,21 +118,26 @@ def read_events_stream(spark: SparkSession, src_dir: str,
     """``readStream`` over an events-shaped parquet directory, normalizing
     ``ts`` exactly like :func:`read_table` — a streaming source must be given
     its schema up front, so peek at the existing files (footer-only, driver
-    side) to decide between the nanos-as-long and the plain-micros layout.
+    side, memoized like :func:`read_table`'s) to decide between the
+    nanos-as-long and the plain-micros layout.
     Extra keyword args become reader options (e.g. maxFilesPerTrigger).
     """
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NANOS_AS_LONG, "true")
     try:
-        peeked = spark.read.parquet(src_dir).schema["ts"].dataType
+        peeked = _parquet_schema(spark, src_dir)["ts"].dataType
         nanos = isinstance(peeked, T.LongType)
-    except Exception:
-        # Directory exists but holds no parquet yet — normal for a stream
-        # whose files arrive later. Assume the plain-micros layout (what the
-        # driver generates today); a nanos file landing later would need an
+    except AnalysisException as exc:
+        # An empty or missing directory — normal for a stream whose files
+        # arrive later. Assume the plain-micros layout (what the driver
+        # generates today); a nanos file landing later would need an
         # explicit restart anyway since a stream's schema is fixed at start.
+        # Any other failure (a corrupt footer, a permission error) raises.
+        _log.warning("events stream %s: no schema to peek (%s); assuming "
+                     "the micros layout", src_dir, exc.getCondition())
         nanos = False
     raw = ("event_id long, ts {} , user_id long, event_type string, "
            "value double, props string").format("long" if nanos

@@ -400,17 +400,25 @@ def test_ivm_compact_swap_is_crash_recoverable(spark, tmp_path):
     assert got == want
 
 
-def test_read_events_stream_from_empty_directory(spark, tmp_path):
+def test_read_events_stream_from_empty_directory(spark, tmp_path, caplog):
     """ADVICE r02: a stream source directory that exists but has no parquet
     yet (files arrive later) must not fail the schema peek — fall back to
-    the plain-micros layout and pick up files written after start."""
+    the plain-micros layout, log it, and pick up files written after start.
+    The failed peek is not memoized: once a file is there, a new stream
+    peeks it. A file that is not parquet is an error, not a fallback."""
+    import logging
     from datetime import datetime
+
+    from pyspark.errors import AnalysisException
 
     from server2_vector_search_server_spark.session import read_events_stream
 
     src = tmp_path / "events_src"
     src.mkdir()
-    stream = read_events_stream(spark, str(src))   # must not raise
+    with caplog.at_level(logging.WARNING):
+        stream = read_events_stream(spark, str(src))   # must not raise
+    assert any("assuming the micros layout" in r.getMessage()
+               for r in caplog.records)
     schema = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
     spark.createDataFrame(
@@ -424,6 +432,19 @@ def test_read_events_stream_from_empty_directory(spark, tmp_path):
     q.awaitTermination()
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1 and rows[0]["event_type"] == "click"
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING):
+        read_events_stream(spark, str(src))
+    assert not [r for r in caplog.records   # peeked the file: no fallback
+                if r.name == "server2_vector_search_server_spark.session"]
+
+    bad = tmp_path / "corrupt"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_bytes(b"not a parquet footer")
+    with pytest.raises(Exception) as err:   # the failed footer-read job
+        read_events_stream(spark, str(bad))
+    assert not isinstance(err.value, AnalysisException)
 
 
 def test_running_user_totals_tws_v2(spark, tmp_path):
@@ -577,3 +598,21 @@ def test_state_partitions_pins_and_restores(spark):
     except RuntimeError:
         pass
     assert spark.conf.get(key) == before
+
+
+def test_incremental_rollup_warm_call_job_budget(spark, spark_jobs):
+    """A warm call of streaming_incremental_rollup runs only its compact()
+    jobs in the caller's job group before the final action: the events
+    schema is memoized and the 6-file stream source is staged once per
+    process (micro-batches run in the stream's own job group). Re-copying
+    the source and re-inferring its schema on every call ran 6. Rows equal
+    the first call's."""
+    from server2_vector_search_server_spark.plans import load_registry
+    from tests.conftest import SF_SMOKE
+
+    fn = load_registry()["streaming_incremental_rollup"].fn
+    first = fn(spark, SF_SMOKE)
+    warm = []
+    jobs = spark_jobs(lambda: warm.append(fn(spark, SF_SMOKE)))
+    assert jobs <= 2, jobs
+    assert sorted(warm[0].collect()) == sorted(first.collect())
