@@ -30,16 +30,22 @@ Semantics preserved exactly:
   here, because master is the union of one partitioned table.
 
 Scale: every method is a thin composition of the library's operators — the
-partition-pruned scan, broadcast-scored top-k, and anti-join gate all hold
-their plans at cluster scale; only :meth:`upload_documents`' per-file status
-summary collects (bounded by the number of uploaded files, not rows).
+partition-pruned scan, broadcast-scored top-k, and name-pushdown status probe
+hold their plans at cluster scale; only :meth:`upload_documents` collects:
+one count per uploaded file, and one name per stored chunk of a re-uploaded
+file (bounded by the batch, not by the store).
 
 An upload runs in the JVM end to end: a list batch becomes an Arrow-built
 ``LocalRelation``, chunking and the hash embedding are SQL-text
 expressions, and no plan it builds starts a Python worker (a custom
 embedder or a ``kss`` / ``words:N`` split mode brings one back). It pays
-two collects: the status probe before the ingest and the per-document
-chunk counts after.
+two collects before its write: each document's chunk count, and the
+status probe, which is its only gate. For list input the counts are
+folded on the driver, so a list upload runs at most 2 jobs: the probe,
+one scan of the store rows of the batch's names, and the append of the
+fresh documents as given. DataFrame input adds the shuffle that collapses
+duplicate names and one counts job over one row per document. A search
+runs one job: the query embedding is folded on the driver too.
 """
 
 from __future__ import annotations
@@ -57,6 +63,7 @@ from server2_vector_search_server_spark.operators.catalog import (
     group_documents,
     list_documents as _list_documents,
 )
+from server2_vector_search_server_spark.operators.chunking import chunk_array
 from server2_vector_search_server_spark.plans.ingest import ingest_documents
 from server2_vector_search_server_spark.sources.store import ChunkStore
 
@@ -99,16 +106,17 @@ class DocumentSearchEngine:
         over a one-row DataFrame with the ingest call convention, so an
         engine built with a custom embedder searches with MATCHING vectors
         (a hash-embedded query against model-embedded chunks would silently
-        score garbage). The query is one literal over ``spark.range(1)``, so
-        the hash default stays the one-string SQL expression ``embed_hash``
-        stores with: ~45 py4j round trips and one job, and the bitwise-same
-        vector as the stored chunk of the same text. The returned vector is
-        inlined as a literal into the scoring plan.
+        score garbage). The row is an inline ``VALUES`` table with the query
+        as a bound parameter, so it plans as a ``LocalRelation``: Catalyst
+        folds the hash default (the one-string SQL expression ``embed_hash``
+        stores with) on the driver, and ``.first()`` runs no job. The vector
+        is bitwise the stored chunk's of the same text; it is inlined as a
+        literal into the scoring plan.
         """
-        one = self.spark.range(1).select(F.lit(query).alias("content"))
-        row = (self.embedder(one, text_col="content", out_col="embedding",
-                             dim=self.embed_dim)
-               .select("embedding").first())
+        one = self.spark.sql("SELECT * FROM VALUES (:q) AS t(content)",
+                             args={"q": query})
+        row = self.embedder(one, text_col="content", out_col="embedding",
+                            dim=self.embed_dim).first()
         return [float(x) for x in row["embedding"]]
 
     # -- POST /upload-document ----------------------------------------------
@@ -116,7 +124,10 @@ class DocumentSearchEngine:
         self,
         docs: DataFrame | Sequence[tuple[str, str]],
         collection_name: str = config.MASTER_COLLECTION_NAME,
-        **ingest_kwargs: Any,
+        *,
+        chunk_size: int = config.CHUNK_SIZE,
+        chunk_overlap: int = config.CHUNK_OVERLAP,
+        split_mode: str = "punct",
     ) -> list[dict[str, Any]]:
         """Ingest documents; returns per-file statuses (api_models.py:18-35).
 
@@ -128,10 +139,19 @@ class DocumentSearchEngine:
         check skips the later copies — for list input the first occurrence
         wins); the rest are chunked, embedded, and appended. For list input
         the statuses come in first-occurrence order.
+
+        Each document's chunks are counted first; the status probe is then
+        the only gate, as in the reference, and the fresh documents are
+        written with ``ingest_documents(..., on_conflict="append")``.
+        DataFrame input is materialized once (a lazy local checkpoint that
+        the counts fill), so the counts and the write see the same rows;
+        the embedder must keep every row, as both shipped ones do. A null
+        ``doc_name`` raises ``ValueError`` before anything is written.
         """
         seen: dict[str, str] = {}
         if isinstance(docs, DataFrame):
-            docs = docs.dropDuplicates(["doc_name"])
+            docs = (docs.select("doc_name", "text")
+                    .dropDuplicates(["doc_name"]).localCheckpoint(eager=False))
         else:
             for name, text in docs:
                 seen.setdefault(name, text)
@@ -139,35 +159,43 @@ class DocumentSearchEngine:
             # starts a Python worker (a list becomes a pickled LogicalRDD)
             docs = self.spark.createDataFrame(pa.table(
                 [list(seen), list(seen.values())], schema=_UPLOAD_SCHEMA))
-        # the one status probe, run before the ingest: each name and whether
-        # it is already stored, which tells "skipped as duplicate" from
-        # "parsed to zero chunks". EXISTS plans as an existence join: one
-        # flag per name, whatever the number of stored chunks.
-        exists = F.lit(False)
-        if not self.store.is_empty():
-            exists = (self.store.read(None).alias("s")
-                      .where(F.col("s.doc_name")
-                             == F.col("d.doc_name").outer()).exists())
-        stored = {r["doc_name"]: r["stored"] for r in docs.alias("d").select(
-            "doc_name", exists.alias("stored")).collect()}
-        written = ingest_documents(
-            self.store, docs, collection=collection_name,
-            embed_dim=self.embed_dim, embedder=self.embedder,
-            **ingest_kwargs)
-        added = {
-            r["doc_name"]: r["n_chunks"]
-            for r in written.groupBy("doc_name")
-            .agg(F.count(F.lit(1)).alias("n_chunks")).collect()
-        }
+        # one row per document: its name and chunk count. Over a
+        # LocalRelation Catalyst folds the SQL chunker on the driver: no job.
+        # Null text has a null chunk array, whose size is null (ANSI) or -1
+        # (legacy): 0 chunks.
+        counts = {r["doc_name"]: r["n"] for r in docs.select(
+            "doc_name", F.greatest(F.size(chunk_array(
+                "text", chunk_size, chunk_overlap, split_mode)),
+                F.lit(0)).alias("n")).collect()}
+        if None in counts:
+            raise ValueError("doc_name must not be null")
+        # the status probe, the upload's only gate: which of the batch's
+        # names are stored in ANY collection. The IN list is pushed into the
+        # scan, so the one job reads only rows of those names, and collects
+        # one row per stored chunk of a re-uploaded name.
+        stored: set[str] = set()
+        if counts and not self.store.is_empty():
+            stored = {r["doc_name"] for r in self.store.read(None).where(
+                F.col("doc_name").isin(list(counts))).select(
+                "doc_name").collect()}
+        fresh = [name for name, n in counts.items()
+                 if n and name not in stored]
+        if fresh:
+            ingest_documents(
+                self.store, docs.where(F.col("doc_name").isin(fresh)),
+                collection=collection_name, chunk_size=chunk_size,
+                chunk_overlap=chunk_overlap, split_mode=split_mode,
+                embed_dim=self.embed_dim, embedder=self.embedder,
+                on_conflict="append")
         statuses = []
-        for name in seen or stored:
-            if name in added:
-                statuses.append({"filename": name, "status": "success",
-                                 "chunks_added": added[name], "error": None})
-            elif stored[name]:
+        for name in seen or counts:
+            if name in stored:
                 statuses.append({
                     "filename": name, "status": "skipped", "chunks_added": 0,
                     "error": "Document with the same name already exists"})
+            elif counts[name]:
+                statuses.append({"filename": name, "status": "success",
+                                 "chunks_added": counts[name], "error": None})
             else:
                 statuses.append({
                     "filename": name, "status": "error", "chunks_added": 0,

@@ -32,10 +32,11 @@ so chunking runs in the JVM with no Python worker, like
 ``embedding.hash_embedding_expr``. ``kss`` calls a Python library and
 ``words:N`` is faster in Python (its ``str.split`` beat the two regex passes
 of a SQL form on long documents), so both stay a pandas UDF over the pure
-functions below. Either way the chunk array is ``posexplode``-d: a narrow
-transformation, no shuffle, since chunking one document never needs another
-document's rows. The pure functions are the spec: importable, unit-tested
-without Spark, and pinned string for string against :func:`chunks_sql`.
+functions below. :func:`chunk_array` picks the form; either way the chunk
+array is ``posexplode``-d: a narrow transformation, no shuffle, since
+chunking one document never needs another document's rows. The pure
+functions are the spec: importable, unit-tested without Spark, and pinned
+string for string against :func:`chunks_sql`.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark import config
@@ -300,6 +301,29 @@ def chunks_sql(text_sql: str, chunk_size: int = config.CHUNK_SIZE,
             f"lens -> {merge})[0])[0]")
 
 
+def chunk_array(text_col: str, chunk_size: int = config.CHUNK_SIZE,
+                chunk_overlap: int = config.CHUNK_OVERLAP,
+                mode: str = "punct") -> Column:
+    """The chunk strings of the column ``text_col``, one array per row
+    (null for null text): :func:`chunks_sql` (JVM only) for ``punct`` and
+    ``newline``, a pandas UDF over :func:`split_text` for ``kss`` and
+    ``words:N``. The one copy of the mode switch: :func:`chunk_documents`
+    explodes this array, and an upload counts each document's chunks with
+    its ``size`` before writing them. Over a ``LocalRelation`` a SQL form
+    is folded on the driver and runs no job; the UDF forms run one."""
+    if mode in ("punct", "newline"):
+        return F.expr(chunks_sql(f"`{text_col}`", chunk_size, chunk_overlap,
+                                 mode))
+
+    def _chunk(texts):
+        return texts.map(
+            lambda t: split_text(t, chunk_size, chunk_overlap, mode))
+
+    # no type hints: `from __future__ import annotations` stringifies
+    # them, which PySpark's eval-type inference can't read
+    return F.pandas_udf(_chunk, "array<string>")(F.col(text_col))
+
+
 def chunk_documents(docs: DataFrame, *, id_col: str = "doc_id",
                     text_col: str = "text",
                     chunk_size: int = config.CHUNK_SIZE,
@@ -309,24 +333,11 @@ def chunk_documents(docs: DataFrame, *, id_col: str = "doc_id",
     chunk with ``chunk_index`` (the materialized per-doc row_number the
     reference assigns at split time, ``document_processor.py:141-147``).
 
-    The chunk array is :func:`chunks_sql` over ``text_col`` (JVM only) for
-    ``punct`` and ``newline``, or a pandas UDF over :func:`split_text` for
-    ``kss`` and ``words:N``; either way it is ``posexplode``-d, a narrow
-    transformation with no shuffle. Carries all other input columns
-    through.
+    The chunk array is :func:`chunk_array` over ``text_col``,
+    ``posexplode``-d: a narrow transformation with no shuffle. Carries all
+    other input columns through.
     """
-    if mode not in ("punct", "newline"):
-        def _chunk(texts):
-            return texts.map(
-                lambda t: split_text(t, chunk_size, chunk_overlap, mode))
-
-        # no type hints: `from __future__ import annotations` stringifies
-        # them, which PySpark's eval-type inference can't read
-        chunks = F.pandas_udf(_chunk, "array<string>")(F.col(text_col))
-    else:
-        chunks = F.expr(chunks_sql(f"`{text_col}`", chunk_size,
-                                   chunk_overlap, mode))
-
+    chunks = chunk_array(text_col, chunk_size, chunk_overlap, mode)
     # the generator takes the expression itself: exploding a projected
     # column instead ran about 1.6x slower on 12 KB documents
     return docs.select(*[c for c in docs.columns if c != text_col],

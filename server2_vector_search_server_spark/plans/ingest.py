@@ -5,11 +5,22 @@ expand) → parse → sentence-split+merge → enrich metadata → embed → sto
 (dual-write). Engine lifecycle (same observable result, Spark-shaped):
 
     files_df                               (A1/A2/A4 sources)
-      └─ left-anti join on doc_name        (C3 — replaces per-file probe loop)
+      └─ gate, by on_conflict              (C3)
+           skip:    left-anti join on doc_name (for the per-file probes)
+           append:  none — the caller gated the batch
+           replace: none — the write replaces stored documents
          └─ chunk_documents               (H5/H6 — narrow; SQL text for punct/newline)
             └─ enrich                     (H8/H9 — ids + engine metadata)
                └─ embed                   (J1 — SQL-text hash or mapInPandas model)
-                  └─ store.append         (A5 — partitioned write, master=union)
+                  └─ checkpoint           (skip and replace only)
+                     └─ store write       (A5 — partitioned append, or upsert)
+
+The checkpoint guards a plan that reads the store it writes to: ``skip``'s
+anti-join scans the store, and ``replace``'s upsert overwrites it. An
+``append`` plan reads only the batch, so the write cannot change what it
+returns, and it is written as given in one job — the reference's own order,
+``add_documents`` after its ``document_exists_globally`` check
+(app.py:152-157), which ``DocumentSearchEngine.upload_documents`` follows.
 
 With the ``punct`` or ``newline`` splitter and the hash embedder every
 step is a JVM expression, so the pipeline starts no Python worker; the
@@ -54,17 +65,25 @@ def ingest_documents(
     """Run the full pipeline; returns the chunk rows that were written.
 
     ``docs``: one row per incoming document with (name_col, text_col).
-    ``on_conflict='skip'`` (the reference's live behavior): the global dedup
-    gate skips documents whose name exists in ANY collection
-    (``document_exists_globally``, app.py:152 — here one anti-join instead
-    of N LIMIT-1 probes). ``on_conflict='replace'``: no gate — the write
-    goes through :meth:`ChunkStore.upsert`, replacing every existing chunk
-    of the re-ingested documents (the Chroma WAL upsert semantics,
-    operation=2 in ``embeddings_queue``).
+    ``on_conflict`` picks what happens to names already in the store:
+
+    * ``'skip'`` (the reference's live behavior): the global dedup gate
+      skips documents whose name exists in ANY collection
+      (``document_exists_globally``, app.py:152 — here one anti-join
+      instead of N LIMIT-1 probes);
+    * ``'append'``: no gate; the batch is written as given, for a caller
+      that has gated it already (the reference calls ``add_documents``
+      after its own exists check). The plan reads only ``docs``, so it
+      needs no checkpoint; ``docs`` must not read this store, and the
+      returned frame re-runs chunking and embedding when it is read;
+    * ``'replace'``: no gate — the write goes through
+      :meth:`ChunkStore.upsert`, replacing every existing chunk of the
+      re-ingested documents (the Chroma WAL upsert semantics, operation=2
+      in ``embeddings_queue``).
     """
     if collection not in config.ALL_COLLECTION_NAMES:
         raise ValueError(f"Invalid collection name: {collection!r}")
-    if on_conflict not in ("skip", "replace"):
+    if on_conflict not in ("skip", "append", "replace"):
         raise ValueError(f"Invalid on_conflict: {on_conflict!r}")
 
     incoming = docs.select(F.col(name_col).alias("doc_name"),
@@ -89,6 +108,9 @@ def ingest_documents(
                       dim=embed_dim)
     chunks = chunks.withColumn("embedding",
                                F.col("embedding").cast("array<float>"))
+    if on_conflict == "append":
+        store.append(chunks)
+        return chunks
     # localCheckpoint (eager), NOT persist: the dedup gate's anti-join scans
     # the store path this function is about to append to. A persist()ed plan
     # keeps that lineage, and the append triggers Spark's recacheByPath —

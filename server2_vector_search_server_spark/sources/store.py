@@ -22,7 +22,7 @@ prunable and parallel.
 
 from __future__ import annotations
 
-import os
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,22 @@ class ChunkStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+
+    @functools.cached_property
+    def _hadoop_root(self):
+        """The root's Hadoop ``Path`` and ``FileSystem``, resolved once
+        through the JVM gateway (the handle idiom of
+        ``session._parquet_schema``). The store lists and removes through
+        them, not ``os``, so every URI scheme Spark writes to (``file:``,
+        ``viewfs:``, ``hdfs:``) answers too."""
+        root = self.spark._jvm.org.apache.hadoop.fs.Path(self.root)
+        return root, root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+
+    def _hadoop_child(self, name: str):
+        """``(FileSystem, Path)`` of ``root/name``; ``suffix`` builds the
+        path in one py4j call."""
+        root, fs = self._hadoop_root
+        return fs, root.suffix(f"/{name}")
 
     def _overwrite_dynamic(self, rows: DataFrame) -> None:
         """Replace only the ``collection`` partitions ``rows`` writes into
@@ -81,14 +97,12 @@ class ChunkStore:
         after the write. ``kept`` is collected BEFORE the write: ``out``'s
         lineage reads ``self.root``, and re-running it after the overwrite
         would see the mutated table."""
-        import shutil
-
         self._overwrite_dynamic(out)
         for part in set(affected) - kept:
-            # local-path fallback for "drop empty partition" — on Delta/
-            # Iceberg this is the metadata delete the commit already did
-            shutil.rmtree(os.path.join(self.root, f"collection={part}"),
-                          ignore_errors=True)
+            # "drop empty partition" — on Delta/Iceberg this is the
+            # metadata delete the commit already did
+            fs, path = self._hadoop_child(f"collection={part}")
+            fs.delete(path, True)
 
     # -- A5: upsert/append ---------------------------------------------------
     def append(self, chunks: DataFrame) -> None:
@@ -144,8 +158,11 @@ class ChunkStore:
         return df
 
     def is_empty(self) -> bool:
-        return not os.path.isdir(self.root) or not any(
-            name.startswith("collection=") for name in os.listdir(self.root))
+        """True when no ``collection=`` partition exists under the root: one
+        Hadoop ``globStatus``, which is null for a missing root and empty
+        for a root with no partition."""
+        fs, path = self._hadoop_child("collection=*")
+        return not fs.globStatus(path)
 
     # -- B4/B5: existence ----------------------------------------------------
     def document_exists(self, doc_name: str,

@@ -112,7 +112,8 @@ def test_query_embed_and_search_build_py4j_budget(spark, tmp_path,
     """Plan-build cost guard: embedding one query and building the
     /search_score plan each stay within a fixed budget of py4j round
     trips, so per-lambda Column building cannot creep back into the
-    serving path (the per-dimension embedding cost ~7k round trips)."""
+    serving path (the per-dimension embedding cost ~7k round trips; the
+    inline ``VALUES`` row costs 27)."""
     from server2_vector_search_server_spark.engine import (
         DocumentSearchEngine,
     )
@@ -122,7 +123,7 @@ def test_query_embed_and_search_build_py4j_budget(spark, tmp_path,
     text = "Budget test text. Two sentences."
     eng.upload_documents([("a.txt", text)])
     qvec = eng.embed_query(text)
-    assert 0 < py4j_calls(lambda: eng.embed_query(text)) <= 100
+    assert 0 < py4j_calls(lambda: eng.embed_query(text)) <= 40
     assert 0 < py4j_calls(lambda: search_store(eng.store, qvec, k=5)) <= 150
     # the budgeted build is the real one: the chunk matches itself
     hits = search_store(eng.store, qvec, k=5).collect()

@@ -62,50 +62,251 @@ def test_upload_intra_batch_duplicates_and_empty_docs(engine):
 
 def test_list_upload_runs_in_the_jvm(engine, spark_jobs):
     """A list upload plans no Python evaluation and no pickled LogicalRDD
-    input, and pays a fixed number of jobs: the status probe (2), the
-    dedup gate (2), the checkpoint, the append and the per-document counts
-    (2). Statuses come back in first-occurrence order."""
+    input, and pays at most 2 jobs: the status probe and the append. The
+    per-document counts collect is folded on the driver, the probe scans
+    only the store rows of the batch's names, and the append writes the
+    fresh documents as given, with no second gate and no checkpoint.
+    Statuses come back in first-occurrence order."""
     from unittest import mock
+
+    from server2_vector_search_server_spark.sources.store import ChunkStore
 
     # the session's concrete DataFrame class (pyspark.sql.DataFrame is the
     # abstract base the classic and Connect frames share)
     DataFrame = type(engine.spark.range(1))
     plans = []
 
-    def recording(name):
-        orig = getattr(DataFrame, name)
+    def recording(owner, name, frame=lambda args: args[0]):
+        orig = getattr(owner, name)
 
-        def wrapper(self, *args, **kwargs):
-            qe = self._jdf.queryExecution()
+        def wrapper(*args, **kwargs):
+            qe = frame(args)._jdf.queryExecution()
             plans.append((name, qe.optimizedPlan().toString(),
                           qe.executedPlan().toString()))
-            return orig(self, *args, **kwargs)
+            return orig(*args, **kwargs)
         return wrapper
 
     batch = [("zeta.txt", "Zeta is new. It has two sentences."),
              ("alpha.txt", "an already stored name"),
              ("eta.txt", "Eta is new too.")]
-    with mock.patch.object(DataFrame, "collect", recording("collect")), \
+    with mock.patch.object(DataFrame, "collect",
+                           recording(DataFrame, "collect")), \
             mock.patch.object(DataFrame, "localCheckpoint",
-                              recording("localCheckpoint")):
+                              recording(DataFrame, "localCheckpoint")), \
+            mock.patch.object(ChunkStore, "append", recording(
+                ChunkStore, "append", frame=lambda args: args[1])):
         statuses = engine.upload_documents(batch, "collection_b")
     assert [s["filename"] for s in statuses] == [n for n, _ in batch]
     assert [s["status"] for s in statuses] == ["success", "skipped",
                                                "success"]
-    assert [name for name, _, _ in plans] == [
-        "collect", "localCheckpoint", "collect"]
+    assert [name for name, _, _ in plans] == ["collect", "collect", "append"]
+    (_, _, counts), (_, _, probe), (_, written, _) = plans
     for _, logical, physical in plans:
         assert "ArrowEvalPython" not in physical, physical
         assert "BatchEvalPython" not in physical, physical
-    # the probe and the ingest read the batch itself; the counts collect
-    # reads the checkpoint, which is a JVM-side LogicalRDD
-    for _, logical, _ in plans[:2]:
         assert "LogicalRDD" not in logical, logical
-        assert "LocalRelation" in logical, logical
+    # the counts are folded into a LocalRelation: no scan, no job
+    assert counts.startswith("LocalTableScan") and "Scan" not in \
+        counts.replace("LocalTableScan", ""), counts
+    # the probe pushes the batch's names into the store scan
+    assert "PushedFilters: [In(doc_name, [alpha.txt,eta.txt,zeta.txt])]" \
+        in probe, probe
+    # the append writes the batch itself, as given: no anti-join gate
+    assert "LocalRelation" in written and "Join" not in written, written
 
     assert spark_jobs(lambda: engine.upload_documents(
         [("theta.txt", "Theta is new."), ("alpha.txt", "stored")],
-        "collection_b")) <= 8
+        "collection_b")) <= 2
+
+
+def test_serving_job_budgets(engine, spark, spark_jobs):
+    """The jobs each serving call runs, in the order a session issues them.
+    Query embedding is folded on the driver (0), so each search is its
+    scoring job alone. A list upload is the status probe plus the append;
+    DataFrame input adds the shuffle that collapses duplicate names and the
+    counts job. Listing and the UI pay the group-by's adaptive map-stage
+    job besides the result."""
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_name string, text string")
+
+    def delete_gamma():
+        doc_id = engine.store.read(None).where(
+            "doc_name = 'gamma.txt'").first()["doc_id"]
+        return lambda: engine.delete_document(doc_id)
+
+    budgets = [
+        ("embed_query", lambda: engine.embed_query("spark vectors"), 0),
+        ("search_score", lambda: engine.search_score(
+            "spark vectors", k=3).collect(), 1),
+        ("search_score filtered", lambda: engine.search_score(
+            "spark vectors", k=3,
+            filter={"doc_name": {"$eq": "beta.txt"}}).collect(), 1),
+        ("search", lambda: engine.search("spark vectors", k=3).collect(), 1),
+        ("upload list", lambda: engine.upload_documents(
+            [("theta.txt", "Theta is new."), ("alpha.txt", "stored")],
+            "collection_b"), 2),
+        ("upload DataFrame, stored name", lambda: engine.upload_documents(
+            frame([("alpha.txt", "stored")]), "collection_b"), 3),
+        ("upload DataFrame", lambda: engine.upload_documents(
+            frame([("iota.txt", "Iota is new."), ("beta.txt", "stored")]),
+            "collection_b"), 4),
+        ("delete", delete_gamma(), 3),
+        ("document_exists", lambda: engine.document_exists("beta.txt"), 1),
+        ("list_documents", lambda: engine.list_documents().collect(), 2),
+        ("documents_ui", lambda: engine.documents_ui().collect(), 2),
+    ]
+    jobs = {name: spark_jobs(fn) for name, fn, _ in budgets}
+    over = {name: jobs[name] for name, _, budget in budgets
+            if jobs[name] > budget}
+    assert not over, (over, jobs)
+    assert not engine.document_exists("gamma.txt")
+    assert engine.document_exists("iota.txt")
+
+
+def test_dataframe_upload_statuses(engine):
+    """DataFrame input passes the same gate as a list: a stored name is
+    skipped, null and empty text report an extraction error, a name twice
+    in the batch is stored once, and each success counts exactly the
+    chunks stored for it. A null name is rejected before anything is
+    written."""
+    batch = engine.spark.createDataFrame(
+        [("alpha.txt", "changed content"), ("null.txt", None),
+         ("empty.txt", ""), ("dup.txt", "One copy. Of two."),
+         ("dup.txt", "The other copy."),
+         ("long.txt", " ".join(["A sentence of some words."] * 60))],
+        "doc_name string, text string")
+    statuses = engine.upload_documents(batch, "collection_a")
+    by_name = {s["filename"]: s for s in statuses}
+    assert len(statuses) == len(by_name) == 5
+    assert by_name["alpha.txt"]["status"] == "skipped"
+    for name in ("null.txt", "empty.txt"):
+        assert by_name[name]["status"] == "error"
+        assert by_name[name]["error"] == "No content extracted"
+    stored = {}
+    for r in engine.store.read(None).collect():
+        stored.setdefault(r["doc_name"], []).append(r["content"])
+    assert stored["dup.txt"] in (["One copy. Of two."], ["The other copy."])
+    assert len(stored["long.txt"]) > 1
+    for name in ("dup.txt", "long.txt"):
+        assert by_name[name]["status"] == "success"
+        assert by_name[name]["chunks_added"] == len(stored[name])
+    assert len(stored["alpha.txt"]) == 1      # the stored copy is untouched
+    assert "null.txt" not in stored and "empty.txt" not in stored
+
+    rows = engine.store.read(None).count()
+    with pytest.raises(ValueError, match="doc_name"):
+        engine.upload_documents(engine.spark.createDataFrame(
+            [(None, "No name."), ("named.txt", "A name.")],
+            "doc_name string, text string"), "collection_a")
+    assert engine.store.read(None).count() == rows
+
+
+def test_upload_counts_with_custom_embedder_and_python_chunker(spark,
+                                                               tmp_path):
+    """The counts are taken before the embedder runs, so they hold for a
+    model embedder (a Python worker, ``mapInPandas``) and for the pandas
+    UDF chunker of ``words:N``: each success counts exactly the chunks
+    stored for it, for list and DataFrame input alike."""
+    import functools
+
+    import numpy as np
+
+    from server2_vector_search_server_spark.embedding import (
+        embed_with_model,
+    )
+
+    def factory():
+        return lambda texts: np.array([[float(len(t)), 1.0, 0.0]
+                                       for t in texts])
+
+    eng = DocumentSearchEngine(
+        spark, str(tmp_path / "chunks"), embed_dim=3,
+        embedder=functools.partial(embed_with_model,
+                                   encoder_factory=factory))
+    text = " ".join(f"word{i}" for i in range(20))
+    listed = eng.upload_documents([("a.txt", text), ("b.txt", "Short.")],
+                                  "collection_a", chunk_size=30,
+                                  chunk_overlap=0, split_mode="words:3")
+    framed = eng.upload_documents(
+        spark.createDataFrame([("c.txt", text), ("a.txt", "stored")],
+                              "doc_name string, text string"),
+        "collection_a", chunk_size=30, chunk_overlap=0, split_mode="words:3")
+    rows = eng.store.read(None).collect()
+    stored = {n: sum(r["doc_name"] == n for r in rows)
+              for n in ("a.txt", "b.txt", "c.txt")}
+    statuses = {s["filename"]: s for s in listed + framed
+                if s["status"] == "success"}
+    assert set(statuses) == set(stored)
+    assert stored["a.txt"] > 1
+    assert {n: s["chunks_added"] for n, s in statuses.items()} == stored
+    assert all(r["embedding"][1] == 1.0 for r in rows)
+
+
+def test_embed_query_equals_stored_vector(engine, spark):
+    """The query vector is bitwise the vector of the one-row frame the
+    embedder used before (``spark.range(1)`` with the query as a literal),
+    and, where the text is stored as one chunk, bitwise the stored float
+    vector of that chunk."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    texts = ["안녕하세요 벡터 검색 엔진", "rocket 🚀 launch 🎉 party",
+             "quote ' and back\\slash", " \t\n ", "",
+             " ".join(f"token{i % 37}" for i in range(500))]
+    single = [t for t in texts if t.strip()]
+    engine.upload_documents([(f"q{i}.txt", t) for i, t in enumerate(single)],
+                            "collection_a")
+    stored = {r["content"]: r["embedding"] for r in
+              engine.store.read(None).where(
+                  F.col("doc_name").startswith("q")).collect()}
+    assert set(stored) == set(single)
+
+    def doubles(vec):
+        return [struct.pack("<d", x) for x in vec]
+
+    def floats(vec):
+        return [struct.pack("<f", x) for x in vec]
+
+    for text in texts:
+        got = engine.embed_query(text)
+        before = engine.embedder(
+            spark.range(1).select(F.lit(text).alias("content")),
+            dim=engine.embed_dim).first()["embedding"]
+        assert doubles(got) == doubles(before), repr(text)
+        if text in stored:
+            assert floats(got) == floats(stored[text]), repr(text)
+
+
+def test_store_answers_on_a_viewfs_root(spark, tmp_path, py4j_calls):
+    """The store lists and removes through Hadoop, so a ``viewfs://`` root
+    behaves like a local one: a re-upload is skipped, ``document_exists``
+    finds the stored name, and a delete removes the rows, including a
+    partition it empties. ``is_empty`` is one ``globStatus``."""
+    import uuid
+
+    mount = f"store{uuid.uuid4().hex[:8]}"
+    spark._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./store", f"file://{tmp_path}")
+    eng = DocumentSearchEngine(spark, f"viewfs://{mount}/store/chunks")
+    assert eng.store.is_empty()
+    eng.upload_documents(DOCS_A, "collection_a")
+    eng.upload_documents(DOCS_B, "collection_b")
+    assert (tmp_path / "chunks" / "collection=collection_b").is_dir()
+    assert not eng.store.is_empty()
+    assert py4j_calls(eng.store.is_empty) <= 5
+
+    statuses = eng.upload_documents([("alpha.txt", "changed")],
+                                    "collection_b")
+    assert [s["status"] for s in statuses] == ["skipped"]
+    assert eng.document_exists("alpha.txt")
+    gamma = eng.store.read(None).where(
+        "doc_name = 'gamma.txt'").first()["doc_id"]
+    assert eng.delete_document(gamma)
+    assert not eng.document_exists("gamma.txt")
+    assert not (tmp_path / "chunks" / "collection=collection_b").exists()
+    assert {r["doc_name"] for r in eng.store.read(None).collect()} == {
+        "alpha.txt", "beta.txt"}
 
 
 def test_delete_and_exists_job_budgets(engine, spark_jobs):

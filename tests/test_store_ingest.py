@@ -76,6 +76,28 @@ def test_reupload_is_skipped(spark, store):
     assert store.read(None).count() == before
 
 
+def test_append_writes_the_batch_as_given(spark, store, spark_jobs):
+    """on_conflict='append' has no gate: a stored name is written again,
+    and the whole ingest is the one write job (no anti-join, no
+    checkpoint). The returned rows are the rows written."""
+    _ingest(spark, store)
+    before = store.read(None).where("doc_name = 'alpha.txt'").count()
+    batch = [("alpha.txt", "alpha again."), ("delta.txt", "delta one.")]
+    written = []
+    assert spark_jobs(lambda: written.append(_ingest(
+        spark, store, docs=batch, on_conflict="append"))) == 1
+    rows = store.read(None)
+    assert rows.where("doc_name = 'alpha.txt'").count() == before + 1
+    assert sorted(r["content"] for r in written[0].collect()) == [
+        "alpha again.", "delta one."]
+    assert rows.where("doc_name = 'delta.txt'").count() == 1
+
+
+def test_unknown_on_conflict_rejected(spark, store):
+    with pytest.raises(ValueError, match="on_conflict"):
+        _ingest(spark, store, on_conflict="merge")
+
+
 def test_upsert_replaces_existing_chunks(spark, store):
     """A5/WAL-upsert: on_conflict='replace' swaps a document's chunks in
     place (no stale chunks, no duplicate ids) and leaves others alone."""
