@@ -87,9 +87,12 @@ class DocumentSearchEngine:
                  store_cls: type = ChunkStore):
         """``store_cls`` selects the storage backend: the in-place
         partitioned ``ChunkStore`` (default) or the snapshot-isolated
-        ``sources.snapshots.SnapshotChunkStore`` — both satisfy the same
+        ``sources.snapshots.SnapshotChunkStore`` (or its ref-aware
+        ``BranchedSnapshotStore``) — all satisfy the same
         append/read/delete_document/is_empty contract, so every endpoint
-        runs unchanged on either."""
+        runs unchanged on any of them. ``delete_document`` returns a bool
+        on every backend: True when a row of the document was found and
+        deleted, False (with nothing written) when none was."""
         self.spark = spark
         self.store = store_cls(spark, root)
         self.embed_dim = embed_dim

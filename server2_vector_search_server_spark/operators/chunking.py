@@ -296,9 +296,13 @@ def chunks_sql(text_sql: str, chunk_size: int = config.CHUNK_SIZE,
              f"w -> aggregate(filter(sequence(0, size(lens), w), "
              f"b -> b < size(lens)), {zero}, (blk, b) -> {block}, "
              f"{finish}))[0]")
+    # null text gives null sentences; the guard keeps the merge from them,
+    # since with ANSI off ``size`` of a null array is -1, not null, and
+    # ``sequence(0, -1, w)`` fails the job
     return (f"transform(array({_sentences_sql(text_sql, mode)}), sents -> "
+            f"IF(sents IS NULL, NULL, "
             f"transform(array(transform(sents, s -> length(s))), "
-            f"lens -> {merge})[0])[0]")
+            f"lens -> {merge})[0]))[0]")
 
 
 def chunk_array(text_col: str, chunk_size: int = config.CHUNK_SIZE,

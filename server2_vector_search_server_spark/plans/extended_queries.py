@@ -711,6 +711,34 @@ def store_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "check_name string, ok boolean, n long").orderBy("check_name")
 
 
+def _snapshot_chunks(docs: DataFrame, lo: int, hi: int,
+                     upper: bool = False) -> DataFrame:
+    """Chunk rows of the documents with ``lo <= doc_id < hi``, one chunk
+    each, in collection_a (upper-cased content for an update): the
+    fixture of the snapshot-store queries."""
+    d = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+    text = F.upper("text") if upper else F.col("text")
+    name = F.concat(F.lit("doc_"), F.col("doc_id"))
+    return d.select(
+        F.md5(name).alias("chunk_id"), F.md5(name).alias("doc_id"),
+        name.alias("doc_name"), F.lit(0).alias("chunk_index"),
+        F.lit("collection_a").alias("original_collection"),
+        text.alias("content"),
+        F.create_map(F.lit("source"), name).alias("metadata"),
+        F.array(F.lit(0.1), F.lit(0.2)).cast("array<float>")
+        .alias("embedding"),
+        F.lit("collection_a").alias("collection"))
+
+
+def _snapshot_digest(df: DataFrame) -> str:
+    """Order-free content digest of a chunk table: md5 over the sorted
+    per-row md5s of (doc_name, md5(content))."""
+    row_h = F.md5(F.concat_ws("|", "doc_name", F.md5("content")))
+    return (df.withColumn("h", row_h)
+            .agg(F.md5(F.concat_ws("", F.sort_array(
+                F.collect_list("h")))).alias("d")).collect()[0]["d"])
+
+
 @query(
     "store_snapshot_time_travel",
     survey="A5/A7/A8-adjacent(snapshot isolation + time travel: immutable "
@@ -745,30 +773,11 @@ def store_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = SnapshotChunkStore(spark, root)
     docs = tbl(spark, sf_dir, "documents")
 
-    def chunks(lo, hi, upper=False):
-        d = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        text = F.upper("text") if upper else F.col("text")
-        name = F.concat(F.lit("doc_"), F.col("doc_id"))
-        return d.select(
-            F.md5(name).alias("chunk_id"), F.md5(name).alias("doc_id"),
-            name.alias("doc_name"), F.lit(0).alias("chunk_index"),
-            F.lit("collection_a").alias("original_collection"),
-            text.alias("content"),
-            F.create_map(F.lit("source"), name).alias("metadata"),
-            F.array(F.lit(0.1), F.lit(0.2)).cast("array<float>")
-            .alias("embedding"),
-            F.lit("collection_a").alias("collection"))
-
-    def digest(df):
-        row_h = F.md5(F.concat_ws("|", "doc_name", F.md5("content")))
-        return (df.withColumn("h", row_h)
-                .agg(F.md5(F.concat_ws("", F.sort_array(
-                    F.collect_list("h")))).alias("d")).collect()[0]["d"])
-
-    store.append(chunks(0, 20))                       # v1
+    store.append(_snapshot_chunks(docs, 0, 20))              # v1
     scan_v1 = store.read(None)                        # pinned to v1 files
-    d1 = digest(store.read(None, version=1))
-    store.upsert(chunks(15, 23, upper=True))          # v2: 5 updated, 3 new
+    d1 = _snapshot_digest(store.read(None, version=1))
+    # v2: 5 updated, 3 new
+    store.upsert(_snapshot_chunks(docs, 15, 23, upper=True))
     doc0_id = store.read(None).filter(F.col("doc_name") == "doc_0") \
         .select("doc_id").first()[0]
     store.delete_document(doc0_id)                    # v3
@@ -784,7 +793,7 @@ def store_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         [("reader_isolated_at_v1", scan_v1.count() == 20, 20),
          ("time_travel_v1_stable",
-          digest(store.read(None, version=1)) == d1, 20),
+          _snapshot_digest(store.read(None, version=1)) == d1, 20),
          ("v1_append_count", n_v1 == 20, 20),
          ("v2_upsert_count", n_v2 == 23, 23),
          ("v2_update_applied",
@@ -2239,36 +2248,17 @@ def store_convert_snapshot_to_delta(spark: SparkSession,
     store = SnapshotChunkStore(spark, os.path.join(root, "src"))
     docs = tbl(spark, sf_dir, "documents")
 
-    def chunks(lo, hi, upper=False):
-        d = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        text = F.upper("text") if upper else F.col("text")
-        name = F.concat(F.lit("doc_"), F.col("doc_id"))
-        return d.select(
-            F.md5(name).alias("chunk_id"), F.md5(name).alias("doc_id"),
-            name.alias("doc_name"), F.lit(0).alias("chunk_index"),
-            F.lit("collection_a").alias("original_collection"),
-            text.alias("content"),
-            F.create_map(F.lit("source"), name).alias("metadata"),
-            F.array(F.lit(0.1), F.lit(0.2)).cast("array<float>")
-            .alias("embedding"),
-            F.lit("collection_a").alias("collection"))
-
-    store.append(chunks(0, 20))                       # v1
-    store.upsert(chunks(15, 23, upper=True))          # v2
+    store.append(_snapshot_chunks(docs, 0, 20))              # v1
+    store.upsert(_snapshot_chunks(docs, 15, 23, upper=True))  # v2
     delta_root = os.path.join(root, "delta")
     os.makedirs(delta_root)
     versioned = [store._live_files(v) for v in store.versions()]
     deltalog.convert_versioned_files(versioned, delta_root)
 
-    def digest(df):
-        row_h = F.md5(F.concat_ws("|", "doc_name", F.md5("content")))
-        return (df.withColumn("h", row_h)
-                .agg(F.md5(F.concat_ws("", F.sort_array(
-                    F.collect_list("h")))).alias("d")).collect()[0]["d"])
-
     equal = all(
-        digest(store.read(None, version=v))
-        == digest(deltalog.read_snapshot(spark, delta_root, v - 1))
+        _snapshot_digest(store.read(None, version=v))
+        == _snapshot_digest(
+            deltalog.read_snapshot(spark, delta_root, v - 1))
         for v in store.versions())
     own_parquet = sum(
         name.endswith(".parquet")

@@ -14,6 +14,8 @@ import os
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
+from server2_vector_search_server_spark.sources.fs import resolve
+
 _log = logging.getLogger(__name__)
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
@@ -63,8 +65,7 @@ def _parquet_schema(spark: SparkSession, path: str):
     Hadoop's ``FileSystem``, so any URI scheme works; a directory's
     modification time moves when a file is added to or removed from it. A
     failed inference raises and is not memoized."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = resolve(spark, path)
     try:
         status = fs.getFileStatus(jpath)
     except Py4JJavaError:

@@ -10,6 +10,10 @@ Delta-shaped table in any container (delta-spark is not installed here),
 mirroring the role of ``sources/snapshots.py``'s own manifest format but
 speaking the interchange protocol other engines write.
 
+Every file step goes through Hadoop (``sources/fs.py``), as the protocol
+addresses its files through a filesystem, so the root may be any URI
+Spark writes to.
+
 Scale notes: the log fold is manifest-sized driver work (Delta readers
 checkpoint it for long histories — same idea as snapshots.py's manifest);
 the data read is an ordinary pushdown-capable parquet scan of the live
@@ -20,27 +24,30 @@ parquet table.
 from __future__ import annotations
 
 import json
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from server2_vector_search_server_spark.sources.fs import Tree, active_session
 
 _LOG_DIR = "_delta_log"
 
 
-def _commit_path(root: str, version: int) -> str:
-    return os.path.join(root, _LOG_DIR, f"{version:020d}.json")
+def _tree(root: "str | Tree", spark: SparkSession | None = None) -> Tree:
+    """The table root as a :class:`Tree`; the functions below take either,
+    so one call resolves the root's handle once."""
+    if isinstance(root, Tree):
+        return root
+    return Tree(spark or active_session(), root)
 
 
 def write_commit(root: str, version: int, actions: "list[dict]") -> None:
     """One numbered commit, one JSON action per line (the protocol's
-    framing). Caller supplies protocol/metaData on version 0."""
-    os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
-    path = _commit_path(root, version)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a, separators=(",", ":")) + "\n")
-    os.rename(tmp, path)           # atomic publish, like the protocol
+    framing), published atomically; an existing commit of that version is
+    never overwritten (the protocol's mutual exclusion). Caller supplies
+    protocol/metaData on version 0."""
+    _tree(root).publish(f"{_LOG_DIR}/{version:020d}.json", "".join(
+        json.dumps(a, separators=(",", ":")) + "\n" for a in actions))
 
 
 def add_action(path: str, size: int) -> dict:
@@ -53,18 +60,22 @@ def remove_action(path: str) -> dict:
                        "dataChange": True}}
 
 
-def versions(root: str) -> "list[int]":
-    log = os.path.join(root, _LOG_DIR)
-    if not os.path.isdir(log):
-        return []
-    return sorted(int(f.split(".")[0]) for f in os.listdir(log)
-                  if f.endswith(".json"))
+def _actions(tree: Tree, version: int) -> "list[dict]":
+    return [json.loads(line) for line in
+            tree.read_text(f"{_LOG_DIR}/{version:020d}.json").splitlines()]
 
 
-def live_files(root: str, version: int | None = None) -> "list[str]":
+def versions(root: "str | Tree") -> "list[int]":
+    return sorted(int(name.split(".")[0])
+                  for name in _tree(root).names(_LOG_DIR, "*.json"))
+
+
+def live_files(root: "str | Tree",
+               version: int | None = None) -> "list[str]":
     """Fold add/remove actions of commits ≤ version into the live set.
     Later actions win (the protocol's reconciliation rule)."""
-    avail = versions(root)
+    tree = _tree(root)
+    avail = versions(tree)
     if not avail:
         return []
     v = avail[-1] if version is None else version
@@ -74,19 +85,21 @@ def live_files(root: str, version: int | None = None) -> "list[str]":
     for cv in avail:
         if cv > v:
             break
-        with open(_commit_path(root, cv)) as fh:
-            for line in fh:
-                a = json.loads(line)
-                if "add" in a:
-                    live[a["add"]["path"]] = True
-                elif "remove" in a:
-                    live[a["remove"]["path"]] = False
+        for a in _actions(tree, cv):
+            if "add" in a:
+                live[a["add"]["path"]] = True
+            elif "remove" in a:
+                live[a["remove"]["path"]] = False
     return sorted(p for p, alive in live.items() if alive)
 
 
 def read_snapshot(spark: SparkSession, root: str,
                   version: int | None = None) -> DataFrame:
-    files = [os.path.join(root, p) for p in live_files(root, version)]
+    """The snapshot's rows. Each ``add.path`` resolves by Hadoop's
+    ``Path(parent, child)`` rule: a relative path lands under the root, an
+    absolute one (as :func:`convert_versioned_files` writes) stands."""
+    tree = _tree(root, spark)
+    files = [tree.locate(p) for p in live_files(tree, version)]
     if not files:
         raise ValueError("empty snapshot")
     return spark.read.parquet(*files)
@@ -96,17 +109,13 @@ def write_data_file(df: DataFrame, root: str, name: str) -> dict:
     """Materialize df as ONE parquet file ``<root>/<name>`` and return its
     add action. Spark writes directories; the protocol addresses files —
     relocate the single part file (driver-side rename, no data copy)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="deltapart_", dir=root)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and f.startswith("part-"))
-    dest = os.path.join(root, name)
-    os.replace(os.path.join(tmp, part), dest)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return add_action(name, os.path.getsize(dest))
+    tree = _tree(root, df.sparkSession)
+    tmp = f"deltapart_{uuid.uuid4().hex[:8]}"
+    df.coalesce(1).write.mode("overwrite").parquet(tree.uri_of(tmp))
+    part = tree.names(tmp, "part-*.parquet")[0]
+    tree.rename(f"{tmp}/{part}", name)
+    tree.delete(tmp)
+    return add_action(name, tree.size(name))
 
 
 def vacuum(root: str, *, keep_from_version: int) -> "list[str]":
@@ -116,10 +125,15 @@ def vacuum(root: str, *, keep_from_version: int) -> "list[str]":
     themselves are never deleted, so the log stays auditable while
     time travel below the cutoff loses its data files).
 
+    Deliberate public API: the table-maintenance half of the "Zero-copy
+    table migration" row of SURVEY.md, next to
+    :func:`convert_versioned_files`.
+
     A file survives iff it is LIVE in at least one retained version
     (≥ cutoff).  Returns the deleted names.  Deletion is idempotent —
     missing files are skipped, so concurrent vacuums race safely."""
-    avail = versions(root)
+    tree = _tree(root)
+    avail = versions(tree)
     if not avail:
         return []
     if keep_from_version not in avail:
@@ -128,23 +142,11 @@ def vacuum(root: str, *, keep_from_version: int) -> "list[str]":
     keep: "set[str]" = set()
     for v in avail:
         if v >= keep_from_version:
-            keep.update(live_files(root, v))
-    referenced: "set[str]" = set()
-    for v in avail:
-        with open(_commit_path(root, v)) as fh:
-            for line in fh:
-                a = json.loads(line)
-                if "add" in a:
-                    referenced.add(a["add"]["path"])
-    deleted = []
-    for p in sorted(referenced - keep):
-        full = os.path.join(root, p)
-        try:
-            os.remove(full)
-            deleted.append(p)
-        except FileNotFoundError:
-            pass
-    return deleted
+            keep.update(live_files(tree, v))
+    referenced = {a["add"]["path"] for v in avail for a in _actions(tree, v)
+                  if "add" in a}
+    return [p for p in sorted(referenced - keep)
+            if _tree(tree.locate(p), tree.spark).delete("")]
 
 
 def convert_versioned_files(versioned_files: "list[list[str]]",
@@ -154,8 +156,8 @@ def convert_versioned_files(versioned_files: "list[list[str]]",
     per version whose add/remove actions are the set difference against
     the previous version.  No data file is read or copied — the commits
     reference the source files in place (the protocol allows absolute
-    paths in ``add.path``, and :func:`read_snapshot`'s join is a no-op
-    for them).  This is the Delta/Iceberg table-migration move: history
+    paths in ``add.path``, and :func:`read_snapshot` resolves them as they
+    stand).  This is the Delta/Iceberg table-migration move: history
     preserved, bytes untouched.  Returns the number of commits."""
     prev: "set[str]" = set()
     for i, files in enumerate(versioned_files):
@@ -167,7 +169,7 @@ def convert_versioned_files(versioned_files: "list[list[str]]",
             actions.append({"metaData": {"id": "converted-table",
                                          "format": {"provider": "parquet"}}})
         for p in sorted(cur - prev):
-            actions.append(add_action(p, os.path.getsize(p)))
+            actions.append(add_action(p, _tree(p).size()))
         for p in sorted(prev - cur):
             actions.append(remove_action(p))
         write_commit(root, i, actions)

@@ -11,10 +11,11 @@ this module is that protocol on plain parquet:
   * data files are IMMUTABLE — every commit writes new files under a fresh
     ``data/c{N}-*/`` directory and never touches existing ones;
   * a snapshot is a JSON manifest listing exactly the live files;
-    ``_manifests/v{N}.json`` is written to a temp name and ``os.rename``d
-    into place — the atomic commit point (single-writer; a multi-writer
-    deployment puts a CAS on this rename, which is precisely what
-    Delta/Iceberg catalogs do);
+    ``_manifests/v{N}.json`` is written to a temp name and renamed into
+    place by a Hadoop rename that does not overwrite (``sources/fs.py``,
+    like every file step here, so any URI root works) — the atomic commit
+    point, and the compare-and-swap a second writer of that version loses
+    (the check Delta/Iceberg catalogs make);
   * readers resolve a manifest ONCE and then only ever open files it
     names: a scan started at v3 is unaffected by later commits (snapshot
     isolation), and ``read(version=2)`` is time travel for free;
@@ -35,12 +36,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from server2_vector_search_server_spark import config
+from server2_vector_search_server_spark.sources.fs import Tree
 from server2_vector_search_server_spark.sources.store import (
     CHUNKS_COLS as _COLS,
     CHUNKS_SCHEMA,
@@ -48,77 +50,91 @@ from server2_vector_search_server_spark.sources.store import (
 )
 
 
+def _tail(path: str) -> str:
+    """``data/<commit dir>/<part file>`` of a data file path or URI: ASCII
+    and unique per file, so it matches a manifest entry to the file's
+    ``input_file_name()`` however the root is spelt or percent-encoded."""
+    return "/".join(path.rsplit("/", 3)[-3:])
+
+
 class SnapshotChunkStore:
-    """Immutable-file chunk table with atomic manifest commits."""
+    """Immutable-file chunk table with atomic manifest commits. Every
+    writer commits through :meth:`_write`; subclasses route them by three
+    hooks: the head version, a step after each commit, the versions GC
+    pins (``_OP_SUFFIX`` tags the operation names)."""
+
+    _OP_SUFFIX = ""
+    _LEDGER = "_manifests/stream_ledger.json"
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.data_dir = os.path.join(root, "data")
-        self.manifest_dir = os.path.join(root, "_manifests")
-        os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.manifest_dir, exist_ok=True)
+        self._tree = Tree(spark, root)
+
+    # -- hooks ---------------------------------------------------------------
+    def _head_version(self) -> int:
+        return self.current_version()
+
+    def _after_commit(self, version: int) -> None:
+        pass
+
+    def _pinned_versions(self) -> set[int]:
+        return set()
 
     # -- manifest protocol ---------------------------------------------------
     def versions(self) -> list[int]:
-        return sorted(
-            int(name[1:-5]) for name in os.listdir(self.manifest_dir)
-            if name.startswith("v") and name.endswith(".json"))
+        return sorted(int(name[1:-5])
+                      for name in self._tree.names("_manifests", "v*.json"))
 
     def current_version(self) -> int:
         vs = self.versions()
         return vs[-1] if vs else 0
 
     def _manifest(self, version: int) -> dict:
-        path = os.path.join(self.manifest_dir, f"v{version}.json")
-        with open(path) as fh:
-            return json.load(fh)
+        return json.loads(self._tree.read_text(f"_manifests/v{version}.json"))
 
     def _live_files(self, version: int | None = None) -> list[str]:
-        v = self.current_version() if version is None else version
+        v = self._head_version() if version is None else version
         if v == 0:
             return []
         return self._manifest(v)["files"]
 
     def _commit(self, files: list[str], op: str) -> int:
-        """Write manifest v{N+1} atomically (tmp + rename)."""
+        """Publish manifest v{N+1}; its no-overwrite rename is the commit."""
         v = self.current_version() + 1
         doc = {"version": v, "operation": op, "files": sorted(files)}
-        tmp = os.path.join(self.manifest_dir, f".v{v}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.rename(tmp, os.path.join(self.manifest_dir, f"v{v}.json"))
+        self._tree.publish(f"_manifests/v{v}.json", json.dumps(doc))
+        return v
+
+    def _write(self, op: str, files: list[str]) -> int:
+        """Commit ``files`` and run the post-commit hook."""
+        v = self._commit(files, op)
+        self._after_commit(v)
         return v
 
     def _write_data(self, df: DataFrame) -> list[str]:
         """Materialize rows as new immutable files; return their paths."""
-        import pyarrow.parquet as pq
-
-        out = os.path.join(self.data_dir,
-                           f"c{self.current_version() + 1}-{uuid.uuid4().hex[:8]}")
-        df.select(*_COLS).write.mode("error").parquet(out)
+        rel = f"data/c{self.current_version() + 1}-{uuid.uuid4().hex[:8]}"
+        df.select(*_COLS).write.mode("error").parquet(self._tree.uri_of(rel))
         files = []
-        for name in os.listdir(out):
-            if not name.endswith(".parquet"):
-                continue
-            path = os.path.join(out, name)
+        for name in self._tree.names(rel, "*.parquet"):
+            part = f"{rel}/{name}"
             # parallel writes emit zero-row part files for empty partitions;
             # referencing them bloats manifests and pins commit dirs in GC
-            if pq.ParquetFile(path).metadata.num_rows == 0:
-                os.remove(path)
+            if self._tree.parquet_rows(part) == 0:
+                self._tree.delete(part)
             else:
-                files.append(path)
+                files.append(self._tree.uri_of(part))
         return files
 
     # -- reads ---------------------------------------------------------------
     def read(self, collection: str | None = None,
              version: int | None = None) -> DataFrame:
-        """Scan a snapshot (default: latest). The file list is resolved
+        """Scan a snapshot (default: the head). The file list is resolved
         HERE, once — the returned DataFrame never lists directories, so
         later commits (or expiry of OTHER versions) cannot change or break
         what this scan reads: snapshot isolation."""
-        from server2_vector_search_server_spark import config
-
         files = self._live_files(version)
         if not files:
             df = self.spark.createDataFrame([], CHUNKS_SCHEMA)
@@ -129,28 +145,23 @@ class SnapshotChunkStore:
         return df
 
     def is_empty(self) -> bool:
-        """ChunkStore-contract probe: no snapshot, or the latest snapshot
+        """ChunkStore-contract probe: no snapshot, or the head snapshot
         references no files."""
         return not self._live_files()
 
     document_exists = ChunkStore.document_exists
-
-    def list_documents(self, collection: str | None = None) -> DataFrame:
-        from server2_vector_search_server_spark.operators.catalog import (
-            list_documents,
-        )
-
-        return list_documents(self.read(collection))
+    list_documents = ChunkStore.list_documents
 
     def history(self) -> list[dict]:
-        return [{"version": v, "operation": self._manifest(v)["operation"],
-                 "n_files": len(self._manifest(v)["files"])}
-                for v in self.versions()]
+        docs = {v: self._manifest(v) for v in self.versions()}
+        return [{"version": v, "operation": d["operation"],
+                 "n_files": len(d["files"])} for v, d in docs.items()]
 
     # -- writes (each is one atomic commit) ----------------------------------
     def append(self, chunks: DataFrame) -> int:
         new = self._write_data(chunks)
-        return self._commit(self._live_files() + new, "append")
+        return self._write(f"append{self._OP_SUFFIX}",
+                           self._live_files() + new)
 
     def upsert(self, chunks: DataFrame) -> int:
         """MERGE-by-doc_id: files containing affected doc_ids are replaced
@@ -159,62 +170,42 @@ class SnapshotChunkStore:
         incoming = chunks.select(*_COLS).localCheckpoint(eager=True)
         ids = [r["doc_id"] for r in
                incoming.select("doc_id").distinct().collect()]
-        survivors, carried = self._split_files(ids)
-        new = self._write_data(incoming)
-        rewritten: list[str] = []
-        if survivors is not None:
-            rewritten = self._write_data(survivors)
-        return self._commit(carried + rewritten + new, "upsert")
+        files, _ = self._without(ids)
+        return self._write(f"upsert{self._OP_SUFFIX}",
+                           files + self._write_data(incoming))
 
-    def delete_document(self, doc_id: str) -> int:
-        survivors, carried = self._split_files([doc_id])
-        rewritten: list[str] = []
-        if survivors is not None:
-            rewritten = self._write_data(survivors)
-        return self._commit(carried + rewritten, "delete")
+    def delete_document(self, doc_id: str) -> bool:
+        """True when a file held ``doc_id`` and a version without it was
+        committed; False, with nothing committed, when none did."""
+        files, found = self._without([doc_id])
+        if found:
+            self._write(f"delete{self._OP_SUFFIX}", files)
+        return found
 
-    def _split_files(self, doc_ids: list[str], files: list[str] | None = None):
-        """(survivor rows from touched files | None, untouched file list).
-
-        One footprint scan finds which files contain the doc_ids (parquet
-        min/max row-group stats make this cheap on id-sorted files; the
-        input_file_name aggregate is files-count-sized). ``files`` defaults
-        to the latest global manifest; ref-aware subclasses pass a ref
-        head's file list instead."""
-        files = self._live_files() if files is None else files
+    def _without(self, doc_ids: list[str]) -> tuple[list[str], bool]:
+        """The head's files minus the rows of ``doc_ids``, and whether any
+        file held one: untouched files carry over by reference, touched
+        ones are rewritten without those rows. One footprint scan finds the
+        touched files (parquet min/max stats make it cheap on id-sorted
+        files), matched on their :func:`_tail`, never on the root, so a
+        root with spaces, '%' or non-ASCII cannot hide one (ADVICE r3)."""
+        files = self._live_files()
         if not files:
-            return None, []
+            return [], False
         table = (self.spark.read.schema(CHUNKS_SCHEMA).parquet(*files)
                  .withColumn("_file", F.input_file_name()))
-        # input_file_name() returns a percent-encoded file: URI — decode it
-        # before comparing against os.path strings, or any store root with
-        # spaces/'%'/non-ASCII makes every file look untouched and
-        # delete/upsert silently carry stale rows forward (ADVICE r3)
-        from urllib.parse import unquote, urlparse
-
-        def _local_path(uri: str) -> str:
-            parsed = urlparse(uri)
-            # only a real URI is percent-encoded; a bare path with a
-            # literal '%' must NOT be unquoted
-            if parsed.scheme:
-                return os.path.normpath(unquote(parsed.path))
-            return os.path.normpath(uri)
-
-        touched = {_local_path(r["_file"])
+        touched = {_tail(r["_file"])
                    for r in table.filter(F.col("doc_id").isin(doc_ids))
                    .select("_file").distinct().collect()}
-        carried = [f for f in files
-                   if os.path.normpath(os.path.abspath(f)) not in touched]
-        if len(carried) == len(files):
-            return None, carried
-        touched_files = [f for f in files
-                         if os.path.normpath(os.path.abspath(f)) in touched]
+        if not touched:
+            return files, False
         # no checkpoint needed: the lineage reads IMMUTABLE files that stay
         # on disk until expire() — the commit can never invalidate them
         survivors = (self.spark.read.schema(CHUNKS_SCHEMA)
-                     .parquet(*touched_files)
+                     .parquet(*[f for f in files if _tail(f) in touched])
                      .filter(~F.col("doc_id").isin(doc_ids)))
-        return survivors, carried
+        return ([f for f in files if _tail(f) not in touched]
+                + self._write_data(survivors), True)
 
     def append_stream_batch(self, batch: DataFrame, batch_id: int) -> int:
         """``foreachBatch`` sink with EXACTLY-ONCE commits.
@@ -225,23 +216,22 @@ class SnapshotChunkStore:
         for free: the commit is tagged with the batch id, a replay finds
         the tag and returns without writing. Orphan data files from a
         crash BETWEEN ``_write_data`` and ``_commit`` are never referenced
-        by any manifest, so ``expire``'s GC reclaims them. This is the
-        same txn-id dance Delta's idempotent writes do
+        by any manifest, so ``expire``'s GC reclaims them. A crash between
+        the commit and its post-commit hook leaves a tagged version the
+        head never adopted; the replay runs the hook instead of appending
+        again. This is the same txn-id dance Delta's idempotent writes do
         (``txnAppId``/``txnVersion`` — public API).
         """
         tag = f"stream-append:{batch_id}"
         if tag in self._consumed_stream_tags():
-            return self.current_version()
+            return self._head_version()
         for v in reversed(self.versions()):
             if self._manifest(v)["operation"] == tag:
+                if self._head_version() < v:
+                    self._after_commit(v)
                 return v
         new = self._write_data(batch)
-        return self._commit(self._live_files() + new, tag)
-
-    _LEDGER = "stream_ledger.json"
-
-    def _ledger_path(self) -> str:
-        return os.path.join(self.manifest_dir, self._LEDGER)
+        return self._write(tag, self._live_files() + new)
 
     def _consumed_stream_tags(self) -> set[str]:
         """Batch tags whose manifests have been expired. The tag scan over
@@ -252,8 +242,7 @@ class SnapshotChunkStore:
         tags of every manifest it deletes in here, so a consumed batch id
         is always findable in exactly one of the two places."""
         try:
-            with open(self._ledger_path()) as fh:
-                return set(json.load(fh)["tags"])
+            return set(json.loads(self._tree.read_text(self._LEDGER))["tags"])
         except (OSError, ValueError, KeyError):
             return set()
 
@@ -261,10 +250,8 @@ class SnapshotChunkStore:
         if not tags:
             return
         merged = sorted(self._consumed_stream_tags() | tags)
-        tmp = self._ledger_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"tags": merged}, fh)
-        os.rename(tmp, self._ledger_path())
+        self._tree.publish(self._LEDGER, json.dumps({"tags": merged}),
+                           replace=True)
 
     # -- maintenance ---------------------------------------------------------
     def compact(self, rows_per_file: int = 100_000) -> int:
@@ -276,47 +263,42 @@ class SnapshotChunkStore:
         """
         files = self._live_files()
         if not files:
-            return self.current_version()
+            return self._head_version()
         table = self.spark.read.schema(CHUNKS_SCHEMA).parquet(*files)
-        n = table.count()
-        n_files = max(1, n // rows_per_file)
+        n_files = max(1, table.count() // rows_per_file)
         new = self._write_data(table.repartition(n_files))
-        return self._commit(new, "compact")
+        return self._write(f"compact{self._OP_SUFFIX}", new)
 
     def expire(self, keep_last: int = 1) -> int:
-        """Drop manifests older than the newest ``keep_last`` and delete
-        data files no surviving manifest references. Returns files removed.
-        This is the ONLY operation that deletes data — commits never do."""
+        """Drop manifests older than the newest ``keep_last`` (and not
+        pinned) and delete data files no surviving manifest references.
+        Returns files removed. This is the ONLY operation that deletes
+        data — commits never do."""
         vs = self.versions()
         keep = set(vs[-keep_last:]) if keep_last > 0 else set()
-        live: set[str] = set()
-        for v in keep:
-            live.update(os.path.normpath(os.path.abspath(f))
-                        for f in self._manifest(v)["files"])
+        keep |= self._pinned_versions()
+        live = {_tail(f) for v in keep for f in self._manifest(v)["files"]}
         removed = 0
-        for commit_dir in os.listdir(self.data_dir):
-            full = os.path.join(self.data_dir, commit_dir)
-            for name in os.listdir(full):
-                if not name.endswith(".parquet"):
-                    continue
-                path = os.path.normpath(os.path.abspath(
-                    os.path.join(full, name)))
-                if path not in live:
-                    os.remove(path)
+        for commit_dir in self._tree.names("data"):
+            rel = f"data/{commit_dir}"
+            kept = 0
+            for name in self._tree.names(rel, "*.parquet"):
+                if f"{rel}/{name}" in live:
+                    kept += 1
+                else:
+                    self._tree.delete(f"{rel}/{name}")
                     removed += 1
-            if not any(n.endswith(".parquet") for n in os.listdir(full)):
-                shutil.rmtree(full, ignore_errors=True)
+            if not kept:
+                self._tree.delete(rel)
         # fold stream-append tags of pruned manifests into the ledger
         # BEFORE deleting them — the exactly-once replay guard must survive
         # manifest expiry (see _consumed_stream_tags)
-        pruned_tags = {self._manifest(v)["operation"] for v in vs
-                       if v not in keep
-                       and self._manifest(v)["operation"]
-                       .startswith("stream-append:")}
-        self._fold_tags_into_ledger(pruned_tags)
-        for v in vs:
-            if v not in keep:
-                os.remove(os.path.join(self.manifest_dir, f"v{v}.json"))
+        pruned = [v for v in vs if v not in keep]
+        ops = {self._manifest(v)["operation"] for v in pruned}
+        self._fold_tags_into_ledger(
+            {op for op in ops if op.startswith("stream-append:")})
+        for v in pruned:
+            self._tree.delete(f"_manifests/v{v}.json")
         return removed
 
 
@@ -350,26 +332,34 @@ class BranchedSnapshotStore(SnapshotChunkStore):
     without a scan, exactly Iceberg's manifest pruning).
     """
 
+    _OP_SUFFIX = "@main"
+
     def __init__(self, spark: SparkSession, root: str):
         super().__init__(spark, root)
-        self._refs_path = os.path.join(root, "_refs.json")
-        if not os.path.exists(self._refs_path):
+        if not self._tree.exists("_refs.json"):
             self._save_refs({"main": {"head": 0, "base": 0}})
 
     # -- ref bookkeeping ------------------------------------------------
     def _refs(self) -> dict:
-        with open(self._refs_path) as fh:
-            return json.load(fh)
+        return json.loads(self._tree.read_text("_refs.json"))
 
     def _save_refs(self, refs: dict) -> None:
-        tmp = self._refs_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(refs, fh)
-        os.rename(tmp, self._refs_path)
+        self._tree.publish("_refs.json", json.dumps(refs), replace=True)
 
-    def _head_files(self, ref: str) -> list[str]:
-        head = self._refs()[ref]["head"]
-        return [] if head == 0 else self._manifest(head)["files"]
+    # -- hooks: the inherited writers and default reads use 'main' -------
+    # On the newest GLOBAL manifest, maybe a branch head, they would fold
+    # branch files into an orphan commit (ADVICE r6). GC keeps every
+    # version a ref points at (Nessie's rule); ``read(version=)`` still
+    # time-travels the raw log.
+    def _head_version(self) -> int:
+        return self._refs()["main"]["head"]
+
+    def _after_commit(self, version: int) -> None:
+        self._move_ref("main", version)
+
+    def _pinned_versions(self) -> set[int]:
+        return {v for r in self._refs().values()
+                for v in (r["head"], r["base"]) if v > 0}
 
     # -- branch operations ----------------------------------------------
     def create_branch(self, name: str, from_ref: str = "main") -> None:
@@ -388,107 +378,18 @@ class BranchedSnapshotStore(SnapshotChunkStore):
     def commit_on(self, ref: str, chunks: DataFrame) -> int:
         """Append ``chunks`` to ``ref``'s head (branch-isolated commit)."""
         new = self._write_data(chunks)
-        v = self._commit(self._head_files(ref) + new, f"append@{ref}")
+        v = self._commit(self._live_files(self._refs()[ref]["head"]) + new,
+                         f"append@{ref}")
         self._move_ref(ref, v)
         return v
 
-    # -- ref-routed overrides (ADVICE r6, medium) -------------------------
-    # The inherited writers commit on top of the latest GLOBAL manifest —
-    # which under branches may be a BRANCH head — and never move a ref, so
-    # base append() after a branch commit would silently fold branch files
-    # into an orphan commit and break the branch-isolation invariant this
-    # class exists to provide. Every write is therefore routed through the
-    # 'main' ref: reads via refs, commits followed by a ref move.
-    def append(self, chunks: DataFrame) -> int:
-        return self.commit_on("main", chunks)
-
-    def upsert(self, chunks: DataFrame) -> int:
-        incoming = chunks.select(*_COLS).localCheckpoint(eager=True)
-        ids = [r["doc_id"] for r in
-               incoming.select("doc_id").distinct().collect()]
-        survivors, carried = self._split_files(
-            ids, files=self._head_files("main"))
-        new = self._write_data(incoming)
-        rewritten: list[str] = []
-        if survivors is not None:
-            rewritten = self._write_data(survivors)
-        v = self._commit(carried + rewritten + new, "upsert@main")
-        self._move_ref("main", v)
-        return v
-
-    def delete_document(self, doc_id: str) -> int:
-        survivors, carried = self._split_files(
-            [doc_id], files=self._head_files("main"))
-        rewritten: list[str] = []
-        if survivors is not None:
-            rewritten = self._write_data(survivors)
-        v = self._commit(carried + rewritten, "delete@main")
-        self._move_ref("main", v)
-        return v
-
-    def compact(self, rows_per_file: int = 100_000) -> int:
-        files = self._head_files("main")
-        if not files:
-            return self._refs()["main"]["head"]
-        table = self.spark.read.schema(CHUNKS_SCHEMA).parquet(*files)
-        n_files = max(1, table.count() // rows_per_file)
-        new = self._write_data(table.repartition(n_files))
-        v = self._commit(new, "compact@main")
-        self._move_ref("main", v)
-        return v
-
-    def append_stream_batch(self, batch: DataFrame, batch_id: int) -> int:
-        """Exactly-once stream sink on the 'main' ref. Replay detection is
-        the base class's tag scan + ledger; additionally, a crash BETWEEN
-        the manifest write and the ref move leaves a tagged manifest main
-        never adopted — the replay finishes the ref move instead of
-        re-appending (single-writer-per-ref, so head < v can only mean the
-        interrupted move)."""
-        tag = f"stream-append:{batch_id}"
-        if tag in self._consumed_stream_tags():
-            return self._refs()["main"]["head"]
-        for v in reversed(self.versions()):
-            if self._manifest(v)["operation"] == tag:
-                if self._refs()["main"]["head"] < v:
-                    self._move_ref("main", v)
-                return v
-        new = self._write_data(batch)
-        v = self._commit(self._head_files("main") + new, tag)
-        self._move_ref("main", v)
-        return v
-
-    def read(self, collection: str | None = None,
-             version: int | None = None) -> DataFrame:
-        """Default (no explicit version) reads the MAIN ref's head, not the
-        latest global manifest — the global latest may be a branch head,
-        and a ChunkStore-contract reader must never see unmerged branch
-        data. Explicit ``version=`` keeps raw time travel into the log."""
-        if version is None:
-            return self.read_ref("main", collection)
-        return super().read(collection, version=version)
-
     def read_ref(self, ref: str, collection: str | None = None) -> DataFrame:
-        head = self._refs()[ref]["head"]
-        if head == 0:
-            from server2_vector_search_server_spark.sources.store import (
-                CHUNKS_SCHEMA,
-            )
-
-            return self.spark.createDataFrame([], CHUNKS_SCHEMA)
-        return self.read(collection, version=head)
+        return self.read(collection, version=self._refs()[ref]["head"])
 
     def _touched_keys(self, head_v: int, base_v: int) -> set[str]:
         """Doc names whose content digest differs between two versions —
         the both-ways anti-join from the OCC validation rule."""
         def state(v):
-            if v == 0:
-                from server2_vector_search_server_spark.sources.store import (
-                    CHUNKS_SCHEMA,
-                )
-
-                empty = self.spark.createDataFrame([], CHUNKS_SCHEMA)
-                return empty.select("doc_name",
-                                    F.md5("content").alias("h"))
             return (self.read(None, version=v)
                     .select("doc_name", F.md5("content").alias("h")))
 
@@ -498,9 +399,6 @@ class BranchedSnapshotStore(SnapshotChunkStore):
                                         "left_anti")))
         return {r["doc_name"]
                 for r in delta.select("doc_name").distinct().collect()}
-
-    def is_empty(self) -> bool:
-        return not self._head_files("main")
 
     def merge(self, branch: str, into: str = "main") -> tuple[str, int]:
         """Returns (outcome, version): outcome in {'fast_forward',
@@ -515,77 +413,22 @@ class BranchedSnapshotStore(SnapshotChunkStore):
         (head == base) short-circuits: the target is already a superset,
         so no merge commit is written."""
         refs = self._refs()
-        base_v = refs[branch]["base"]
-        br_head = refs[branch]["head"]
+        base_v, br_head = refs[branch]["base"], refs[branch]["head"]
         tgt_head = refs[into]["head"]
-
-        def _rebase_branch(new_tgt_head: int) -> None:
-            refs2 = self._refs()
-            refs2[branch] = {"head": new_tgt_head, "base": new_tgt_head}
-            self._save_refs(refs2)
-
-        if br_head == base_v:
-            # no branch commits — nothing to merge; no-op fast-forward
-            _rebase_branch(tgt_head)
-            return "fast_forward", tgt_head
-        if tgt_head == base_v:
-            refs[into]["head"] = br_head
-            self._save_refs(refs)
-            _rebase_branch(br_head)
-            return "fast_forward", br_head
-        br_touched = self._touched_keys(br_head, base_v)
-        tgt_touched = self._touched_keys(tgt_head, base_v)
-        if br_touched & tgt_touched:
+        if br_head == base_v:     # no branch commits: a no-op fast-forward
+            outcome, head = "fast_forward", tgt_head
+        elif tgt_head == base_v:
+            outcome, head = "fast_forward", br_head
+        elif (self._touched_keys(br_head, base_v)
+              & self._touched_keys(tgt_head, base_v)):
             return "conflict", tgt_head
-        base_files = ([] if base_v == 0
-                      else set(self._manifest(base_v)["files"]))
-        added = [f for f in self._manifest(br_head)["files"]
-                 if f not in base_files]
-        v = self._commit(self._head_files(into) + added,
-                         f"merge:{branch}->{into}")
-        refs[into]["head"] = v
+        else:
+            base_files = set(self._live_files(base_v))
+            added = [f for f in self._live_files(br_head)
+                     if f not in base_files]
+            outcome, head = "merge", self._commit(
+                self._live_files(tgt_head) + added, f"merge:{branch}->{into}")
+        refs[into]["head"] = head
+        refs[branch] = {"head": head, "base": head}
         self._save_refs(refs)
-        _rebase_branch(v)
-        return "merge", v
-
-    # -- GC ---------------------------------------------------------------
-    def expire(self, keep_last: int = 1) -> int:
-        """Ref-aware GC: the base-class expire keeps only the newest
-        ``keep_last`` manifests — with branches that would delete a
-        manifest some ref's head (or merge base) still points at and
-        brick the branch. Pin every version any ref references, then let
-        the base implementation reclaim the rest. (Nessie's GC rule:
-        unreferenced-by-any-ref is the collectible condition.)"""
-        refs = self._refs()
-        pinned = {v for r in refs.values() for v in (r["head"], r["base"])
-                  if v > 0}
-        vs = self.versions()
-        keep = set(vs[-keep_last:]) if keep_last > 0 else set()
-        keep |= pinned
-        # replicate the base expire with the widened keep-set
-        live: set[str] = set()
-        for v in keep:
-            live.update(os.path.normpath(os.path.abspath(f))
-                        for f in self._manifest(v)["files"])
-        removed = 0
-        for commit_dir in list(os.listdir(self.data_dir)):
-            full = os.path.join(self.data_dir, commit_dir)
-            for name in list(os.listdir(full)):
-                if not name.endswith(".parquet"):
-                    continue
-                path = os.path.normpath(os.path.abspath(
-                    os.path.join(full, name)))
-                if path not in live:
-                    os.remove(path)
-                    removed += 1
-            if not any(n.endswith(".parquet") for n in os.listdir(full)):
-                shutil.rmtree(full, ignore_errors=True)
-        pruned_tags = {self._manifest(v)["operation"] for v in vs
-                       if v not in keep
-                       and self._manifest(v)["operation"]
-                       .startswith("stream-append:")}
-        self._fold_tags_into_ledger(pruned_tags)
-        for v in vs:
-            if v not in keep:
-                os.remove(os.path.join(self.manifest_dir, f"v{v}.json"))
-        return removed
+        return outcome, head

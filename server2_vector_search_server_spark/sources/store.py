@@ -22,13 +22,12 @@ prunable and parallel.
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from server2_vector_search_server_spark import config
+from server2_vector_search_server_spark.sources.fs import Tree
 
 CHUNKS_SCHEMA = T.StructType([
     T.StructField("chunk_id", T.StringType(), False),
@@ -50,22 +49,9 @@ class ChunkStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-
-    @functools.cached_property
-    def _hadoop_root(self):
-        """The root's Hadoop ``Path`` and ``FileSystem``, resolved once
-        through the JVM gateway (the handle idiom of
-        ``session._parquet_schema``). The store lists and removes through
-        them, not ``os``, so every URI scheme Spark writes to (``file:``,
-        ``viewfs:``, ``hdfs:``) answers too."""
-        root = self.spark._jvm.org.apache.hadoop.fs.Path(self.root)
-        return root, root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-
-    def _hadoop_child(self, name: str):
-        """``(FileSystem, Path)`` of ``root/name``; ``suffix`` builds the
-        path in one py4j call."""
-        root, fs = self._hadoop_root
-        return fs, root.suffix(f"/{name}")
+        # lists and removes through Hadoop, not ``os``, so every URI scheme
+        # Spark writes to (``file:``, ``viewfs:``, ``hdfs:``) answers too
+        self._tree = Tree(spark, root)
 
     def _overwrite_dynamic(self, rows: DataFrame) -> None:
         """Replace only the ``collection`` partitions ``rows`` writes into
@@ -101,8 +87,7 @@ class ChunkStore:
         for part in set(affected) - kept:
             # "drop empty partition" — on Delta/Iceberg this is the
             # metadata delete the commit already did
-            fs, path = self._hadoop_child(f"collection={part}")
-            fs.delete(path, True)
+            self._tree.delete(f"collection={part}")
 
     # -- A5: upsert/append ---------------------------------------------------
     def append(self, chunks: DataFrame) -> None:
@@ -161,8 +146,7 @@ class ChunkStore:
         """True when no ``collection=`` partition exists under the root: one
         Hadoop ``globStatus``, which is null for a missing root and empty
         for a root with no partition."""
-        fs, path = self._hadoop_child("collection=*")
-        return not fs.globStatus(path)
+        return not self._tree.glob("collection=*")
 
     # -- B4/B5: existence ----------------------------------------------------
     def document_exists(self, doc_name: str,

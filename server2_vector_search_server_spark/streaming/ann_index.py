@@ -32,8 +32,10 @@ Why this is the right 100 TB shape:
 * **Frozen quantizers.** Centroids and codebooks are immutable while the
   stream runs — the standard IVF-PQ serving discipline (cf. Faiss: adding
   vectors never retrains the coarse quantizer). Retraining is an offline
-  rebuild (``write_ivf_pq_index`` to a fresh path) followed by a pointer
-  swap, exactly like ``WalLog.compact()``'s base-swap.
+  rebuild (``write_ivf_pq_index`` to a fresh path) followed by the
+  crash-safe directory swap ``WalLog.compact()`` uses to put its new base
+  in (``sources/fs.py``'s ``Tree.swap``: rename aside, rename in, delete
+  aside).
 
 **Concurrency contract (single writer per index).** Micro-batches within one
 streaming query run strictly sequentially; concurrent queries appending to

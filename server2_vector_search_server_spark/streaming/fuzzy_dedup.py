@@ -24,11 +24,10 @@ it: the band table IS the index, and it only ever receives appends.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from server2_vector_search_server_spark.operators import dedup
+from server2_vector_search_server_spark.sources.fs import Tree
 
 _STATE_SCHEMA = ("band_index int, band_key string, bmin bigint, "
                  "ingest_batch int")
@@ -42,6 +41,7 @@ def run_minhash_dedup_stream(spark, src_dir: str, state_dir: str,
     # dynamic overwrite is set PER WRITE below (.option), never on the
     # shared session — a session-level set with no restore leaks a
     # semantics-changing config into every later overwrite (ADVICE r3)
+    state = Tree(spark, state_dir)
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(src_dir))
 
@@ -51,8 +51,7 @@ def run_minhash_dedup_stream(spark, src_dir: str, state_dir: str,
         # per-band min WITHIN this batch (earlier-in-batch suppression)
         batch_min = (bands.groupBy("band_index", "band_key")
                      .agg(F.min("doc_id").alias("_batch_min")))
-        if os.path.isdir(state_dir) and any(
-                not p.startswith(("_", ".")) for p in os.listdir(state_dir)):
+        if any(not p.startswith(("_", ".")) for p in state.names()):
             hist = (s.read.schema(_STATE_SCHEMA).parquet(state_dir)
                     .filter(F.col("ingest_batch") < batch_id)
                     .groupBy("band_index", "band_key")

@@ -22,10 +22,11 @@ view bit-identical to the batch aggregate (asserted by the oracle gate).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from server2_vector_search_server_spark.sources.fs import Tree
 
 ROLLUP_SCHEMA = ("window_start timestamp, event_type string, "
                  "n_events long, value_cents long, ingest_batch long")
@@ -40,6 +41,7 @@ class HourlyRollupView:
         self.root = root
         self.log_dir = os.path.join(root, "log")
         self.scale = scale
+        self._tree = Tree(spark, root)
 
     # -- writer side ---------------------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -67,13 +69,10 @@ class HourlyRollupView:
     def current(self) -> DataFrame:
         """Merge all partials: re-aggregate the log. Identical to the batch
         aggregate because every measure is associative."""
-        self._recover_swap()
-        if not os.path.isdir(self.log_dir):
-            return (self.spark.createDataFrame([], ROLLUP_SCHEMA)
-                    .select("window_start", "event_type", "n_events",
-                            (F.col("value_cents") / self.scale)
-                            .alias("total_value")))
-        log = self.spark.read.schema(ROLLUP_SCHEMA).parquet(self.log_dir)
+        if self._tree.recover("log"):
+            log = self.spark.read.schema(ROLLUP_SCHEMA).parquet(self.log_dir)
+        else:
+            log = self.spark.createDataFrame([], ROLLUP_SCHEMA)
         return (
             log.groupBy("window_start", "event_type")
             .agg(F.sum("n_events").alias("n_events"),
@@ -83,23 +82,14 @@ class HourlyRollupView:
                     .alias("total_value")))
 
     # -- maintenance ---------------------------------------------------------
-    def _recover_swap(self) -> None:
-        """Finish a compact() interrupted between its two renames: if the
-        live log vanished but the set-aside copy exists, put it back."""
-        old = self.log_dir + ".old"
-        if not os.path.isdir(self.log_dir) and os.path.isdir(old):
-            os.rename(old, self.log_dir)
-
-    @staticmethod
-    def committed_batches(checkpoint_dir: str) -> set[int]:
+    def committed_batches(self, checkpoint_dir: str) -> set[int]:
         """Batch ids the streaming checkpoint has COMMITTED (Spark writes one
         file per finished batch under ``<checkpoint>/commits``). A batch whose
         partials were written but whose commit file is absent will be REPLAYED
         on restart, so its partition must survive compaction untouched."""
-        commits = os.path.join(checkpoint_dir, "commits")
-        if not os.path.isdir(commits):
-            return set()
-        return {int(name) for name in os.listdir(commits) if name.isdigit()}
+        return {int(name) for name in
+                Tree(self.spark, checkpoint_dir).names("commits")
+                if name.isdigit()}
 
     def compact(self, checkpoint_dir: str | None = None) -> None:
         """Fold the partial log to one row per group (background job; the
@@ -114,18 +104,12 @@ class HourlyRollupView:
         a checkpoint (stream terminated / offline maintenance) everything
         folds, as before.
 
-        Crash safety: the swap is rename-aside → rename-in → delete-aside.
-        A crash at any point leaves either the old log in place, or the old
-        log at ``.old`` with the new one not yet live — ``_recover_swap``
-        (run by both readers and the next compact) restores it. There is no
-        window where the view has no data directory.
+        Crash safety: the new log goes in by the swap of ``sources/fs.py``,
+        whose recovery step both readers and the next compact run.
         """
-        self._recover_swap()
-        if not os.path.isdir(self.log_dir):
+        if not self._tree.recover("log"):
             return
-        tmp, old = self.log_dir + ".tmp", self.log_dir + ".old"
-        if os.path.isdir(tmp):             # leftover from an earlier crash
-            shutil.rmtree(tmp)
+        tmp = self._tree.uri_of("log.tmp")
         log = self.spark.read.schema(ROLLUP_SCHEMA).parquet(self.log_dir)
         if checkpoint_dir is not None:
             committed = self.committed_batches(checkpoint_dir)
@@ -146,9 +130,7 @@ class HourlyRollupView:
         if retained is not None:
             retained.write.mode("append").partitionBy("ingest_batch") \
                 .parquet(tmp)
-        os.rename(self.log_dir, old)
-        os.rename(tmp, self.log_dir)
-        shutil.rmtree(old)
+        self._tree.swap("log", "log.tmp")
 
 
 def start_rollup_stream(spark: SparkSession, src_dir: str,

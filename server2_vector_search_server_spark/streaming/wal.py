@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from server2_vector_search_server_spark.sources.fs import Tree
+
 OP_UPSERT = "UPSERT"   # chroma operation=2
 OP_DELETE = "DELETE"   # chroma operation=3
 
@@ -51,6 +53,14 @@ _STATE_COLS = ["chunk_id", "doc_id", "doc_name", "chunk_index",
                "collection", "content", "embedding"]
 
 
+def _latest(records: DataFrame) -> DataFrame:
+    """The max-``seq_id`` record of each ``chunk_id``: one window, one
+    shuffle on the primary key."""
+    w = Window.partitionBy("chunk_id").orderBy(F.col("seq_id").desc())
+    return (records.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
+
+
 class WalLog:
     """Append-only resolved-operation log + last-write-wins state reader."""
 
@@ -58,7 +68,7 @@ class WalLog:
         self.spark = spark
         self.root = root
         self.log_dir = os.path.join(root, "log")
-        self.base_dir = os.path.join(root, "base")
+        self._tree = Tree(spark, root)
 
     # -- consumer side (foreachBatch) ---------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -69,62 +79,45 @@ class WalLog:
         upsert row or a delete tombstone — is appended to the log. Pure
         append: concurrent micro-batches never rewrite shared files.
         """
-        w = Window.partitionBy("chunk_id").orderBy(F.col("seq_id").desc())
-        resolved = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        resolved.write.mode("append").parquet(self.log_dir)
+        _latest(batch).write.mode("append").parquet(self.log_dir)
 
     # -- reader side ---------------------------------------------------------
-    def current_state(self) -> DataFrame:
-        """Reconstruct live rows: per chunk_id take the max-seq record across
-        base + log; drop delete tombstones. This window is the parquet stand-in
-        for a Delta MERGE target — one shuffle on the primary key."""
-        parts = []
-        if os.path.isdir(self.log_dir):
-            parts.append(self.spark.read.schema(WAL_SCHEMA).parquet(self.log_dir))
-        if os.path.isdir(self.base_dir):
-            parts.append(self.spark.read.schema(WAL_SCHEMA).parquet(self.base_dir))
+    def _live_rows(self) -> DataFrame | None:
+        """Per chunk_id the max-seq record across log + base, delete
+        tombstones dropped (the parquet stand-in for a Delta MERGE target);
+        None when neither exists. A base swap a crash cut is finished
+        first."""
+        has_base = self._tree.recover("base")
+        parts = [self.spark.read.schema(WAL_SCHEMA)
+                 .parquet(self._tree.uri_of(d))
+                 for d, present in (("log", self._tree.exists("log")),
+                                    ("base", has_base)) if present]
         if not parts:
-            return self.spark.createDataFrame([], WAL_SCHEMA).select(*_STATE_COLS)
-        log = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        w = Window.partitionBy("chunk_id").orderBy(F.col("seq_id").desc())
-        return (
-            log.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col("operation") == OP_UPSERT))
-            .select(*_STATE_COLS)
-        )
+            return None
+        log = parts[0] if len(parts) == 1 else parts[0].unionByName(
+            parts[1])
+        return _latest(log).filter(F.col("operation") == OP_UPSERT)
+
+    def current_state(self) -> DataFrame:
+        """Reconstruct live rows (see :meth:`_live_rows`)."""
+        rows = self._live_rows()
+        if rows is None:
+            rows = self.spark.createDataFrame([], WAL_SCHEMA)
+        return rows.select(*_STATE_COLS)
 
     def compact(self) -> None:
         """Fold the op log into the base snapshot (background maintenance,
         the analog of chroma applying the queue into its HNSW segment at
-        ``sync_threshold`` — and of Delta/Iceberg compaction)."""
-        w = Window.partitionBy("chunk_id").orderBy(F.col("seq_id").desc())
-        parts = []
-        if os.path.isdir(self.log_dir):
-            parts.append(self.spark.read.schema(WAL_SCHEMA).parquet(self.log_dir))
-        if os.path.isdir(self.base_dir):
-            parts.append(self.spark.read.schema(WAL_SCHEMA).parquet(self.base_dir))
-        if not parts:
+        ``sync_threshold`` — and of Delta/Iceberg compaction). The new base
+        goes in by the crash-safe swap of ``sources/fs.py``, and only then
+        is the folded log dropped: a crash at any step leaves every row
+        readable."""
+        rows = self._live_rows()
+        if rows is None:
             return
-        log = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        snapshot = (
-            log.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col("operation") == OP_UPSERT))
-            .drop("_rn")
-        )
-        tmp = self.base_dir + ".tmp"
-        snapshot.write.mode("overwrite").parquet(tmp)
-        # swap: new base in, old base+log out
-        import shutil
-
-        if os.path.isdir(self.base_dir):
-            shutil.rmtree(self.base_dir)
-        os.rename(tmp, self.base_dir)
-        if os.path.isdir(self.log_dir):
-            shutil.rmtree(self.log_dir)
+        rows.write.mode("overwrite").parquet(self._tree.uri_of("base.tmp"))
+        self._tree.swap("base", "base.tmp")
+        self._tree.delete("log")
 
 
 def start_wal_stream(spark: SparkSession, wal_dir: str, log: WalLog,

@@ -84,3 +84,16 @@ def spark_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture
+def viewfs_root(spark, tmp_path):
+    """A ``viewfs://`` URI whose mount links ``/store`` to ``tmp_path``: a
+    non-local scheme for the stores and logs, set up offline from the
+    bundled Hadoop client (one fresh mount table per test)."""
+    import uuid
+
+    mount = f"store{uuid.uuid4().hex[:8]}"
+    spark._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./store", f"file://{tmp_path}")
+    return f"viewfs://{mount}/store"

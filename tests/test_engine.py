@@ -9,6 +9,11 @@ import pytest
 
 from server2_vector_search_server_spark import config
 from server2_vector_search_server_spark.engine import DocumentSearchEngine
+from server2_vector_search_server_spark.sources.snapshots import (
+    BranchedSnapshotStore,
+    SnapshotChunkStore,
+)
+from server2_vector_search_server_spark.sources.store import ChunkStore
 
 DOCS_A = [
     ("alpha.txt", "Alpha document about spark. It has two sentences."),
@@ -19,9 +24,16 @@ DOCS_B = [
 ]
 
 
+STORES = [ChunkStore, SnapshotChunkStore, BranchedSnapshotStore]
+
+
 @pytest.fixture()
-def engine(spark, tmp_path):
-    eng = DocumentSearchEngine(spark, str(tmp_path / "chunks"))
+def engine(spark, tmp_path, request):
+    """Two collections of documents on a store of ``store_cls`` (indirect
+    parameter; ``ChunkStore`` by default)."""
+    eng = DocumentSearchEngine(spark, str(tmp_path / "chunks"),
+                               store_cls=getattr(request, "param",
+                                                 ChunkStore))
     eng.upload_documents(DOCS_A, "collection_a")
     eng.upload_documents(DOCS_B, "collection_b")
     return eng
@@ -163,12 +175,24 @@ def test_serving_job_budgets(engine, spark, spark_jobs):
     assert engine.document_exists("iota.txt")
 
 
-def test_dataframe_upload_statuses(engine):
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_dataframe_upload_statuses(engine, ansi):
     """DataFrame input passes the same gate as a list: a stored name is
     skipped, null and empty text report an extraction error, a name twice
     in the batch is stored once, and each success counts exactly the
     chunks stored for it. A null name is rejected before anything is
-    written."""
+    written. The same holds with ANSI off, where ``size`` of the null
+    text's chunk array is -1, not null."""
+    key = "spark.sql.ansi.enabled"
+    before = engine.spark.conf.get(key)
+    engine.spark.conf.set(key, ansi)
+    try:
+        _check_dataframe_upload_statuses(engine)
+    finally:
+        engine.spark.conf.set(key, before)
+
+
+def _check_dataframe_upload_statuses(engine):
     batch = engine.spark.createDataFrame(
         [("alpha.txt", "changed content"), ("null.txt", None),
          ("empty.txt", ""), ("dup.txt", "One copy. Of two."),
@@ -278,23 +302,30 @@ def test_embed_query_equals_stored_vector(engine, spark):
             assert floats(got) == floats(stored[text]), repr(text)
 
 
-def test_store_answers_on_a_viewfs_root(spark, tmp_path, py4j_calls):
-    """The store lists and removes through Hadoop, so a ``viewfs://`` root
-    behaves like a local one: a re-upload is skipped, ``document_exists``
-    finds the stored name, and a delete removes the rows, including a
-    partition it empties. ``is_empty`` is one ``globStatus``."""
-    import uuid
+@pytest.mark.parametrize("scheme", ["viewfs", "file"])
+@pytest.mark.parametrize("store_cls", STORES, ids=lambda cls: cls.__name__)
+def test_store_answers_on_a_viewfs_root(spark, tmp_path, viewfs_root,
+                                        py4j_calls, store_cls, scheme):
+    """Every store lists, reads and removes through Hadoop, so a
+    ``viewfs://`` or ``file:///`` root behaves like a local path: a
+    re-upload is skipped, ``document_exists`` finds the stored name, and a
+    delete removes the rows, including every row of a collection. The
+    files land under the mounted directory, none under the working
+    directory. ``ChunkStore.is_empty`` is one ``globStatus``."""
+    import os
 
-    mount = f"store{uuid.uuid4().hex[:8]}"
-    spark._jsc.hadoopConfiguration().set(
-        f"fs.viewfs.mounttable.{mount}.link./store", f"file://{tmp_path}")
-    eng = DocumentSearchEngine(spark, f"viewfs://{mount}/store/chunks")
+    root = {"viewfs": viewfs_root, "file": f"file://{tmp_path}"}[scheme]
+    eng = DocumentSearchEngine(spark, f"{root}/chunks", store_cls=store_cls)
     assert eng.store.is_empty()
     eng.upload_documents(DOCS_A, "collection_a")
     eng.upload_documents(DOCS_B, "collection_b")
-    assert (tmp_path / "chunks" / "collection=collection_b").is_dir()
     assert not eng.store.is_empty()
-    assert py4j_calls(eng.store.is_empty) <= 5
+    if store_cls is ChunkStore:
+        assert (tmp_path / "chunks" / "collection=collection_b").is_dir()
+        assert py4j_calls(eng.store.is_empty) <= 5
+    else:
+        assert (tmp_path / "chunks" / "_manifests" / "v2.json").is_file()
+    assert not os.path.exists(f"{scheme}:")
 
     statuses = eng.upload_documents([("alpha.txt", "changed")],
                                     "collection_b")
@@ -304,7 +335,9 @@ def test_store_answers_on_a_viewfs_root(spark, tmp_path, py4j_calls):
         "doc_name = 'gamma.txt'").first()["doc_id"]
     assert eng.delete_document(gamma)
     assert not eng.document_exists("gamma.txt")
-    assert not (tmp_path / "chunks" / "collection=collection_b").exists()
+    assert eng.store.read("collection_b").count() == 0
+    if store_cls is ChunkStore:
+        assert not (tmp_path / "chunks" / "collection=collection_b").exists()
     assert {r["doc_name"] for r in eng.store.read(None).collect()} == {
         "alpha.txt", "beta.txt"}
 
@@ -392,6 +425,8 @@ def test_search_error_is_logged_once_and_counted(engine, caplog):
     assert engine.search_errors == 1
 
 
+@pytest.mark.parametrize("engine", STORES, indirect=True,
+                         ids=lambda cls: cls.__name__)
 def test_delete_cascades_globally(engine):
     doc_id = engine.list_documents("collection_a") \
         .filter("doc_name = 'alpha.txt'").first()["doc_id"]
@@ -399,8 +434,12 @@ def test_delete_cascades_globally(engine):
     assert engine.document_exists("alpha.txt") is False
     assert "alpha.txt" not in {
         r["doc_name"] for r in engine.list_documents("master").collect()}
-    # deleting an unknown id reports not-found (app.py:487-518 -> 404)
+    # deleting an unknown id reports not-found (app.py:487-518 -> 404),
+    # and a snapshot store commits no version for it
+    versions = getattr(engine.store, "versions", list)
+    before = versions()
     assert engine.delete_document("no-such-doc") is False
+    assert versions() == before
 
 
 def test_documents_ui_rollup(engine):
